@@ -425,12 +425,15 @@ object Bench {
     println(json)
     // The driver retains only the final ~2000 bytes of this output — r20's
     // per-query map was truncated away and r21 lost its round-over-round
-    // comparison entirely (PERF n_common = 0). Persist the full line to a
-    // well-known file so the map is always recoverable from the tree; the
-    // stdout contract above is unchanged. Full-run only: a SPARK_GRAFT_ONLY
+    // comparison entirely (PERF n_common = 0). Persist the full line to
+    // BENCH_LAST.json at the checkout root (Scratch.checkout) so
+    // the map is always recoverable from the tree; the stdout contract
+    // above is unchanged. Full-run only: a SPARK_GRAFT_ONLY
     // dev/adjudication slice must never shadow the last full capture.
     if (only.isEmpty) try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(graft.queries.Scratch.checkout,
+          "BENCH_LAST.json"),
         (json + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_LAST.json write failed: ${e.getMessage}")

@@ -4,7 +4,7 @@ import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every entry in `queries` has a matching DuckDB `oracleSql` unless the op is
   * not SQL-expressible; column names and values are engineered to hash-match

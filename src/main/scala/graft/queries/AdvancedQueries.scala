@@ -62,8 +62,7 @@ object AdvancedQueries {
         // across JVMs (write-once sink, same discipline as the bucketed
         // tables) — the order self-join + distinct is the expensive part,
         // and rereading a 2-long-column parquet is a fraction of its cost.
-        val tmp =
-          s"/root/repo/target/tmp/copurchase-${new java.io.File(dir).getName}"
+        val tmp = Scratch.dir("copurchase", dir)
         graft.sources.Sinks.ensureDir(s, tmp, "v1:copurchase,u<v,distinct",
           inputs = Seq(s"$dir/lineitem.parquet")) {
           val pr = Tables(s, dir, "lineitem")
@@ -86,8 +85,7 @@ object AdvancedQueries {
     * persisted write-once beside the edge list. Returns its path. */
   private def dagLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val tmp =
-      s"/root/repo/target/tmp/copurchase_dag-${new java.io.File(dir).getName}"
+    val tmp = Scratch.dir("copurchase_dag", dir)
     graft.sources.Sinks.ensureDir(s, tmp, "v1:degree-ordered,s->t",
         inputs = Seq(s"$dir/lineitem.parquet")) {
       // the one orientation definition (GraphOps.orientByDegree): the
@@ -103,8 +101,7 @@ object AdvancedQueries {
     * persisted write-once. Returns its path. */
   private def weightedLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val tmp =
-      s"/root/repo/target/tmp/copurchase_w-${new java.io.File(dir).getName}"
+    val tmp = Scratch.dir("copurchase_w", dir)
     graft.sources.Sinks.ensureDir(s, tmp, "v1:copurchase,weighted",
         inputs = Seq(s"$dir/lineitem.parquet")) {
       val pr = Tables(s, dir, "lineitem")
@@ -156,8 +153,7 @@ object AdvancedQueries {
     * without executing the compact rewrite twice per run. */
   def compactInLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val smallDir =
-      s"/root/repo/target/tmp/compact_in-${new java.io.File(dir).getName}"
+    val smallDir = Scratch.dir("compact_in", dir)
     graft.sources.Sinks.ensureDir(s, smallDir, "v1:events,64files",
       inputs = Seq(s"$dir/events.parquet")) {
       Tables(s, dir, "events").repartition(64)
@@ -175,11 +171,7 @@ object AdvancedQueries {
     * stream twice per run. */
   def snapCdfSliceLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val sfN = new java.io.File(dir).getName
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-        .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-    val base = s"/root/repo/target/tmp/snapcdf_slices-$sfN-$fp"
+    val base = Scratch.tagged(s, "snapcdf_slices", dir)
     val slim = Tables(s, dir, "orders")
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
         col("o_orderpriority"),
@@ -200,8 +192,7 @@ object AdvancedQueries {
     * layer and never runs the overwrite itself. */
   def dynpartBaseLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val base =
-      s"/root/repo/target/tmp/dynpart-${new java.io.File(dir).getName}"
+    val base = Scratch.dir("dynpart", dir)
     graft.sources.Sinks.ensureDir(s, base, "v1:orders,mon",
       inputs = Seq(s"$dir/orders.parquet")) {
       Tables(s, dir, "orders")
@@ -220,8 +211,7 @@ object AdvancedQueries {
   def ordersTtBase(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     import graft.sources.{SnapshotTable => ST}
-    val base =
-      s"/root/repo/target/tmp/orders_tt-${new java.io.File(dir).getName}"
+    val base = Scratch.dir("orders_tt", dir)
     val cut = "1996-01-01"
     graft.sources.Sinks.ensureDir(s, s"$base/data_v1", "v1:orders_pre",
       inputs = Seq(s"$dir/orders.parquet")) {
@@ -250,6 +240,28 @@ object AdvancedQueries {
     base
   }
 
+  /** One ingest batch for the KV streaming source: orders rows as
+    * `priority<TAB>cents` lines, staged by a Spark text write and renamed
+    * into `in` as `b<batch>_<part>.txt` — the sequenced names the source's
+    * monotone-name offset requires. */
+  private def kvIngestBatch(s: org.apache.spark.sql.SparkSession,
+      in: java.io.File, b: Int, df: DataFrame): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      in.toURI, s.sparkContext.hadoopConfiguration)
+    val stage = new org.apache.hadoop.fs.Path(s"$in/_stage$b")
+    df.select(concat_ws("\t", col("o_orderpriority"),
+        cents(col("o_totalprice")).cast("string")).as("v"))
+      .write.mode("overwrite").text(stage.toString)
+    fs.listStatus(stage)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
+        fs.rename(st.getPath,
+          new org.apache.hadoop.fs.Path(in.toString, f"b$b%04d_$i%05d.txt"))
+      }
+    fs.delete(stage, true)
+  }
+
   /** Three id-ranged, single-file document slices — q_stream_pack's
     * INPUT data (the pack stream's ordered-arrival contract needs each
     * batch's ids above the previous batch's, so slices are contiguous
@@ -258,8 +270,7 @@ object AdvancedQueries {
     * stream twice. */
   def packSliceLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val base =
-      s"/root/repo/target/tmp/pack_slices-${new java.io.File(dir).getName}"
+    val base = Scratch.dir("pack_slices", dir)
     val docs = Tables(s, dir, "documents")
       .where(col("n_chars") > 0)
       .select(col("doc_id"),
@@ -485,7 +496,7 @@ object AdvancedQueries {
     // partition pruning variant); the oracle aggregates the same rows from
     // the unpartitioned parquet.
     "q_partitioned_scan" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/events_part-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("events_part", dir)
       graft.sources.Sinks.ensureDir(s, tmp,
         "v1:event_id,user_id,ts_us,value/partitionBy=event_type",
         inputs = Seq(s"$dir/events.parquet")) {
@@ -513,49 +524,21 @@ object AdvancedQueries {
     // aggregate over the stream must equal the batch ground truth — a
     // dropped or double-claimed file shows as a count/sum mismatch.
     "q_stream_kv" -> { (s, dir) =>
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_kv-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        tmp.toURI, s.sparkContext.hadoopConfiguration)
-      def writeBatch(b: Int, df: DataFrame): Unit = {
-        val stage = new org.apache.hadoop.fs.Path(s"$tmp/_stage$b")
-        df.select(concat_ws("\t", col("o_orderpriority"),
-            cents(col("o_totalprice")).cast("string")).as("v"))
-          .write.mode("overwrite").text(stage.toString)
-        fs.listStatus(stage)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              tmp.toString, f"b$b%04d_$i%05d.txt"))
-          }
-        fs.delete(stage, true)
-      }
+      val g = graft.streaming.Gate("stream_kv", dir)
       val orders = Tables(s, dir, "orders")
-      val qn = s"q_stream_kv_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream
-          .format(classOf[graft.sources.KvTextSource].getName)
-          .load(tmp.toString)
-          .groupBy(col("key"))
-          .agg(count(lit(1)).as("n_orders"),
-            sum(col("value")).as("sum_cents"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          writeBatch(1, orders.where(pmod(col("o_orderkey"), lit(2)) === 0))
-          q.processAllAvailable()
-          writeBatch(2, orders.where(pmod(col("o_orderkey"), lit(2)) === 1))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).orderBy("key")
+      g.replay(s)(s.readStream
+        .format(classOf[graft.sources.KvTextSource].getName)
+        .load(g.tmp.toString)
+        .groupBy(col("key"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("value")).as("sum_cents"))
+        .writeStream.outputMode("complete")
+        .format("memory").queryName(g.sink).start())(
+        () => kvIngestBatch(s, g.tmp, 1,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === 0)),
+        () => kvIngestBatch(s, g.tmp, 2,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === 1)))
+      s.table(g.sink).orderBy("key")
     },
 
     // ADMISSION CONTROL through the micro-batch source
@@ -569,14 +552,7 @@ object AdvancedQueries {
     // still equal the batch ground truth, so a file skipped or re-claimed
     // across paced frontiers hash-fails.
     "q_stream_kv_paced" -> { (s, dir) =>
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_kvpace-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val tmp = Scratch.fresh("stream_kvpace", dir)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         tmp.toURI, s.sparkContext.hadoopConfiguration)
       val stage = new org.apache.hadoop.fs.Path(s"$tmp/_stage")
@@ -643,52 +619,42 @@ object AdvancedQueries {
     // checkpoint + write-once epoch dirs, the engine's standing pattern.
     "q_stream_snapshot_cdf" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapcdf-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val base = s"$root/tbl"
+      val g = graft.streaming.Gate("stream_snapcdf", dir)
+      val base = s"${g.tmp}/tbl"
       new java.io.File(base).mkdirs()
-      val epochs = s"$root/epochs"
+      val epochs = s"${g.tmp}/epochs"
       val key = "o_orderkey"
       val slices = snapCdfSliceLayer(s, dir) // write-once input data
       val fmt = classOf[graft.sources.SnapshotCdfSource].getName
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream.format(fmt).load(base)
-          .writeStream.option("checkpointLocation", s"$root/cp")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val vs = b.select("version").collect()
-              .map(_.getLong(0).toInt).toSeq.sorted
-            for (v <- vs) {
-              val out = s"$epochs/v$v"
-              if (!new java.io.File(out, "_SUCCESS").exists) {
-                val feed =
-                  if (v == 1) ST.readVersion(s, base, 1, key)
-                    .withColumn("change", lit("insert"))
-                  else ST.readChanges(s, base, v - 1, v, key)
-                feed.write.mode("overwrite").parquet(out)
-              }
+      g.replay(s)(s.readStream.format(fmt).load(base)
+        .writeStream.option("checkpointLocation", s"${g.tmp}/cp")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val vs = b.select("version").collect()
+            .map(_.getLong(0).toInt).toSeq.sorted
+          for (v <- vs) {
+            val out = s"$epochs/v$v"
+            if (!new java.io.File(out, "_SUCCESS").exists) {
+              val feed =
+                if (v == 1) ST.readVersion(s, base, 1, key)
+                  .withColumn("change", lit("insert"))
+                else ST.readChanges(s, base, v - 1, v, key)
+              feed.write.mode("overwrite").parquet(out)
             }
-          }.start()
-        try {
-          ST.commit(s, base, 1, ST.Snapshot(Seq(s"$slices/d0"), Nil))
-          q.processAllAvailable()
-          ST.commit(s, base, 2,
-            ST.Snapshot(Seq(s"$slices/d0", s"$slices/d1"), Nil))
-          q.processAllAvailable()
+          }
+        }.start())(
+        () => ST.commit(s, base, 1, ST.Snapshot(Seq(s"$slices/d0"), Nil)),
+        () => ST.commit(s, base, 2,
+          ST.Snapshot(Seq(s"$slices/d0", s"$slices/d1"), Nil)),
+        () => {
           val v = ST.deleteWhere(s, base, key,
             pmod(md5Long(col(key).cast("string")), lit(5)) === 3)
           require(v == 3, s"delete landed at v$v, expected v3")
-          q.processAllAvailable()
+        },
+        () => {
           val s3 = ST.manifest(s, base, 3)
           ST.commit(s, base, 4,
             s3.copy(dataDirs = s3.dataDirs :+ s"$slices/d2"))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+        })
       require((1 to 4).forall(v =>
         new java.io.File(s"$epochs/v$v/_SUCCESS").exists),
         "each commit must fold as exactly one O(delta) change window")
@@ -717,13 +683,7 @@ object AdvancedQueries {
     // each batch is O(manifest) pointers, each fold O(delta dirs).
     "q_stream_snapshot_branch" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapbr-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
+      val root = Scratch.fresh("stream_snapbr", dir)
       val base = s"$root/tbl"
       new java.io.File(base).mkdirs()
       val epochs = s"$root/epochs"
@@ -814,13 +774,7 @@ object AdvancedQueries {
     // the 100 TB shape (no global state; parallelism = shard count).
     "q_stream_pack" -> { (s, dir) =>
       import graft.streaming.StreamingOps
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_pack-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
+      val root = Scratch.fresh("stream_pack", dir)
       val in = new java.io.File(root, "in"); in.mkdirs()
       val out = s"$root/out"
       val slices = packSliceLayer(s, dir)
@@ -879,13 +833,7 @@ object AdvancedQueries {
     // leaked uncommitted epoch.
     "q_stream_snapshot_ingest" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_snapingest-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
+      val root = Scratch.fresh("stream_snapingest", dir)
       val in = new java.io.File(root, "in"); in.mkdirs()
       val base = s"$root/tbl"; new java.io.File(base).mkdirs()
       val slices = snapCdfSliceLayer(s, dir) // write-once input data
@@ -935,48 +883,22 @@ object AdvancedQueries {
     },
 
     "q_stream_kv_sink" -> { (s, dir) =>
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_kvsink-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val out = new java.io.File(root, "out"); out.mkdirs()
-      val cp = new java.io.File(root, "cp")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        root.toURI, s.sparkContext.hadoopConfiguration)
-      def writeBatch(b: Int, df: DataFrame): Unit = {
-        val stage = new org.apache.hadoop.fs.Path(s"$in/_stage$b")
-        df.select(concat_ws("\t", col("o_orderpriority"),
-            cents(col("o_totalprice")).cast("string")).as("v"))
-          .write.mode("overwrite").text(stage.toString)
-        fs.listStatus(stage)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, i) =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              in.toString, f"b$b%04d_$i%05d.txt"))
-          }
-        fs.delete(stage, true)
-      }
+      val g = graft.streaming.Gate("stream_kvsink", dir)
+      val in = new java.io.File(g.tmp, "in"); in.mkdirs()
+      val out = new java.io.File(g.tmp, "out"); out.mkdirs()
+      val cp = new java.io.File(g.tmp, "cp")
       val orders = Tables(s, dir, "orders")
       val fmt = classOf[graft.sources.KvTextSource].getName
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = s.readStream.format(fmt).load(in.toString)
-          .where(col("value") >= 15000000L)
-          .writeStream.format(fmt)
-          .option("checkpointLocation", cp.toString)
-          .outputMode("append")
-          .start(out.toString)
-        try {
-          writeBatch(1, orders.where(pmod(col("o_orderkey"), lit(2)) === 0))
-          q.processAllAvailable()
-          writeBatch(2, orders.where(pmod(col("o_orderkey"), lit(2)) === 1))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      g.replay(s)(s.readStream.format(fmt).load(in.toString)
+        .where(col("value") >= 15000000L)
+        .writeStream.format(fmt)
+        .option("checkpointLocation", cp.toString)
+        .outputMode("append")
+        .start(out.toString))(
+        () => kvIngestBatch(s, in, 1,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === 0)),
+        () => kvIngestBatch(s, in, 2,
+          orders.where(pmod(col("o_orderkey"), lit(2)) === 1)))
       s.read.format(fmt).load(out.toString)
         .groupBy(col("key"))
         .agg(count(lit(1)).as("n_orders"),
@@ -999,41 +921,31 @@ object AdvancedQueries {
     "q_stream_to_table" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val root = new java.io.File(
-        s"/root/repo/target/tmp/stream_totable-$sfN")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists) rm(root)
-      val in = new java.io.File(root, "in"); in.mkdirs()
-      val cp = new java.io.File(root, "cp")
-      val catRoot = new java.io.File(root, "cat")
+      val g = graft.streaming.Gate("stream_totable", dir)
+      val in = new java.io.File(g.tmp, "in"); in.mkdirs()
+      val cp = new java.io.File(g.tmp, "cp")
+      val catRoot = new java.io.File(g.tmp, "cat")
       // catalog instances cache per NAME with their options snapshot —
       // the name embeds the sf so the root stays stable for the session
       val cat = s"gstbl${sfN.replace(".", "")}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", catRoot.toString)
+      SqlChain.register(s, cat, catRoot.toString)
       s.sql(s"CREATE TABLE $cat.orders_s (key STRING, cents BIGINT)")
       val orders = Tables(s, dir, "orders")
       val kv = orders.select(col("o_orderpriority").as("key"),
         cents(col("o_totalprice")).as("cents"))
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
+      g.replay(s) {
+        // b1 lands before start(), so the first batch reads it
         kv.where(pmod(col("cents"), lit(2)) === 0)
           .write.parquet(s"$in/b1.parquet")
-        val q = s.readStream.schema(kv.schema).parquet(s"$in/*.parquet")
+        s.readStream.schema(kv.schema).parquet(s"$in/*.parquet")
           .writeStream
           .option("checkpointLocation", cp.toString)
           .outputMode("append")
           .toTable(s"$cat.orders_s")
-        try {
-          q.processAllAvailable()
-          kv.where(pmod(col("cents"), lit(2)) === 1)
-            .write.parquet(s"$in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      }(
+        () => (),
+        () => kv.where(pmod(col("cents"), lit(2)) === 1)
+          .write.parquet(s"$in/b2.parquet"))
       val base = s"$catRoot/orders_s"
       val head = ST.headVersion(s, base)
       val snap = ST.manifest(s, base, head)
@@ -1055,8 +967,7 @@ object AdvancedQueries {
     // remains). The require pins that the plan carries PushedAggregation;
     // the oracle computes the same aggregate from the original parquet.
     "q_dsv2_agg_pushdown" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kv-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kv", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -1090,7 +1001,7 @@ object AdvancedQueries {
     // oracle aggregates the base table, so a stale or mis-mapped MV
     // hash-fails.
     "q_mv_rewrite" -> { (s, dir) =>
-      val mvPath = s"/root/repo/target/tmp/mv_prio-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_prio", dir)
       def aggOf() = Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1115,7 +1026,7 @@ object AdvancedQueries {
     // Aggregate that must match carries decimal(38,0), and the long cast
     // happens in the select ABOVE it, identical in the oracle.
     "q_mv_rollup" -> { (s, dir) =>
-      val mvPath = s"/root/repo/target/tmp/mv_prio_status-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_prio_status", dir)
       def mvOf() = Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1146,7 +1057,7 @@ object AdvancedQueries {
     // sentinels only in the select ABOVE the matched Aggregate, identical
     // in the oracle.
     "q_mv_cube" -> { (s, dir) =>
-      val mvPath = s"/root/repo/target/tmp/mv_prio_status-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_prio_status", dir)
       def mvOf() = Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1183,7 +1094,7 @@ object AdvancedQueries {
     // WHERE + GROUP BY on the base table, so a predicate mis-anchored onto
     // the wrong MV column (or applied after re-aggregation) hash-fails.
     "q_mv_filter" -> { (s, dir) =>
-      val mvPath = s"/root/repo/target/tmp/mv_prio_status-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_prio_status", dir)
       def mvOf() = Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1213,7 +1124,7 @@ object AdvancedQueries {
     // The oracle aggregates the same band from the unpruned parquet, so a
     // skip that loses rows hash-fails.
     "q_data_skipping" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/orders_skip-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_skip", dir)
       graft.sources.Sinks.ensureDir(s, tmp,
         "v4:orders,range16/price_cents,skipindex4",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -1245,7 +1156,7 @@ object AdvancedQueries {
     // pinned; the oracle joins the base tables, so a wrong derivation
     // hash-fails.
     "q_mv_join_rollup" -> { (s, dir) =>
-      val mvPath = s"/root/repo/target/tmp/mv_seg_prio-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_seg_prio", dir)
       def mvOf() = Tables(s, dir, "orders")
         .join(Tables(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
@@ -1281,7 +1192,7 @@ object AdvancedQueries {
     // the identical band over the unpruned base table, so a skip that
     // drops rows hash-fails.
     "q_zorder_skipping" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/orders_zskip-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_zskip", dir)
       graft.sources.Sinks.ensureDir(s, tmp,
         "v3:orders,zorder32/custkey+dollars,skipindex4",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -1320,7 +1231,7 @@ object AdvancedQueries {
     // the unpruned base table (DuckDB md5 = same lowercase hex, binary
     // collation = same byte order), so a skip that drops rows hash-fails.
     "q_skip_string" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/docs_strskip-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("docs_strskip", dir)
       graft.sources.Sinks.ensureDir(s, tmp,
         "v2:documents,range16/md5,skipindex4-str",
         inputs = Seq(s"$dir/documents.parquet")) {
@@ -1358,8 +1269,7 @@ object AdvancedQueries {
     // that pruning engages; the oracle replays the identical IN over the
     // base table (DuckDB md5 = same lowercase hex).
     "q_skip_bloom" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/docs_bloomskip-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("docs_bloomskip", dir)
       graft.sources.Sinks.ensureDir(s, tmp,
         "v2:documents,hash8/md5,skipindex4-bloom",
         inputs = Seq(s"$dir/documents.parquet")) {
@@ -1389,7 +1299,7 @@ object AdvancedQueries {
     // Connector surface: nation → CSV, region → JSON (explicit schemas on
     // read), then the same broadcast-join aggregate as the parquet path.
     "q_multiformat" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/multiformat-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("multiformat", dir)
       graft.sources.Sinks.ensureDir(s, s"$tmp/nation_csv", "v1:nation,csv,header",
         inputs = Seq(s"$dir/nation.parquet")) {
         Tables(s, dir, "nation").write.mode("overwrite")
@@ -1426,7 +1336,7 @@ object AdvancedQueries {
     // branches, so it is localCheckpoint'ed once (also sidestepping the
     // referencing-only-the-corrupt-column pruning restriction).
     "q_corrupt_json" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/dirty_json-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("dirty_json", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:documents,dirty37",
         inputs = Seq(s"$dir/documents.parquet")) {
         Tables(s, dir, "documents")
@@ -1505,8 +1415,7 @@ object AdvancedQueries {
     // error-bound boolean the oracle pins TRUE (the q_approx_distinct
     // pattern, extended to MERGED sketches).
     "q_sketch_merge" -> { (s, dir) =>
-      val sketchDir =
-        s"/root/repo/target/tmp/hll_daily-${new java.io.File(dir).getName}"
+      val sketchDir = Scratch.dir("hll_daily", dir)
       // integer `div` end to end (the oracle's `//`): float division then
       // cast truncates the ROUNDED quotient, which can cross a bucket
       // boundary when the true quotient sits within an ulp of an integer
@@ -1546,8 +1455,7 @@ object AdvancedQueries {
     // Cumulative windows partition per week over bucket/value censuses
     // (bounded domains), never over events.
     "q_quantile_merge" -> { (s, dir) =>
-      val histDir =
-        s"/root/repo/target/tmp/hist_daily-${new java.io.File(dir).getName}"
+      val histDir = Scratch.dir("hist_daily", dir)
       val ev = Tables(s, dir, "events")
         .select(expr("ts div 1000 div 86400000000").as("day"),
           cents(col("value")).as("cents"))
@@ -1877,7 +1785,7 @@ object AdvancedQueries {
     // (write-once) and comes back filtered+aggregated; the oracle runs the
     // same aggregate over the original parquet.
     "q_orc_source" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/lineitem_orc-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("lineitem_orc", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:lineitem,orc",
         inputs = Seq(s"$dir/lineitem.parquet")) {
         Tables(s, dir, "lineitem").write.mode("overwrite").orc(tmp)
@@ -1897,8 +1805,7 @@ object AdvancedQueries {
     // legacy-enterprise feed format a migration-target engine cannot skip;
     // the gate pins that the round-trip preserves values and types.
     "q_xml_source" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/nation_xml-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("nation_xml", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:nation,xml",
         inputs = Seq(s"$dir/nation.parquet")) {
         Tables(s, dir, "nation").write.mode("overwrite")
@@ -1921,8 +1828,7 @@ object AdvancedQueries {
     // planning per file, driver touches only the listing, parsing runs
     // inside the scan where Catalyst can see through it.
     "q_dsv2_source" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kv-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kv", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -1948,7 +1854,7 @@ object AdvancedQueries {
     // construction (external table: dropping never touches the data).
     "q_dsv2_sql" -> { (s, dir) =>
       val sfN = new java.io.File(dir).getName
-      val tmp = s"/root/repo/target/tmp/orders_kv-$sfN"
+      val tmp = Scratch.dir("orders_kv", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -1985,8 +1891,7 @@ object AdvancedQueries {
     // hash-fails. Aggregate pushdown auto-disables under the mode (the
     // dropless agg readers never see corrupt dirs).
     "q_corrupt_kv" -> { (s, dir) =>
-      val sfN = new java.io.File(dir).getName
-      val tmp = s"/root/repo/target/tmp/orders_kvcorrupt-$sfN"
+      val tmp = Scratch.dir("orders_kvcorrupt", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext+garbage",
         inputs = Seq(s"$dir/orders.parquet")) {
         val o = Tables(s, dir, "orders")
@@ -2027,7 +1932,7 @@ object AdvancedQueries {
     // wrong rows, losing survivors, or double-applying all hash-fail.
     "q_dsv2_delete" -> { (s, dir) =>
       val sfN = new java.io.File(dir).getName
-      val src = s"/root/repo/target/tmp/orders_kv-$sfN"
+      val src = Scratch.dir("orders_kv", dir)
       graft.sources.Sinks.ensureDir(s, src, "v1:orders,kvtext",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2036,12 +1941,8 @@ object AdvancedQueries {
           .write.mode("overwrite").text(src)
       }
       val fmt = classOf[graft.sources.KvTextSource].getName
-      val run = s"/root/repo/target/tmp/kvdel_run-$sfN"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(run))
+      val run = Scratch.dir("kvdel_run", dir)
+      Scratch.rm(new java.io.File(run))
       s.read.format(fmt).load(src)
         .write.format(fmt).mode("overwrite").save(run)
       val tbl = s"kv_del_orders_${sfN.replaceAll("[^A-Za-z0-9]", "_")}"
@@ -2066,8 +1967,7 @@ object AdvancedQueries {
     // this is the dimension-driven fact-scan reduction DPP gives file
     // sources, extended to the custom connector.
     "q_dsv2_runtime_filter" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kvcust-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kvcust", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext/custkey",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2100,8 +2000,7 @@ object AdvancedQueries {
     // (unique orderkey tiebreak keeps the row SET deterministic under
     // value ties), so a heap that keeps the wrong rows hash-fails.
     "q_dsv2_topn" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kvok-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kvok", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext/orderkey",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2126,8 +2025,7 @@ object AdvancedQueries {
     // surface — the exact row count — plus the plan-level require; the
     // reader-level early-stop contract lives in KvConnectorPlanSpec.
     "q_dsv2_limit" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kvok-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kvok", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext/orderkey",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2155,8 +2053,7 @@ object AdvancedQueries {
     // count, pre-filter skip, per-split skip — hash-fails against the
     // oracle's identical ORDER BY … OFFSET replay on the base table.
     "q_dsv2_offset" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/orders_kvpage-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("orders_kvpage", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:orders,kvtext/sorted-page",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2195,7 +2092,6 @@ object AdvancedQueries {
     // mis-routed shards or dropped rows hash-fail. KvSpjSpec carries the
     // refusal cases (unsharded dirs, count drift, mixed layouts).
     "q_dsv2_spj" -> { (s, dir) =>
-      val sf = new java.io.File(dir).getName
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -2205,8 +2101,8 @@ object AdvancedQueries {
       // co-partitioning is always correct; the conservative default
       // demands full coverage, so the seam relaxes it
       s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val dirA = s"/root/repo/target/tmp/orders_kvshard_price-$sf"
-      val dirB = s"/root/repo/target/tmp/orders_kvshard_cust-$sf"
+      val dirA = Scratch.dir("orders_kvshard_price", dir)
+      val dirB = Scratch.dir("orders_kvshard_cust", dir)
       def sharded(df: DataFrame): DataFrame =
         df.select(col("key"), col("value"),
           pmod(hash(col("key")), lit(n)).cast("int").as("shard"))
@@ -2261,15 +2157,14 @@ object AdvancedQueries {
     // the marker protocol cases (unsorted write, doubling append,
     // truncating restore).
     "q_dsv2_sorted" -> { (s, dir) =>
-      val sf = new java.io.File(dir).getName
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
         "true")
       s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val dirA = s"/root/repo/target/tmp/orders_kvsorted_price-$sf"
-      val dirB = s"/root/repo/target/tmp/orders_kvsorted_day-$sf"
+      val dirA = Scratch.dir("orders_kvsorted_price", dir)
+      val dirB = Scratch.dir("orders_kvsorted_day", dir)
       def sortedSharded(df: DataFrame): DataFrame =
         df.select(col("key"), col("value"),
           pmod(hash(col("key")), lit(n)).cast("int").as("shard"))
@@ -2325,14 +2220,13 @@ object AdvancedQueries {
     // oracle replays the bucketed rollup from the base table, so a key
     // split across shards (double-counted groups) hash-fails.
     "q_dsv2_spj_agg" -> { (s, dir) =>
-      val sf = new java.io.File(dir).getName
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
         "true")
       s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      val dirA = s"/root/repo/target/tmp/orders_kvsorted_price-$sf"
+      val dirA = Scratch.dir("orders_kvsorted_price", dir)
       graft.sources.Sinks.ensureDir(s, dirA, "v1:orders,kvsorted/price",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2374,10 +2268,9 @@ object AdvancedQueries {
     // shard that actually held a probed key drops rows and hash-fails
     // against the oracle's base-table replay.
     "q_dsv2_shard_prune" -> { (s, dir) =>
-      val sf = new java.io.File(dir).getName
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
-      val dirA = s"/root/repo/target/tmp/orders_kvshard_price-$sf"
+      val dirA = Scratch.dir("orders_kvshard_price", dir)
       graft.sources.Sinks.ensureDir(s, dirA, "v1:orders,kvshard/price",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -2407,8 +2300,7 @@ object AdvancedQueries {
     // predicate. Write-once like every other derived layer; the gate proves
     // the round trip is value-exact against the base table.
     "q_dsv2_sink" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/cust_kv-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("cust_kv", dir)
       val fmt = classOf[graft.sources.KvTextSource].getName
       graft.sources.Sinks.ensureDir(s, tmp, "v1:customer,kvsink",
         inputs = Seq(s"$dir/customer.parquet")) {
@@ -2436,9 +2328,8 @@ object AdvancedQueries {
     // table) and pins the telemetry the op promises as booleans: fewer
     // files out than in, and no more than the computed target count.
     "q_compaction" -> { (s, dir) =>
-      val sf = new java.io.File(dir).getName
       val smallDir = compactInLayer(s, dir)
-      val outDir = s"/root/repo/target/tmp/compact_out-$sf"
+      val outDir = Scratch.dir("compact_out", dir)
       val rep = graft.sources.Compaction.compact(s, smallDir, outDir, 16L << 20)
       s.read.parquet(outDir)
         .groupBy(col("event_type"))
@@ -2489,7 +2380,7 @@ object AdvancedQueries {
     // data needs no rewrite (at 100 TB, rewriting history per schema change
     // is the anti-pattern). Filter/pruning still push into both batches.
     "q_schema_evolution" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/schema_evo-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("schema_evo", dir)
       val cut = "1995-01-01"
       graft.sources.Sinks.ensureDir(s, s"$tmp/b1", "v1:okey,price",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -2538,8 +2429,7 @@ object AdvancedQueries {
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_nationkey"))
           .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("rc"))
-      val stateDir =
-        s"/root/repo/target/tmp/ivm_state-${new java.io.File(dir).getName}"
+      val stateDir = Scratch.dir("ivm_state", dir)
       graft.sources.Sinks.ensureDir(s, stateDir, "v1:nation,n,rc",
         inputs = Seq(s"$dir/orders.parquet", s"$dir/customer.parquet")) {
         term(oOld, cOld, bcast = false)
@@ -2579,8 +2469,7 @@ object AdvancedQueries {
           .groupBy(col("c_nationkey"))
           .agg((count(lit(1)) * sign).as("n"),
             (sum(cents(col("o_totalprice"))) * sign).as("rc"))
-      val stateDir =
-        s"/root/repo/target/tmp/ivmdel_state-${new java.io.File(dir).getName}"
+      val stateDir = Scratch.dir("ivmdel_state", dir)
       graft.sources.Sinks.ensureDir(s, stateDir, "v1:nation,n,rc",
         inputs = Seq(s"$dir/orders.parquet", s"$dir/customer.parquet")) {
         agg(ords, 1).write.mode("overwrite").parquet(stateDir)
@@ -2631,10 +2520,7 @@ object AdvancedQueries {
       val base = ordersTtBase(s, dir)
       val tblName = new java.io.File(base).getName
       val cat = "graftsnap"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root",
-        new java.io.File(base).getParent)
+      SqlChain.register(s, cat, new java.io.File(base).getParent)
       val tbl = s"$cat.`$tblName`"
       val refused =
         try { s.sql(s"SELECT COUNT(*) FROM $tbl").collect(); false }
@@ -2688,11 +2574,7 @@ object AdvancedQueries {
     // never wrong.
     "q_snapshot_count" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_count-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_count", dir)
       for (m <- 0 to 1)
         graft.sources.Sinks.ensureDir(s, s"$base/d$m", s"v1:cnt_$m",
           inputs = Seq(s"$dir/orders.parquet")) {
@@ -2711,18 +2593,11 @@ object AdvancedQueries {
       val meta = ST.countRows(s, base, 2)
       require(meta.contains(c0 + c1),
         s"two counted delete-free dirs must answer from metadata: $meta")
-      if (ST.headVersion(s, base) == 2) {
-        try {
-          val v = ST.deleteWhere(s, base, "o_orderkey",
-            pmod(md5Long(col("o_orderkey").cast("string")), lit(7)) === 5)
-          require(v == 3, s"delete landed at v$v, expected v3")
-        } catch { // concurrent constructor won the claim — defer
-          case e: Exception if ST.headVersion(s, base) >= 3 => ()
-        }
-      }
-      var nTries = 0
-      while (ST.headVersion(s, base) < 3 && nTries < 600) {
-        Thread.sleep(100); nTries += 1
+      val chain = new SqlChain(s, base)
+      chain.step(2) {
+        val v = ST.deleteWhere(s, base, "o_orderkey",
+          pmod(md5Long(col("o_orderkey").cast("string")), lit(7)) === 5)
+        require(v == 3, s"delete landed at v$v, expected v3")
       }
       require(ST.headVersion(s, base) == 3, "head must be the delete")
       require(ST.countRows(s, base, 3).isEmpty,
@@ -2749,31 +2624,21 @@ object AdvancedQueries {
     "q_snapshot_clone" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val src = ordersTtBase(s, dir)
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val dst = s"/root/repo/target/tmp/orders_clone-$sfN-$fp"
+      val dst = Scratch.tagged(s, "orders_clone", dir)
       new java.io.File(dst).mkdirs()
       val srcV2 = ST.manifest(s, src, 2)
       if (ST.headVersion(s, dst) == 0)
         ST.cloneAt(s, src, 2, dst)
       require(ST.manifest(s, dst, 1) == srcV2,
         "a shallow clone must reference EXACTLY the source version's dirs")
-      if (ST.headVersion(s, dst) == 1) {
-        try {
-          val v = ST.deleteWhere(s, dst, "o_orderkey",
-            pmod(md5Long(col("o_orderkey").cast("string")), lit(6)) === 1)
-          require(v == 2, s"clone delete landed at v$v, expected v2")
-          require(ST.restore(s, dst, 1) == 3, "restore must land at v3")
-        } catch { // concurrent constructor won a claim — defer (see zorder)
-          case e: Exception if ST.headVersion(s, dst) >= 2 => ()
-        }
+      val chain = new SqlChain(s, dst)
+      chain.step(1) {
+        val v = ST.deleteWhere(s, dst, "o_orderkey",
+          pmod(md5Long(col("o_orderkey").cast("string")), lit(6)) === 1)
+        require(v == 2, s"clone delete landed at v$v, expected v2")
+        require(ST.restore(s, dst, 1) == 3, "restore must land at v3")
       }
-      var cTries = 0
-      while (ST.headVersion(s, dst) < 3 && cTries < 600) {
-        Thread.sleep(100); cTries += 1
-      }
+      chain.await(3)
       require(ST.headVersion(s, dst) == 3, "head must be the restore")
       require(ST.manifest(s, dst, 3) == ST.manifest(s, dst, 1),
         "restore must resurrect the pre-delete manifest exactly")
@@ -2800,10 +2665,7 @@ object AdvancedQueries {
       val base = ordersTtBase(s, dir)
       val tblName = new java.io.File(base).getName
       val cat = "graftsnap"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root",
-        new java.io.File(base).getParent)
+      SqlChain.register(s, cat, new java.io.File(base).getParent)
       val hist = s.sql(s"SELECT version, n_data_dirs, n_delete_dirs " +
         s"FROM $cat.`$tblName`.history")
       val counts = (1 to 3).map { v =>
@@ -2831,8 +2693,7 @@ object AdvancedQueries {
     "q_mv_snapshot" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val base = ordersTtBase(s, dir)
-      val mvPath =
-        s"/root/repo/target/tmp/mv_snap-${new java.io.File(dir).getName}"
+      val mvPath = Scratch.dir("mv_snap", dir)
       def aggOf() = ST.readVersion(s, base, 3, "o_orderkey")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
@@ -2866,8 +2727,7 @@ object AdvancedQueries {
     // (servedFromMv pinned).
     "q_mv_ivm" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val base = s"/root/repo/target/tmp/orders_ivm-$sfN"
+      val base = Scratch.dir("orders_ivm", dir)
       val cut = "1996-01-01"
       graft.sources.Sinks.ensureDir(s, s"$base/data_v1", "v1:ivm_pre",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -2894,7 +2754,7 @@ object AdvancedQueries {
         ST.Snapshot(Seq(s"$base/data_v1", s"$base/data_v2"),
           Seq(s"$base/del_v3")))
       require(ST.headVersion(s, base) == 3, "ivm base should head at v3")
-      val mvPath = s"/root/repo/target/tmp/mv_ivm-$sfN"
+      val mvPath = Scratch.dir("mv_ivm", dir)
       // re-foldable aggregates only (the fold∘partial = partial∘union
       // contract): count as a summable long, money as the exact decimal
       def partial(df: DataFrame): DataFrame =
@@ -2945,14 +2805,8 @@ object AdvancedQueries {
     // construction and pinned in the oracle.
     "q_vacuum" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val base =
-        s"/root/repo/target/tmp/orders_vac-${new java.io.File(dir).getName}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      val bf = new java.io.File(base)
-      if (bf.exists) rm(bf)
+      val base = Scratch.dir("orders_vac", dir)
+      Scratch.rm(new java.io.File(base))
       val cut = "1996-01-01"
       val o = Tables(s, dir, "orders")
       o.where(col("o_orderdate") < lit(cut))
@@ -2993,12 +2847,9 @@ object AdvancedQueries {
     // so an unapplied or over-applied delete hash-fails.
     "q_snapshot_delete" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_del-$sfN-$fp"
-      val mvPath = s"/root/repo/target/tmp/mv_snapdel-$sfN-$fp"
+      val fp = Scratch.tag(s, s"$dir/orders.parquet")
+      val base = s"${Scratch.dir("orders_del", dir)}-$fp"
+      val mvPath = s"${Scratch.dir("mv_snapdel", dir)}-$fp"
       graft.sources.Sinks.ensureDir(s, s"$base/data_v1", "v1:del_base",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders").write.mode("overwrite")
@@ -3055,11 +2906,7 @@ object AdvancedQueries {
     // over-applied, or wrong-dir fold hash-fails.
     "q_snapshot_compact" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_cmp-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_cmp", dir)
       val cut = "1998-01-01"
       graft.sources.Sinks.ensureDir(s, s"$base/data_lo", "v1:cmp_lo",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -3126,11 +2973,7 @@ object AdvancedQueries {
     // dir hash-fails.
     "q_snapshot_update" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_upd-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_upd", dir)
       val cut = "1998-01-01"
       graft.sources.Sinks.ensureDir(s, s"$base/data_lo", "v1:upd_lo",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -3189,11 +3032,7 @@ object AdvancedQueries {
     // SnapshotTableSpec.
     "q_snapshot_merge" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_mrg-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_mrg", dir)
       val cut = "1998-01-01"
       graft.sources.Sinks.ensureDir(s, s"$base/data_lo", "v1:mrg_lo",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -3258,11 +3097,7 @@ object AdvancedQueries {
     // unapplied delete mask hash-fails.
     "q_snapshot_skipping" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_skp3-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_skp3", dir)
       // quartile-ish cuts of this corpus's 1995..2001 date span
       val cuts = Seq("1996-07-01", "1998-01-01", "1999-07-01")
       val buckets = Seq(
@@ -3328,11 +3163,7 @@ object AdvancedQueries {
     // or the delete stops masking across the evolution boundary.
     "q_snapshot_evolve" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_evo-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_evo", dir)
       val cut = "1998-01-01"
       def slim(df: DataFrame) = df.select(
         col("o_orderkey"),
@@ -3390,11 +3221,7 @@ object AdvancedQueries {
     // off-by-one version resolution (reading v2's rows) hash-fails.
     "q_snapshot_asof" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_asof-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_asof", dir)
       val slim = Tables(s, dir, "orders")
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
           col("o_orderpriority"),
@@ -3435,11 +3262,7 @@ object AdvancedQueries {
     // open/footer costs from dominating scans of frequently-fed tables.
     "q_snapshot_optimize" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_opt-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_opt", dir)
       val slim = Tables(s, dir, "orders")
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
           col("o_orderpriority"),
@@ -3488,11 +3311,7 @@ object AdvancedQueries {
     // caller's predicate applies on top, and the aggregate hash-checks).
     "q_snapshot_zorder" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_zord-$sfN-$fp-v2"
+      val base = s"${Scratch.tagged(s, "orders_zord", dir)}-v2"
       graft.sources.Sinks.ensureDir(s, s"$base/d0", "v2:zord_slim,epoch95",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -3502,28 +3321,21 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d0")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d0"), Nil))
-      if (ST.headVersion(s, base) == 1) {
-        try {
-          val v = ST.deleteWhere(s, base, "o_orderkey",
-            pmod(md5Long(col("o_orderkey").cast("string")), lit(9)) === 4)
-          require(v == 2, s"delete landed at v$v, expected v2")
-          val rep =
-            ST.optimizeZorder(s, base, "o_orderkey", "ckey", "day", 16)
-          require(rep.version == 3 && rep.dirsIn == 1 && rep.dirsOut >= 2,
-            s"zorder rewrite must slice the single dir, got $rep")
-        } catch {
-          // a CONCURRENT constructor (parallel suite thread, or the bench
-          // tripwire's child JVM warming the same layer) won a version
-          // claim under us — defer to the winner, whose head checks below
-          // still gate correctness
-          case e: Exception if ST.headVersion(s, base) >= 2 => ()
-        }
+      // the step defers to a CONCURRENT constructor (parallel suite
+      // thread, or the bench tripwire's child JVM warming the same layer)
+      // that won a version claim under us; the head checks below still
+      // gate correctness once the winner's v3 commit lands
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
+        val v = ST.deleteWhere(s, base, "o_orderkey",
+          pmod(md5Long(col("o_orderkey").cast("string")), lit(9)) === 4)
+        require(v == 2, s"delete landed at v$v, expected v2")
+        val rep =
+          ST.optimizeZorder(s, base, "o_orderkey", "ckey", "day", 16)
+        require(rep.version == 3 && rep.dirsIn == 1 && rep.dirsOut >= 2,
+          s"zorder rewrite must slice the single dir, got $rep")
       }
-      // the winner may still be mid-rewrite: wait for its v3 commit
-      var zTries = 0
-      while (ST.headVersion(s, base) < 3 && zTries < 600) {
-        Thread.sleep(100); zTries += 1
-      }
+      chain.await(3)
       require(ST.headVersion(s, base) == 3, "head must be the zorder")
       require(ST.manifest(s, base, 3).deleteDirs.isEmpty,
         "the rewrite must FOLD the delete set, not carry it")
@@ -3545,11 +3357,7 @@ object AdvancedQueries {
     // level. A merge-on-read delete again folds through the rewrite.
     "q_snapshot_zorder3" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_zord3-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_zord3", dir)
       graft.sources.Sinks.ensureDir(s, s"$base/d0", "v1:zord3_slim",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -3560,25 +3368,17 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d0")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d0"), Nil))
-      if (ST.headVersion(s, base) == 1) {
-        try {
-          val v = ST.deleteWhere(s, base, "o_orderkey",
-            pmod(md5Long(col("o_orderkey").cast("string")), lit(10)) === 6)
-          require(v == 2, s"delete landed at v$v, expected v2")
-          val rep = ST.optimizeZorder(s, base, "o_orderkey",
-            Seq("ckey", "day", "pbucket"), 27)
-          require(rep.version == 3 && rep.dirsIn == 1 && rep.dirsOut >= 4,
-            s"3-D zorder rewrite must slice the single dir, got $rep")
-        } catch {
-          // concurrent constructor won a claim — defer to the winner
-          // (see q_snapshot_zorder)
-          case e: Exception if ST.headVersion(s, base) >= 2 => ()
-        }
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
+        val v = ST.deleteWhere(s, base, "o_orderkey",
+          pmod(md5Long(col("o_orderkey").cast("string")), lit(10)) === 6)
+        require(v == 2, s"delete landed at v$v, expected v2")
+        val rep = ST.optimizeZorder(s, base, "o_orderkey",
+          Seq("ckey", "day", "pbucket"), 27)
+        require(rep.version == 3 && rep.dirsIn == 1 && rep.dirsOut >= 4,
+          s"3-D zorder rewrite must slice the single dir, got $rep")
       }
-      var zTries = 0
-      while (ST.headVersion(s, base) < 3 && zTries < 600) {
-        Thread.sleep(100); zTries += 1
-      }
+      chain.await(3)
       require(ST.headVersion(s, base) == 3, "head must be the zorder")
       require(ST.manifest(s, base, 3).deleteDirs.isEmpty,
         "the rewrite must FOLD the delete set, not carry it")
@@ -3607,24 +3407,9 @@ object AdvancedQueries {
     // mutation is head-guarded against concurrent constructors.
     "q_snapshot_call" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlcall-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gcall${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val fx = SqlChain.fixture(s, dir, "sqlcall", "gcall", "orders_t")
+      import fx.{tbl, cat, base, head, await, step}
       val cut = "1996-01-01"
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
       // the WHOLE build is gated on head < 5: the final vacuum retires
       // v1..v3 and physically deletes d0/d1, so a completed chain must
       // never re-run the dir builds or re-commit v1 (it would resurrect
@@ -3647,45 +3432,34 @@ object AdvancedQueries {
           }
         ST.commit(s, base, 1,
           ST.Snapshot(Seq(s"$base/d0", s"$base/d1"), Nil))
-        if (head == 1) {
-          try {
-            val v = ST.deleteWhere(s, base, "o_orderkey",
-              pmod(md5Long(col("o_orderkey").cast("string")), lit(8)) === 2)
-            require(v == 2, s"delete landed at v$v, expected v2")
-          } catch { case e: Exception if head >= 2 => () }
+        step(1) {
+          val v = ST.deleteWhere(s, base, "o_orderkey",
+            pmod(md5Long(col("o_orderkey").cast("string")), lit(8)) === 2)
+          require(v == 2, s"delete landed at v$v, expected v2")
         }
-        awaitHead(2)
-        if (head == 2) {
-          try {
-            val r = s.sql(
-              s"CALL $cat.system.compact('$tbl', 'o_orderkey')").head
-            require(r.getInt(0) == 3 && r.getInt(3) == 1,
-              s"compact report must pin (v3, 1 delete folded): $r")
-          } catch { case e: Exception if head >= 3 => () }
+        step(2) {
+          val r = s.sql(
+            s"CALL $cat.system.compact('$tbl', 'o_orderkey')").head
+          require(r.getInt(0) == 3 && r.getInt(3) == 1,
+            s"compact report must pin (v3, 1 delete folded): $r")
         }
-        awaitHead(3)
         require(ST.manifest(s, base, 3).deleteDirs.isEmpty,
           "CALL compact must fold the delete set")
-        if (head == 3) {
-          try {
-            val r = s.sql(
-              s"CALL $cat.system.zorder('$tbl', 'o_orderkey', " +
-                "'ckey,day', 8)").head
-            require(r.getInt(0) == 4 && r.getInt(2) >= 2,
-              s"zorder report must pin (v4, >=2 slices): $r")
-          } catch { case e: Exception if head >= 4 => () }
+        step(3) {
+          val r = s.sql(
+            s"CALL $cat.system.zorder('$tbl', 'o_orderkey', " +
+              "'ckey,day', 8)").head
+          require(r.getInt(0) == 4 && r.getInt(2) >= 2,
+            s"zorder report must pin (v4, >=2 slices): $r")
         }
-        awaitHead(4)
-        if (head == 4) {
-          try {
-            val r = s.sql(s"CALL $cat.system.optimize('$tbl', " +
-              s"${Long.MaxValue / 4})").head
-            require(r.getInt(0) == 5 && r.getInt(2) == 0,
-              s"optimize report must pin (v5, all slices packed): $r")
-          } catch { case e: Exception if head >= 5 => () }
+        step(4) {
+          val r = s.sql(s"CALL $cat.system.optimize('$tbl', " +
+            s"${Long.MaxValue / 4})").head
+          require(r.getInt(0) == 5 && r.getInt(2) == 0,
+            s"optimize report must pin (v5, all slices packed): $r")
         }
       } catch { case e: Exception if head >= 5 => () }
-      awaitHead(5)
+      await(5)
       val v1m = graft.sources.SnapshotTable.manifestFile(base, 1)
       if (new java.io.File(v1m).exists) {
         try s.sql(s"CALL $cat.system.vacuum('$tbl', 4)").collect(): Unit
@@ -3716,17 +3490,8 @@ object AdvancedQueries {
     // the direct base-table replay (a wrongly-pruned dir = missing rows).
     "q_snapshot_sql_prune" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlprune-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gprn${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val fx = SqlChain.fixture(s, dir, "sqlprune", "gprn", "orders_t")
+      import fx.{tbl, cat, base, step}
       val cuts = Seq("0000-01-01", "1994-01-01", "1996-01-01",
         "1997-06-01", "9999-12-31")
       val dirs = (0 until 4).map(i => s"$base/d$i")
@@ -3741,14 +3506,9 @@ object AdvancedQueries {
               col("o_orderpriority"), cents(col("o_totalprice")).as("cents"))
             .write.mode("overwrite").parquet(dirs(i))
         }
-      if (ST.headVersion(s, base) == 0) {
-        try ST.commit(s, base, 1, ST.Snapshot(dirs, Nil,
+      step(0) {
+        ST.commit(s, base, 1, ST.Snapshot(dirs, Nil,
           bounds = ST.computeBounds(s, dirs, "o_orderdate")))
-        catch { case e: Exception if ST.headVersion(s, base) >= 1 => () }
-      }
-      var pTries = 0
-      while (ST.headVersion(s, base) < 1 && pTries < 600) {
-        Thread.sleep(100); pTries += 1
       }
       require(ST.headVersion(s, base) == 1, "bounds commit missing")
       val res = s.sql(
@@ -3782,17 +3542,8 @@ object AdvancedQueries {
     // in the manifest.
     "q_snapshot_colstats" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/colstats-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gcst${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val fx = SqlChain.fixture(s, dir, "colstats", "gcst", "orders_t")
+      import fx.{tbl, cat, base, step}
       val dirs = Seq(s"$base/d0", s"$base/d1")
       for (i <- 0 to 1)
         graft.sources.Sinks.ensureDir(s, dirs(i), s"v1:colstats_$i",
@@ -3805,13 +3556,8 @@ object AdvancedQueries {
                 .otherwise(col("o_orderpriority")).as("pri_n"))
             .write.mode("overwrite").parquet(dirs(i))
         }
-      if (ST.headVersion(s, base) == 0) {
-        try ST.commit(s, base, 1, ST.Snapshot(dirs, Nil))
-        catch { case e: Exception if ST.headVersion(s, base) >= 1 => () }
-      }
-      var tries = 0
-      while (ST.headVersion(s, base) < 1 && tries < 600) {
-        Thread.sleep(100); tries += 1
+      step(0) {
+        ST.commit(s, base, 1, ST.Snapshot(dirs, Nil))
       }
       // analyzeColumnStats is race-safe by construction (OCC fold onto
       // the winner), so CALL unconditionally: the winner reports the 4
@@ -3863,17 +3609,8 @@ object AdvancedQueries {
     // SnapshotCatalogSpec.
     "q_snapshot_agg_meta" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/aggmeta2-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gagm${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val fx = SqlChain.fixture(s, dir, "aggmeta2", "gagm", "orders_t")
+      import fx.{tbl, cat, base, step}
       val cuts = Seq("0000-01-01", "1996-01-01", "1997-01-01", "9999-12-31")
       val dirs = (0 until 3).map(i => s"$base/d$i")
       for (i <- 0 until 3)
@@ -3889,15 +3626,10 @@ object AdvancedQueries {
                 .otherwise(col("o_orderpriority")).as("pri_n"))
             .write.mode("overwrite").parquet(dirs(i))
         }
-      if (ST.headVersion(s, base) == 0) {
-        try ST.commit(s, base, 1, ST.Snapshot(dirs, Nil,
+      step(0) {
+        ST.commit(s, base, 1, ST.Snapshot(dirs, Nil,
           bounds = Seq("okey", "day", "pri")
             .flatMap(c => ST.computeBounds(s, dirs, c))))
-        catch { case e: Exception if ST.headVersion(s, base) >= 1 => () }
-      }
-      var tries = 0
-      while (ST.headVersion(s, base) < 1 && tries < 600) {
-        Thread.sleep(100); tries += 1
       }
       // fills rowCounts + pri_n null counts; race-safe (OCC fold)
       val r = s.sql(
@@ -3932,46 +3664,24 @@ object AdvancedQueries {
     // untouched, masked by the SQL read through the declared key.
     "q_snapshot_sql_dml2" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sndml2-$sfN-$fp"
-      val tbl = "orders_e"
-      val base = s"$root/$tbl"
-      val cat = s"gdml2${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
-      def head = ST.headVersion(s, base)
-      def await(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int)(op: => Unit): Unit = {
-        if (head == at) {
-          try op catch { case e: Exception if head > at => () }
-        }
-        await(at + 1)
-      }
-      step(0) { s.sql(s"CREATE TABLE $t (k BIGINT, ck BIGINT, " +
-        "pri STRING, cents BIGINT)").collect(): Unit }
-      step(1) { s.sql(s"INSERT INTO $t SELECT o_orderkey, o_custkey, " +
+      val fx = SqlChain.fixture(s, dir, "sndml2", "gdml2", "orders_e",
+        key = Some("k"))
+      import fx.{t, base, head, step}
+      step(0, s"CREATE TABLE $t (k BIGINT, ck BIGINT, " +
+        "pri STRING, cents BIGINT)")
+      step(1, s"INSERT INTO $t SELECT o_orderkey, o_custkey, " +
         s"o_orderpriority, ${CENTS("o_totalprice")} " +
-        s"FROM parquet.`$dir/orders.parquet`").collect(): Unit }
+        s"FROM parquet.`$dir/orders.parquet`")
       // the erase cascade: forget every non-urgent order of customers
       // with negative balance — the erase SET comes from a subquery
-      step(2) { s.sql(s"DELETE FROM $t WHERE ck IN " +
+      step(2, s"DELETE FROM $t WHERE ck IN " +
         s"(SELECT c_custkey FROM parquet.`$dir/customer.parquet` " +
-        "WHERE c_acctbal < 0) AND pri <> '1-URGENT'").collect(): Unit }
+        "WHERE c_acctbal < 0) AND pri <> '1-URGENT'")
       // a FALSE uncorrelated EXISTS deletes nothing but still commits
       // the version boundary (custkeys are ≥ 1 at every SF)
-      step(3) { s.sql(s"DELETE FROM $t WHERE EXISTS " +
+      step(3, s"DELETE FROM $t WHERE EXISTS " +
         s"(SELECT 1 FROM parquet.`$dir/customer.parquet` " +
-        "WHERE c_custkey < 0) AND pri = '2-HIGH'").collect(): Unit }
+        "WHERE c_custkey < 0) AND pri = '2-HIGH'")
       val snap = ST.manifest(s, base, head)
       require(snap.deleteDirs.size >= 2,
         s"both DELETEs must land delete files, got ${snap.deleteDirs.size}")
@@ -3999,18 +3709,8 @@ object AdvancedQueries {
     // double-landed racer insert.
     "q_snapshot_partition" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/snpart-$sfN-$fp"
-      val tbl = "orders_p"
-      val base = s"$root/$tbl"
-      val cat = s"gpart${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "snpart", "gpart", "orders_p")
+      import fx.{root, t, base, head, step}
       // write-once source slice (6 months of orders): the bench warm-up
       // owns its build like every other fixture layer
       graft.sources.Sinks.ensureDir(s, s"$root/src", "v1:part_src",
@@ -4023,23 +3723,10 @@ object AdvancedQueries {
             cents(col("o_totalprice")).as("cents"))
           .write.mode("overwrite").parquet(s"$root/src")
       }
-      def head = ST.headVersion(s, base)
-      def await(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int)(op: => Unit): Unit = {
-        if (head == at) {
-          try op catch { case e: Exception if head > at => () }
-        }
-        await(at + 1)
-      }
-      step(0) { s.sql(s"CREATE TABLE $t (k BIGINT, d DATE, pri STRING, " +
+      step(0, s"CREATE TABLE $t (k BIGINT, d DATE, pri STRING, " +
         "cents BIGINT) PARTITIONED BY (months(d), bucket(8, k))")
-        .collect(): Unit }
-      step(1) { s.sql(s"INSERT INTO $t SELECT k, d, pri, cents " +
-        s"FROM parquet.`$root/src`").collect(): Unit }
+      step(1, s"INSERT INTO $t SELECT k, d, pri, cents " +
+        s"FROM parquet.`$root/src`")
       val snap = ST.manifest(s, base, head)
       require(snap.bounds.isEmpty,
         "fixture must prune structurally — no bounds were ever analyzed")
@@ -4090,18 +3777,8 @@ object AdvancedQueries {
     // prevents double landing.)
     "q_snapshot_partition_evolve" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/snpevo-$sfN-$fp"
-      val tbl = "orders_evo"
-      val base = s"$root/$tbl"
-      val cat = s"gpevo${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "snpevo", "gpevo", "orders_evo")
+      import fx.{root, tbl, cat, t, base, head, step}
       // write-once source slice: a KEY slice (constant ~1.5k rows at
       // every SF, so the per-era dir population is dense even at
       // sf0.001 where a date slice would be ~7 rows) with a synthetic
@@ -4120,35 +3797,23 @@ object AdvancedQueries {
             cents(col("o_totalprice")).as("cents"))
           .write.mode("overwrite").parquet(s"$root/src")
       }
-      def head = ST.headVersion(s, base)
-      def await(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int)(op: => Unit): Unit = {
-        if (head == at) {
-          try op catch { case e: Exception if head > at => () }
-        }
-        await(at + 1)
-      }
-      step(0) { s.sql(s"CREATE TABLE $t (k BIGINT, ts TIMESTAMP, " +
+      step(0, s"CREATE TABLE $t (k BIGINT, ts TIMESTAMP, " +
         "pri STRING, cents BIGINT) " +
-        "PARTITIONED BY (days(ts), identity(pri))").collect(): Unit }
-      step(1) { s.sql(s"INSERT INTO $t SELECT k, ts, pri, cents " +
+        "PARTITIONED BY (days(ts), identity(pri))")
+      step(1, s"INSERT INTO $t SELECT k, ts, pri, cents " +
         s"FROM parquet.`$root/src` " +
-        "WHERE ts < TIMESTAMP '1995-01-05 00:00:00'").collect(): Unit }
-      step(2) { s.sql(s"CALL $cat.system.alter_partition_spec(" +
-        s"'$tbl', 'hours(ts), truncate(1000, k)')").collect(): Unit }
-      step(3) { s.sql(s"INSERT INTO $t SELECT k, ts, pri, cents " +
+        "WHERE ts < TIMESTAMP '1995-01-05 00:00:00'")
+      step(2, s"CALL $cat.system.alter_partition_spec(" +
+        s"'$tbl', 'hours(ts), truncate(1000, k)')")
+      step(3, s"INSERT INTO $t SELECT k, ts, pri, cents " +
         s"FROM parquet.`$root/src` " +
         "WHERE ts >= TIMESTAMP '1995-01-05 00:00:00' " +
-        "AND ts < TIMESTAMP '1995-01-09 00:00:00'").collect(): Unit }
-      step(4) { s.sql(s"CALL $cat.system.alter_partition_spec(" +
-        s"'$tbl', 'years(ts), bucket(8, k)')").collect(): Unit }
-      step(5) { s.sql(s"INSERT INTO $t SELECT k, ts, pri, cents " +
+        "AND ts < TIMESTAMP '1995-01-09 00:00:00'")
+      step(4, s"CALL $cat.system.alter_partition_spec(" +
+        s"'$tbl', 'years(ts), bucket(8, k)')")
+      step(5, s"INSERT INTO $t SELECT k, ts, pri, cents " +
         s"FROM parquet.`$root/src` " +
-        "WHERE ts >= TIMESTAMP '1995-01-09 00:00:00'").collect(): Unit }
+        "WHERE ts >= TIMESTAMP '1995-01-09 00:00:00'")
       val snap = ST.manifest(s, base, head)
       require(snap.bounds.isEmpty,
         "fixture must prune structurally — no bounds were ever analyzed")
@@ -4222,18 +3887,8 @@ object AdvancedQueries {
     // prevents double landing.)
     "q_snapshot_write_order" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/snword-$sfN-$fp"
-      val tbl = "orders_w"
-      val base = s"$root/$tbl"
-      val cat = s"gword${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "snword", "gword", "orders_w")
+      import fx.{root, tbl, cat, t, base, head, step}
       graft.sources.Sinks.ensureDir(s, s"$root/src", "v1:word_src",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -4244,28 +3899,16 @@ object AdvancedQueries {
             cents(col("o_totalprice")).as("cents"))
           .write.mode("overwrite").parquet(s"$root/src")
       }
-      def head = ST.headVersion(s, base)
-      def await(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int)(op: => Unit): Unit = {
-        if (head == at) {
-          try op catch { case e: Exception if head > at => () }
-        }
-        await(at + 1)
-      }
-      step(0) { s.sql(s"CREATE TABLE $t (k BIGINT, d DATE, " +
-        "pri STRING, cents BIGINT)").collect(): Unit }
-      step(1) { s.sql(s"CALL $cat.system.set_write_order(" +
-        s"'$tbl', 'd', 6)").collect(): Unit }
-      step(2) { s.sql(s"INSERT INTO $t SELECT k, d, pri, cents " +
+      step(0, s"CREATE TABLE $t (k BIGINT, d DATE, " +
+        "pri STRING, cents BIGINT)")
+      step(1, s"CALL $cat.system.set_write_order(" +
+        s"'$tbl', 'd', 6)")
+      step(2, s"INSERT INTO $t SELECT k, d, pri, cents " +
         s"FROM parquet.`$root/src` " +
-        "WHERE d < DATE '1995-04-01'").collect(): Unit }
-      step(3) { s.sql(s"INSERT INTO $t SELECT k, d, pri, cents " +
+        "WHERE d < DATE '1995-04-01'")
+      step(3, s"INSERT INTO $t SELECT k, d, pri, cents " +
         s"FROM parquet.`$root/src` " +
-        "WHERE d >= DATE '1995-04-01'").collect(): Unit }
+        "WHERE d >= DATE '1995-04-01'")
       val snap = ST.manifest(s, base, head)
       require(snap.writeOrder == Seq("d") && snap.writeOrderSlices == 6,
         s"declared order lost: ${snap.writeOrder}")
@@ -4318,18 +3961,9 @@ object AdvancedQueries {
     // rows) or a dropped file (missing rows) both fail.
     "q_snapshot_copyinto" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val landing = s"/root/repo/target/tmp/copyland-$sfN-$fp"
-      val root = s"/root/repo/target/tmp/copyin-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gcpy${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val landing = Scratch.tagged(s, "copyland", dir)
+      val fx = SqlChain.fixture(s, dir, "copyin", "gcpy", "orders_t")
+      import fx.{tbl, cat, base, head, step}
       for (i <- 0 until 3)
         graft.sources.Sinks.ensureDir(s, s"$landing/s$i", s"v1:copyland_$i",
           inputs = Seq(s"$dir/orders.parquet")) {
@@ -4341,21 +3975,11 @@ object AdvancedQueries {
             .coalesce(1)
             .write.mode("overwrite").parquet(s"$landing/s$i")
         }
-      def head = ST.headVersion(s, base)
-      if (head == 0) {
-        try s.sql(
-          s"CREATE TABLE $cat.`$tbl` (k BIGINT, pri STRING, cents BIGINT)")
-          .collect(): Unit
-        catch { case e: Exception if head >= 1 => () }
-      }
-      var tries = 0
-      while (head < 1 && tries < 600) { Thread.sleep(100); tries += 1 }
+      step(0,
+        s"CREATE TABLE $cat.`$tbl` (k BIGINT, pri STRING, cents BIGINT)")
       def ledgerSize = ST.manifest(s, base, head).ingested.size
-      def awaitLedger(n: Int): Unit = {
-        var i = 0
-        while (ledgerSize < n && i < 600) { Thread.sleep(100); i += 1 }
-        require(ledgerSize >= n, s"COPY INTO ledger stuck below $n")
-      }
+      def awaitLedger(n: Int): Unit =
+        Scratch.await(s"COPY INTO ledger stuck below $n")(ledgerSize >= n)
       // first two slices: a loader run (added + skipped == listed; a
       // concurrent runner's fold reports added 0, the ledger arbitrates)
       val r1 = s.sql(s"CALL $cat.system.ingest_files('$tbl', " +
@@ -4401,36 +4025,14 @@ object AdvancedQueries {
     "q_snapshot_check" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlchk-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gchk${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqlchk", "gchk", "orders_t",
+        key = Some("k"))
+      import fx.{tbl, cat, t, base, head, step}
       val bv = s"sqlchk_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { case e: Exception if head > at => () }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv WHERE k % 3 = 0")
       step(2, s"CALL $cat.system.add_check('$tbl', 'cents_pos', " +
@@ -4488,11 +4090,7 @@ object AdvancedQueries {
     // in both engines).
     "q_zorder_string" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_zstr-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_zstr", dir)
       graft.sources.Sinks.ensureDir(s, s"$base/d0", "v1:zstr_slim",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -4504,19 +4102,12 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d0")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d0"), Nil))
-      if (ST.headVersion(s, base) == 1) {
-        try {
-          val rep = ST.optimizeZorder(s, base, "o_orderkey",
-            Seq("skey", "ckey"), 16)
-          require(rep.version == 2 && rep.dirsIn == 1 && rep.dirsOut >= 2,
-            s"string zorder rewrite must slice the single dir, got $rep")
-        } catch { // concurrent constructor won the claim — defer
-          case e: Exception if ST.headVersion(s, base) >= 2 => ()
-        }
-      }
-      var zTries = 0
-      while (ST.headVersion(s, base) < 2 && zTries < 600) {
-        Thread.sleep(100); zTries += 1
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
+        val rep = ST.optimizeZorder(s, base, "o_orderkey",
+          Seq("skey", "ckey"), 16)
+        require(rep.version == 2 && rep.dirsIn == 1 && rep.dirsOut >= 2,
+          s"string zorder rewrite must slice the single dir, got $rep")
       }
       require(ST.headVersion(s, base) == 2, "head must be the zorder")
       val (boxed, rep) = ST.readVersionPrunedBox(s, base, 2, "o_orderkey",
@@ -4545,11 +4136,7 @@ object AdvancedQueries {
     // re-append cases live in SnapshotTableSpec.
     "q_snapshot_cdf" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/orders_cdf-$sfN-$fp"
+      val base = Scratch.tagged(s, "orders_cdf", dir)
       val cut = "1999-01-01"
       graft.sources.Sinks.ensureDir(s, s"$base/data_early", "v1:cdf_early",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -4596,40 +4183,15 @@ object AdvancedQueries {
     // suites / the bench child build this fixture racily — the standing
     // snapshot-gate discipline).
     "q_snapshot_sql_dml" -> { (s, dir) =>
-      import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqldml-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gdml${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqldml", "gdml", "orders_t",
+        key = Some("k"))
+      import fx.{t, head, step}
       val bv = s"sqldml_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { // concurrent constructor won the claim — defer
-            case e: Exception if head > at => ()
-          }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv")
       step(2, s"DELETE FROM $t WHERE pri = '5-LOW'")
@@ -4679,40 +4241,15 @@ object AdvancedQueries {
     // probe is one anti-join pass, and its narrowing condition is what
     // bounds the rewrite at 100 TB.
     "q_snapshot_sql_merge2" -> { (s, dir) =>
-      import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlmrg2-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gmrg${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqlmrg2", "gmrg", "orders_t",
+        key = Some("k"))
+      import fx.{t, head, step}
       val bv = s"sqlmrg2_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { // concurrent constructor won the claim — defer
-            case e: Exception if head > at => ()
-          }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv")
       // first-match clauses: matched k%10=1 keys DELETE when the stored
@@ -4761,40 +4298,15 @@ object AdvancedQueries {
     // probe — the stored table is only ever touched at matched-dir
     // granularity, exactly like the unconditional path.
     "q_snapshot_sql_merge3" -> { (s, dir) =>
-      import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlmrg3-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gmrg3${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqlmrg3", "gmrg3", "orders_t",
+        key = Some("k"))
+      import fx.{t, head, step}
       val bv = s"sqlmrg3_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { // concurrent constructor won the claim — defer
-            case e: Exception if head > at => ()
-          }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv")
       // all source keys are unmatched: only rows passing EITHER ordered
@@ -4842,40 +4354,15 @@ object AdvancedQueries {
     // marker joined to the wrong side, a NULL-membership row treated as
     // TRUE, or a false EXISTS leaking its clause all hash-fail.
     "q_snapshot_sql_merge4" -> { (s, dir) =>
-      import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlmrg4-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gmrg4${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqlmrg4", "gmrg4", "orders_t",
+        key = Some("k"))
+      import fx.{t, head, step}
       val bv = s"sqlmrg4_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { // concurrent constructor won the claim — defer
-            case e: Exception if head > at => ()
-          }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv")
       // matched first-match chain: DELETE gated by a TARGET-column IN,
@@ -4955,19 +4442,9 @@ object AdvancedQueries {
     // leg, or a tag serving the wrong version all hash-fail.
     "q_snapshot_wap" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/wap-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gwap${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "wap", "gwap", "orders_t",
+        key = Some("k"))
+      import fx.{t, base}
       graft.sources.Sinks.ensureDir(s, s"$base/d1", "v1:wap_base",
         inputs = Seq(s"$dir/orders.parquet")) {
         Tables(s, dir, "orders")
@@ -4979,24 +4456,12 @@ object AdvancedQueries {
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d1"), Nil))
       ST.createTag(s, base, "prewap", 1)
       val bb = ST.branchBase(base, "audit")
-      def bHead = ST.headVersion(s, bb)
-      def mHead = ST.headVersion(s, base)
-      def await(cur: () => Int, v: Int): Unit = {
-        var i = 0
-        while (cur() < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(cur() >= v, s"WAP fixture stuck below v$v")
-      }
-      def guarded(at: Int, cur: () => Int)(op: => Unit): Unit = {
-        if (cur() == at) {
-          try op catch { case e: Exception if cur() > at => () }
-        }
-        await(cur, at + 1)
-      }
-      guarded(0, () => bHead) { ST.createBranch(s, base, "audit"): Unit }
-      guarded(1, () => bHead) {
+      val branch = new SqlChain(s, bb)
+      branch.step(0) { ST.createBranch(s, base, "audit"): Unit }
+      branch.step(1) {
         ST.deleteWhere(s, bb, "k", col("pri") === "5-LOW"): Unit
       }
-      guarded(2, () => bHead) {
+      branch.step(2) {
         ST.updateWhere(s, bb, col("pri") === "1-URGENT",
           Seq("cents" -> (col("cents") + 7))): Unit
       }
@@ -5004,15 +4469,15 @@ object AdvancedQueries {
       // the whole point of WAP (both pinned before the publish flips).
       // Deferred to a concurrent publisher like every other step: a
       // racer can flip main between the head check and the counts.
-      if (mHead == 1) {
+      if (fx.head == 1) {
         try require(
           s.sql(s"SELECT COUNT(*) FROM $t VERSION AS OF 'audit'")
             .head.getLong(0) < s.sql(s"SELECT COUNT(*) FROM $t")
             .head.getLong(0),
           "pre-publish: branch deletes must be invisible to main")
-        catch { case e: Exception if mHead > 1 => () }
+        catch { case e: Exception if fx.head > 1 => () }
       }
-      guarded(1, () => mHead) { ST.publishBranch(s, base, "audit"): Unit }
+      fx.step(1) { ST.publishBranch(s, base, "audit"): Unit }
       s.sql(
         s"""SELECT CAST(1 AS BIGINT) AS phase, pri, COUNT(*) AS n,
            |  CAST(SUM(cents) AS BIGINT) AS cents
@@ -5038,18 +4503,9 @@ object AdvancedQueries {
     "q_snapshot_wap2" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/wap2-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gwap2${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.conf.set(s"spark.sql.catalog.$cat.key.$tbl", "k")
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "wap2", "gwap2", "orders_t",
+        key = Some("k"))
+      import fx.{tbl, cat, t, base}
       val bv = s"wap2_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
@@ -5062,44 +4518,32 @@ object AdvancedQueries {
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d1"), Nil))
       val bb = ST.branchBase(base, "audit")
-      def bHead = ST.headVersion(s, bb)
-      def mHead = ST.headVersion(s, base)
-      def await(cur: () => Int, v: Int): Unit = {
-        var i = 0
-        while (cur() < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(cur() >= v, s"WAP2 fixture stuck below v$v")
-      }
-      def guarded(at: Int, cur: () => Int)(op: => Unit): Unit = {
-        if (cur() == at) {
-          try op catch { case e: Exception if cur() > at => () }
-        }
-        await(cur, at + 1)
-      }
-      guarded(0, () => bHead) {
+      val branch = new SqlChain(s, bb)
+      branch.step(0) {
         s.sql(s"CALL $cat.system.create_branch('$tbl', 'audit')")
           .collect(): Unit
       }
       // SQL writes address the BRANCH: one branch version per statement
-      guarded(1, () => bHead) {
+      branch.step(1) {
         s.sql(s"INSERT INTO $cat.`$tbl`.branch_audit " +
           s"SELECT k + 7000000000, pri, cents FROM $bv WHERE k % 10 = 9")
           .collect(): Unit
       }
-      guarded(2, () => bHead) {
+      branch.step(2) {
         s.sql(s"UPDATE $cat.`$tbl`.branch_audit SET cents = cents + 5 " +
           "WHERE pri = '2-HIGH'").collect(): Unit
       }
       // pre-publish audit: branch grew, main did not (deferred to a
       // concurrent publisher, like every step)
-      if (mHead == 1) {
+      if (fx.head == 1) {
         try require(
           s.sql(s"SELECT COUNT(*) FROM $cat.`$tbl`.branch_audit")
             .head.getLong(0) > s.sql(s"SELECT COUNT(*) FROM $t")
             .head.getLong(0),
           "pre-publish: branch inserts must be invisible to main")
-        catch { case e: Exception if mHead > 1 => () }
+        catch { case e: Exception if fx.head > 1 => () }
       }
-      guarded(1, () => mHead) {
+      fx.step(1) {
         s.sql(s"CALL $cat.system.fast_forward('$tbl', 'audit')")
           .collect(): Unit
       }
@@ -5127,35 +4571,13 @@ object AdvancedQueries {
     "q_snapshot_sql_insert" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/sqlins-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gins${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "sqlins", "gins", "orders_t")
+      import fx.{t, base, head, step}
       val bv = s"sqlins_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("pri"),
           cents(col("o_totalprice")).as("cents"))
         .createOrReplaceTempView(bv)
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { case e: Exception if head > at => () }
-        }
-        awaitHead(at + 1)
-      }
       step(0, s"CREATE TABLE $t (k BIGINT, pri STRING, cents BIGINT)")
       step(1, s"INSERT INTO $t SELECT k, pri, cents FROM $bv WHERE k % 4 = 0")
       step(2, s"INSERT INTO $t SELECT k, pri, cents FROM $bv WHERE k % 4 = 1")
@@ -5196,17 +4618,8 @@ object AdvancedQueries {
     "q_snapshot_evolve2" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/ev2-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gev2${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "ev2", "gev2", "orders_t")
+      import fx.{t, base, head, step}
       val bv = s"ev2_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"), cents(col("o_totalprice"))
@@ -5221,19 +4634,6 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d1")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d1"), Nil))
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { case e: Exception if head > at => () }
-        }
-        awaitHead(at + 1)
-      }
       step(1, s"ALTER TABLE $t RENAME COLUMN c TO cents2")
       step(2, s"INSERT INTO $t SELECT k, cents, pri FROM $bv WHERE k % 2 = 1")
       step(3, s"ALTER TABLE $t DROP COLUMN pri")
@@ -5268,17 +4668,8 @@ object AdvancedQueries {
     "q_snapshot_evolve3" -> { (s, dir) =>
       import graft.sources.{SnapshotTable => ST}
       val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks.fingerprint(s, s"$dir/orders.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val root = s"/root/repo/target/tmp/ev3-$sfN-$fp"
-      val tbl = "orders_t"
-      val base = s"$root/$tbl"
-      val cat = s"gev3${sfN.replace(".", "")}$fp"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.SnapshotCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val t = s"$cat.`$tbl`"
+      val fx = SqlChain.fixture(s, dir, "ev3", "gev3", "orders_t")
+      import fx.{t, base, head, step}
       val bv = s"ev3_base_${sfN.replace(".", "")}"
       Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k"),
@@ -5292,19 +4683,6 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d1")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d1"), Nil))
-      def head = ST.headVersion(s, base)
-      def awaitHead(v: Int): Unit = {
-        var i = 0
-        while (head < v && i < 600) { Thread.sleep(100); i += 1 }
-        require(head >= v, s"snapshot $base stuck below v$v")
-      }
-      def step(at: Int, sql: String): Unit = {
-        if (head == at) {
-          try s.sql(sql).collect(): Unit
-          catch { case e: Exception if head > at => () }
-        }
-        awaitHead(at + 1)
-      }
       step(1, s"ALTER TABLE $t ALTER COLUMN cents TYPE BIGINT")
       step(2, s"INSERT INTO $t SELECT k, cents + 3000000000 FROM $bv " +
         "WHERE k % 2 = 1")

@@ -723,33 +723,20 @@ object DedupQueries {
     "q_stream_dedup" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_dedup-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_dedup", dir)
       val median = docs
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
         .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
-      val qn = s"q_stream_dedup_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.dedupStream(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          docs.where(col("doc_id") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
+      g.replay(s)(graft.streaming.StreamingOps.dedupStream(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => docs.where(col("doc_id") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => docs.where(col("doc_id") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"))
+      s.table(g.sink)
         .groupBy(col("norm_md5"))
         .agg(count(lit(1)).as("n_emits"))
         .orderBy("norm_md5")
@@ -779,14 +766,7 @@ object DedupQueries {
     "q_stream_dedup_lsh" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
       val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_lsh-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_lsh", dir)
       // terciles, not a median split: THREE ingest batches so the third
       // probes a freshly COMPACTED index (compactEvery = 2 folds epochs
       // 0-1 into generation r=0-1 before batch 3 arrives) — the
@@ -797,26 +777,22 @@ object DedupQueries {
         "CAST(percentile_cont(0.6667) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
         .head()
       val (t1, t2) = (cuts.getLong(0), cuts.getLong(1))
-      val st = s"$tmp/state"
-      val q = s.readStream.schema(schema).parquet(s"$tmp/in/*.parquet")
+      val st = s"${g.tmp}/state"
+      g.replay(s)(s.readStream.schema(schema)
+        .parquet(s"${g.tmp}/in/*.parquet")
         .writeStream
         .foreachBatch { (b: DataFrame, epochId: Long) =>
-          lshIngestBatch(st, s"$tmp/out", b, epochId, compactEvery = 2)
+          lshIngestBatch(st, s"${g.tmp}/out", b, epochId, compactEvery = 2)
         }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        try {
-          docs.where(col("doc_id") <= t1).write.parquet(s"$tmp/in/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > t1 && col("doc_id") <= t2)
-            .write.parquet(s"$tmp/in/b2.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > t2).write.parquet(s"$tmp/in/b3.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.read.parquet(s"$tmp/out")
+        .option("checkpointLocation", s"${g.tmp}/ckpt")
+        .start())(
+        () => docs.where(col("doc_id") <= t1)
+          .write.parquet(s"${g.tmp}/in/b1.parquet"),
+        () => docs.where(col("doc_id") > t1 && col("doc_id") <= t2)
+          .write.parquet(s"${g.tmp}/in/b2.parquet"),
+        () => docs.where(col("doc_id") > t2)
+          .write.parquet(s"${g.tmp}/in/b3.parquet"))
+      s.read.parquet(s"${g.tmp}/out")
         .select(col("doc_a"), col("doc_b"), col("jac"))
         .orderBy("doc_a", "doc_b")
     },
@@ -901,7 +877,7 @@ object DedupQueries {
     "dedup_cluster_incr" -> { (s, dir) =>
       val pairs = simhashPairs(s, dir).select(col("doc_a"), col("doc_b"))
       def isBatch(c: Column) = pmod(c, lit(5L)) === 0
-      val tmp = s"/root/repo/target/tmp/ccbase-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("ccbase", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:ccbase,simhash,mod5!=0",
           Seq(s"$dir/documents.parquet")) {
         graft.operators.GraphOps.connectedComponents(

@@ -73,37 +73,25 @@ object EventQueries {
     "q_stream_enrich" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_enrich-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_enrich", dir)
       val median = ev
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
         .head().getLong(0)
       val cust = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("val_cents", cents(col("value")))
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("val_cents")).as("val_sum_cents"))
-      val qn = s"q_stream_enrich_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).orderBy("c_mktsegment", "event_type")
+      g.replay(s)(stream.writeStream.outputMode("complete")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"))
+      s.table(g.sink).orderBy("c_mktsegment", "event_type")
     },
 
     // Peak concurrent sessions per hour (EventOps.peakConcurrency) over the
@@ -211,15 +199,7 @@ object EventQueries {
       import s.implicits._
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sess-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_sess", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -232,7 +212,7 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit("click").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
@@ -240,25 +220,18 @@ object EventQueries {
         .select(col("user_id"), col("event_id"), col("ts_us"),
           col("val_cents"), col("ts_t"))
         .as[graft.streaming.StreamingOps.Ev]
-      val qn = s"q_stream_sessions_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.sessionize(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
+      g.replay(s)(graft.streaming.StreamingOps.sessionize(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink).where(col("user_id") >= 0)
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"), col("val_sum"))
         .orderBy("user_id", "sess_start_us")
@@ -275,14 +248,7 @@ object EventQueries {
     "q_stream_session_window" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sessw-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_sessw", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -295,7 +261,7 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit("click").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val agg = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val agg = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
@@ -315,24 +281,17 @@ object EventQueries {
           (sum(col("val_cents")).cast("double") / lit(100.0)).as("val_sum"))
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"), col("val_sum"))
-      val qn = s"q_stream_session_window_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
+      g.replay(s)(agg.writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink).where(col("user_id") >= 0)
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"), col("val_sum"))
         .orderBy("user_id", "sess_start_us")
@@ -350,14 +309,7 @@ object EventQueries {
       import s.implicits._
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_topk-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_topk", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -370,7 +322,7 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit("click").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
         .withWatermark("ts_t", "1 second")
@@ -379,28 +331,21 @@ object EventQueries {
           col("val_cents"), col("ts_t"))
         .as[graft.streaming.StreamingOps.Ev]
       val emitAtMs = maxTs / 1000000L + 60000L
-      val qn = s"q_stream_topk_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        graft.streaming.StreamingOps.withRocksDbState(s) {
-          val q = graft.streaming.StreamingOps
-            .topKPerUser(stream, 3, emitAtMs)
-            .writeStream.outputMode("append")
-            .format("memory").queryName(qn).start()
-          try {
-            ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-            q.processAllAvailable()
-            ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-            q.processAllAvailable()
-            sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
-              .write.parquet(s"$tmp/b3.parquet")
-            q.processAllAvailable()
-            sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
-              .write.parquet(s"$tmp/b4.parquet")
-            q.processAllAvailable()
-          } finally q.stop()
-        }
+      graft.streaming.StreamingOps.withRocksDbState(s) {
+        g.replay(s)(graft.streaming.StreamingOps
+          .topKPerUser(stream, 3, emitAtMs)
+          .writeStream.outputMode("append")
+          .format("memory").queryName(g.sink).start())(
+          () => ev.where(col("ts") <= median)
+            .write.parquet(s"${g.tmp}/b1.parquet"),
+          () => ev.where(col("ts") > median)
+            .write.parquet(s"${g.tmp}/b2.parquet"),
+          () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+            .write.parquet(s"${g.tmp}/b3.parquet"),
+          () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+            .write.parquet(s"${g.tmp}/b4.parquet"))
       }
-      s.table(qn).where(col("user_id") >= 0)
+      s.table(g.sink).where(col("user_id") >= 0)
         .select(col("user_id"), col("rank"), col("val_cents"),
           col("event_id"))
         .orderBy("user_id", "rank")
@@ -418,34 +363,21 @@ object EventQueries {
     "q_stream_attrib" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_attrib-${new java.io.File(dir).getName}")
-      // a real stream runs fresh each call: clear prior batch files
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_attrib", dir)
       val median = ev
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
         .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_attrib_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoin(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      g.replay(s)(graft.streaming.StreamingOps.attributionJoin(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"))
+      s.table(g.sink)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("click_ts_us"))
         .orderBy("event_id", "click_id")
@@ -463,14 +395,7 @@ object EventQueries {
     "q_stream_outer" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_outer-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_outer", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -483,37 +408,30 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(-1L).as("user_id"), lit(typ).as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_outer_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoinOuter(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-              "purchase"))
-            // one writer task -> the pair lands as ONE file: a two-file
-            // sentinel write raced the stream's glob listing and the gate
-            // paid an extra partial micro-batch (~1-1.5 s) when the source
-            // saw the first file alone
-            .coalesce(1)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-              "purchase"))
-            .coalesce(1)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("user_id") >= 0)
+      g.replay(s)(graft.streaming.StreamingOps.attributionJoinOuter(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        () => sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
+          .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
+            "purchase"))
+          // one writer task -> the pair lands as ONE file: a two-file
+          // sentinel write raced the stream's glob listing and the gate
+          // paid an extra partial micro-batch (~1-1.5 s) when the source
+          // saw the first file alone
+          .coalesce(1)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
+          .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
+            "purchase"))
+          .coalesce(1)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink).where(col("user_id") >= 0)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("click_ts_us"))
         .orderBy("event_id", "click_id")
@@ -535,14 +453,7 @@ object EventQueries {
     "q_stream_full_outer" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_fouter-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_fouter", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -555,37 +466,30 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit(typ).as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
-      val qn = s"q_stream_full_outer_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.attributionJoinFullOuter(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-              "purchase"))
-            // one writer task -> the pair lands as ONE file: a two-file
-            // sentinel write raced the stream's glob listing and the gate
-            // paid an extra partial micro-batch (~1-1.5 s) when the source
-            // saw the first file alone
-            .coalesce(1)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-            .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-              "purchase"))
-            .coalesce(1)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn)
+      g.replay(s)(graft.streaming.StreamingOps.attributionJoinFullOuter(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        () => sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
+          .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
+            "purchase"))
+          // one writer task -> the pair lands as ONE file: a two-file
+          // sentinel write raced the stream's glob listing and the gate
+          // paid an extra partial micro-batch (~1-1.5 s) when the source
+          // saw the first file alone
+          .coalesce(1)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
+          .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
+            "purchase"))
+          .coalesce(1)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink)
         .where(coalesce(col("user_id"), col("c_user")) >= 0)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           col("click_id"), col("c_user"), col("click_ts_us"))
@@ -604,14 +508,7 @@ object EventQueries {
     "q_stream_tumbling" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_tumb-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_tumb", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -624,34 +521,27 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
-      val qn = s"q_stream_tumbling_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.tumblingCounts(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          // sentinel offsets must clear (watermark delay 1h + window reach
-          // 1h) from sentinel1 ALONE: every real window must flush during
-          // sentinel2's DATA batch — the engine sessions disable no-data
-          // micro-batches (r21), so no trailing batch runs after b4. At the
-          // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
-          // below the last window's end and its rows never emitted.
-          sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("event_type") =!= "_sentinel")
+      g.replay(s)(graft.streaming.StreamingOps.tumblingCounts(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        // sentinel offsets must clear (watermark delay 1h + window reach
+        // 1h) from sentinel1 ALONE: every real window must flush during
+        // sentinel2's DATA batch — the engine sessions disable no-data
+        // micro-batches (r21), so no trailing batch runs after b4. At the
+        // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
+        // below the last window's end and its rows never emitted.
+        () => sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink).where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))
         .orderBy("ws_us", "event_type")
     },
@@ -666,14 +556,7 @@ object EventQueries {
     "q_stream_sliding" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_slide-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_slide", dir)
       // one aggregation job computes both gate constants (median split
       // point + watermark-sentinel anchor) — two separate .head() actions
       // paid two full scans per gate
@@ -686,34 +569,27 @@ object EventQueries {
         s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
           lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
-      val qn = s"q_stream_sliding_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.slidingCounts(stream)
-          .writeStream.outputMode("append")
-          .format("memory").queryName(qn).start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-          // sentinel offsets must clear (watermark delay 1h + window reach
-          // 1h) from sentinel1 ALONE: every real window must flush during
-          // sentinel2's DATA batch — the engine sessions disable no-data
-          // micro-batches (r21), so no trailing batch runs after b4. At the
-          // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
-          // below the last window's end and its rows never emitted.
-          sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b3.parquet")
-          q.processAllAvailable()
-          sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
-            .write.parquet(s"$tmp/b4.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).where(col("event_type") =!= "_sentinel")
+      g.replay(s)(graft.streaming.StreamingOps.slidingCounts(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(g.sink).start())(
+        () => ev.where(col("ts") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => ev.where(col("ts") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"),
+        // sentinel offsets must clear (watermark delay 1h + window reach
+        // 1h) from sentinel1 ALONE: every real window must flush during
+        // sentinel2's DATA batch — the engine sessions disable no-data
+        // micro-batches (r21), so no trailing batch runs after b4. At the
+        // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
+        // below the last window's end and its rows never emitted.
+        () => sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b3.parquet"),
+        () => sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
+          .write.parquet(s"${g.tmp}/b4.parquet"))
+      s.table(g.sink).where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))
         .orderBy("ws_us", "event_type")
     },
@@ -731,14 +607,7 @@ object EventQueries {
     "q_stream_upsert" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_upsert-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_upsert", dir)
       // Split on the MICROSECOND value (the payload granularity), not raw
       // nanos: two events sharing a ts_us must land in the same batch, or
       // the cross-epoch blind overwrite could pick the wrong side of an
@@ -747,34 +616,28 @@ object EventQueries {
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts div 1000) AS BIGINT)")
         .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/in/*.parquet")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/in/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
       @volatile var prevSnap: Option[String] = None
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            val delta = b.groupBy(col("user_id"))
-              .agg(max_by(concat_ws("|", col("ts_us"), col("val_cents")),
-                struct(col("ts_us"), col("event_id"))).as("last"))
-            val base = prevSnap.map(p => s.read.parquet(p)).getOrElse(
-              s.range(0).select(col("id").as("user_id"), lit("").as("last")))
-            val out = s"$tmp/snap/e$id"
-            graft.operators.KvSink.upsert(base, delta)
-              .write.mode("overwrite").parquet(out)
-            prevSnap = Some(out)
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .start()
-        try {
-          ev.where(expr("ts div 1000") <= median)
-            .write.parquet(s"$tmp/in/b1.parquet")
-          q.processAllAvailable()
-          ev.where(expr("ts div 1000") > median)
-            .write.parquet(s"$tmp/in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      g.replay(s)(stream.writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          val delta = b.groupBy(col("user_id"))
+            .agg(max_by(concat_ws("|", col("ts_us"), col("val_cents")),
+              struct(col("ts_us"), col("event_id"))).as("last"))
+          val base = prevSnap.map(p => s.read.parquet(p)).getOrElse(
+            s.range(0).select(col("id").as("user_id"), lit("").as("last")))
+          val out = s"${g.tmp}/snap/e$id"
+          graft.operators.KvSink.upsert(base, delta)
+            .write.mode("overwrite").parquet(out)
+          prevSnap = Some(out)
+        }
+        .option("checkpointLocation", s"${g.tmp}/ckpt")
+        .start())(
+        () => ev.where(expr("ts div 1000") <= median)
+          .write.parquet(s"${g.tmp}/in/b1.parquet"),
+        () => ev.where(expr("ts div 1000") > median)
+          .write.parquet(s"${g.tmp}/in/b2.parquet"))
       s.read.parquet(prevSnap.get)
         .select(col("user_id"),
           split(col("last"), "\\|")(0).cast("long").as("last_ts_us"),
@@ -794,34 +657,21 @@ object EventQueries {
     "q_stream_sink" -> { (s, dir) =>
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_sink-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
-      val in = s"$tmp/in"
-      val out = s"$tmp/out"
+      val g = graft.streaming.Gate("stream_sink", dir)
+      val in = s"${g.tmp}/in"
+      val out = s"${g.tmp}/out"
       val median = ev
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)")
         .head().getLong(0)
       val stream = s.readStream.schema(schema).parquet(s"$in/*.parquet")
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = stream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-            graft.streaming.StreamingOps.epochSink(out)(b, id))
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .start()
-        try {
-          ev.where(col("ts") <= median).write.parquet(s"$in/b1.parquet")
-          q.processAllAvailable()
-          ev.where(col("ts") > median).write.parquet(s"$in/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      g.replay(s)(stream.writeStream
+        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+          graft.streaming.StreamingOps.epochSink(out)(b, id))
+        .option("checkpointLocation", s"${g.tmp}/ckpt")
+        .start())(
+        () => ev.where(col("ts") <= median).write.parquet(s"$in/b1.parquet"),
+        () => ev.where(col("ts") > median).write.parquet(s"$in/b2.parquet"))
       def sinkStats() = s.read.parquet(out).drop("epoch")
         .agg(count(lit(1)), sum(cents(col("value")))).head()
       val before = sinkStats()
@@ -975,8 +825,7 @@ object EventQueries {
     // per ingest day; the weekly report merges day-sized partials and never
     // rescans events. Late data re-derives only its day's partial.
     "q_reaggregate" -> { (s, dir) =>
-      val tmp =
-        s"/root/repo/target/tmp/daily_partials-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("daily_partials", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:day,event_type,n,cents",
         inputs = Seq(s"$dir/events.parquet")) {
         events(s, dir)

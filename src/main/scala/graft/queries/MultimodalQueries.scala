@@ -31,8 +31,7 @@ object MultimodalQueries {
   def pgmFilesLayer(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     import s.implicits._
-    val tmp =
-      s"/root/repo/target/tmp/pgm_files-${new java.io.File(dir).getName}"
+    val tmp = Scratch.dir("pgm_files", dir)
     graft.sources.Sinks.ensureDir(s, tmp, "v2:pgm,one file per 5th doc",
       inputs = Seq(s"$dir/documents.parquet")) {
       new java.io.File(tmp).mkdirs()

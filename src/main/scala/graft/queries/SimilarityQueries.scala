@@ -160,12 +160,7 @@ object SimilarityQueries {
     "sim_ann_incr" -> { (s, dir) =>
       import s.implicits._
       val v = vecs(s, dir)
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks
-          .fingerprint(s, s"$dir/embeddings.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
-      val base = s"/root/repo/target/tmp/ivfincr-$sfN-$fp"
+      val base = Scratch.tagged(s, "ivfincr", dir, "embeddings")
       val inputs = Seq(s"$dir/embeddings.parquet")
       // the base corpus is vec_id % 5 <> 4; the two append batches are
       // vec_id % 10 = 4 and = 9 (disjoint, exactly the complement)
@@ -229,14 +224,10 @@ object SimilarityQueries {
     "q_stream_ann" -> { (s, dir) =>
       import s.implicits._
       val v = vecs(s, dir)
-      val sfN = new java.io.File(dir).getName
-      val fp = java.security.MessageDigest.getInstance("MD5")
-        .digest(graft.sources.Sinks
-          .fingerprint(s, s"$dir/embeddings.parquet")
-          .getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(10)
+      val fp = Scratch.tag(s, s"$dir/embeddings.parquet")
       // shared write-once layers with sim_ann_incr (identical builders)
-      val base = s"/root/repo/target/tmp/ivfincr-$sfN-$fp"
-      val annBase = s"/root/repo/target/tmp/streamann-$sfN-$fp"
+      val base = s"${Scratch.dir("ivfincr", dir)}-$fp"
+      val annBase = s"${Scratch.dir("streamann", dir)}-$fp"
       val inputs = Seq(s"$dir/embeddings.parquet")
       def batch(m: Int) = v.where(pmod(col("vec_id"), lit(10L)) === m)
       graft.sources.Sinks.ensureDir(s, s"$base/cents", "v1:ivf_cents",
@@ -297,11 +288,7 @@ object SimilarityQueries {
           s"index must hold exactly the streamed assignments " +
             s"($nIdx != $nBatches) — a dropped or double-folded epoch")
         idx.write.mode("overwrite").parquet(s"$annBase/stream_asg")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(tmp)
+        Scratch.rm(tmp)
       }
       val assigned = s.read.parquet(s"$base/asg_base")
         .unionByName(s.read.parquet(s"$annBase/stream_asg"))

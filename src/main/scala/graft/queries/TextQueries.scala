@@ -49,32 +49,20 @@ object TextQueries {
     "q_stream_wordcount" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val schema = docs.schema
-      val tmp = new java.io.File(
-        s"/root/repo/target/tmp/stream_wc-${new java.io.File(dir).getName}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      if (tmp.exists) rm(tmp)
-      tmp.mkdirs()
+      val g = graft.streaming.Gate("stream_wc", dir)
       val median = docs
         .selectExpr(
           "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY doc_id) AS BIGINT)")
         .head().getLong(0)
-      val stream = s.readStream.schema(schema).parquet(s"$tmp/*.parquet")
-      val qn = s"q_stream_wordcount_${System.nanoTime()}"
-      graft.streaming.StreamingOps.withStreamShuffle(s) {
-        val q = graft.streaming.StreamingOps.wordcountStream(stream)
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(qn).start()
-        try {
-          docs.where(col("doc_id") <= median).write.parquet(s"$tmp/b1.parquet")
-          q.processAllAvailable()
-          docs.where(col("doc_id") > median).write.parquet(s"$tmp/b2.parquet")
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(qn).select(col("word"), col("cnt")).orderBy("word")
+      val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
+      g.replay(s)(graft.streaming.StreamingOps.wordcountStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName(g.sink).start())(
+        () => docs.where(col("doc_id") <= median)
+          .write.parquet(s"${g.tmp}/b1.parquet"),
+        () => docs.where(col("doc_id") > median)
+          .write.parquet(s"${g.tmp}/b2.parquet"))
+      s.table(g.sink).select(col("word"), col("cnt")).orderBy("word")
     },
 
     "text_langid" -> { (s, dir) =>
@@ -160,7 +148,7 @@ object TextQueries {
     // is the parquet wordcount SQL: whitespace tokenization is invariant to
     // how the writer splits rows across lines and files.
     "q_text_source" -> { (s, dir) =>
-      val tmp = s"/root/repo/target/tmp/textsrc-${new java.io.File(dir).getName}"
+      val tmp = Scratch.dir("textsrc", dir)
       graft.sources.Sinks.ensureDir(s, tmp, "v1:documents.text,4 parts",
         inputs = Seq(s"$dir/documents.parquet")) {
         Tables(s, dir, "documents").select(col("text"))

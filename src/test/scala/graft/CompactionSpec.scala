@@ -8,13 +8,9 @@ import org.apache.spark.sql.functions._
 class CompactionSpec extends SparkTestBase {
 
   private def freshDirs(tag: String): (String, String) = {
-    val base = s"/root/repo/target/tmp/compaction_spec-$tag"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(): Unit
-    }
+    val base = s"${graft.queries.Scratch.root}compaction_spec-$tag"
     val b = new java.io.File(base)
-    if (b.exists) rm(b)
+    if (b.exists) graft.queries.Scratch.rm(b)
     (s"$base/in", s"$base/out")
   }
 

@@ -19,12 +19,8 @@ class EventsEncodingSpec extends SparkTestBase {
   import graft.functions.Portable._
 
   private lazy val root: String = {
-    val dir = new java.io.File("/root/repo/target/tmp/enc-spec")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(): Unit
-    }
-    if (dir.exists) rm(dir)
+    val dir = new java.io.File(s"${graft.queries.Scratch.root}enc-spec")
+    if (dir.exists) graft.queries.Scratch.rm(dir)
     dir.mkdirs()
     // Representative sample of the real fixture (already canonical nanos
     // long after Tables.apply), small enough to keep the spec fast.

@@ -113,7 +113,7 @@ class PlanQualitySpec extends SparkTestBase {
     // key, the dim filter's values are only known at runtime — DPP turns
     // them into partition filters instead of scanning every partition
     import spark.implicits._
-    val tmp = s"/root/repo/target/tmp/events_part-${new java.io.File(sf).getName}"
+    val tmp = graft.queries.Scratch.dir("events_part", sf)
     SparkEntry.queries("q_partitioned_scan")(spark, sf).collect() // materialize the partitioned copy
     // the dim must be a real source with a runtime filter — a LocalRelation
     // constant-folds the predicate away and DPP sees no selective filter
