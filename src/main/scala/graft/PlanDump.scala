@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for the named queries (or, with
@@ -11,36 +10,11 @@ import java.nio.file.{Files, Paths}
   * "before"). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Bench.sfDir
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANDIR", "plans/r21")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the streaming gates advance watermarks with explicit far-future
-      // sentinel DATA batches (the recipe guarantees every emission happens
-      // on a data batch), so the extra no-data micro-batch Spark plans after
-      // every watermark advance is pure per-gate overhead: disabling it
-      // halved every measured gate in isolation (r21: tumbling 6.12->3.03 s,
-      // sessions 5.76->3.03, topk 8.06->4.30) with bit-identical results
-      // (oracle 261/261 under this conf). Production latency trade-offs
-      // do not apply to bounded gated replays.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables(spark, sfDir, "region").count()
-    graft.queries.AdvancedQueries.warmGraphLayers(spark, sfDir)
-    graft.queries.MultimodalQueries.pgmFilesLayer(spark, sfDir)
-    graft.queries.AdvancedQueries.compactInLayer(spark, sfDir)
-    graft.queries.AdvancedQueries.snapCdfSliceLayer(spark, sfDir): Unit
-    graft.queries.AdvancedQueries.packSliceLayer(spark, sfDir): Unit
-    graft.queries.AdvancedQueries.dynpartBaseLayer(spark, sfDir)
+    val spark = GraftSession()
+    Bench.warmLayers(spark, sfDir)
     val names: Seq[String] =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timer: `runMain graft.QBench q_a q_b ...` times just
   * the named queries (same session config as Bench) against
   * SPARK_GRAFT_SF_DIR. Dev tool for plan iteration — the graded entry point
@@ -17,34 +15,13 @@ object QBench {
       .map(_.toString.toLong).getOrElse(0L)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the streaming gates advance watermarks with explicit far-future
-      // sentinel DATA batches (the recipe guarantees every emission happens
-      // on a data batch), so the extra no-data micro-batch Spark plans after
-      // every watermark advance is pure per-gate overhead: disabling it
-      // halved every measured gate in isolation (r21: tumbling 6.12->3.03 s,
-      // sessions 5.76->3.03, topk 8.06->4.30) with bit-identical results
-      // (oracle 261/261 under this conf). Production latency trade-offs
-      // do not apply to bounded gated replays.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val sfDir = Bench.sfDir
     // dev-only A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" layers extra
     // session confs for isolated measurements (never set by the driver)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession(extra = extra)
     // SPARK_GRAFT_PROF=1: per-stage metrics, streaming per-batch duration
     // breakdown, and iterative-kernel per-round seconds on stdout. Dev-only
     // measurement plumbing (guide §1/§7) — the driver never sets it.

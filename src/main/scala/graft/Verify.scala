@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet TIMESTAMP(NANOS), which vanilla Spark 4 rejects;
-      // read it as a raw nanos long (queries normalize via `ts div 1000`).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the streaming gates advance watermarks with explicit far-future
-      // sentinel DATA batches (the recipe guarantees every emission happens
-      // on a data batch), so the extra no-data micro-batch Spark plans after
-      // every watermark advance is pure per-gate overhead: disabling it
-      // halved every measured gate in isolation (r21: tumbling 6.12->3.03 s,
-      // sessions 5.76->3.03, topk 8.06->4.30) with bit-identical results
-      // (oracle 261/261 under this conf). Production latency trade-offs
-      // do not apply to bounded gated replays.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 dumps (and lists oracle SQL
     // for) just those queries. The driver never sets it, so the contract

@@ -660,13 +660,10 @@ object GraphOps {
     // would silently lose hash(u) and every sweep would reshuffle the edges
     // — the exact cost this layout exists to avoid (pinned in
     // PlanQualitySpec "pagerank sweep").
-    val ss = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = ss.conf.get(aqeKey)
-    val ed = try {
-      ss.conf.set(aqeKey, "false")
+    val ed = graft.GraftSession.withConf(edges.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false") {
       e.join(deg, "u").repartition(col("u")).localCheckpoint()
-    } finally ss.conf.set(aqeKey, aqePrev)
+    }
     pageRankOn(ed, iters, scale)
   }
 
@@ -704,13 +701,10 @@ object GraphOps {
     val ed = ed0.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => ed0
       case _ =>
-        val ss = ed0.sparkSession
-        val aqeKey = "spark.sql.adaptive.enabled"
-        val aqePrev = ss.conf.get(aqeKey)
-        try {
-          ss.conf.set(aqeKey, "false")
+        graft.GraftSession.withConf(ed0.sparkSession,
+            "spark.sql.adaptive.enabled" -> "false") {
           probed("pagerank", -2)(ed0.localCheckpoint())
-        } finally ss.conf.set(aqeKey, aqePrev)
+        }
     }
     // every node appears on the u side (the prepared table holds both
     // orientations), and distinct-over-u folds WITHOUT an exchange when the

@@ -2094,13 +2094,6 @@ object AdvancedQueries {
     "q_dsv2_spj" -> { (s, dir) =>
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      // partition key (shard) ⊂ join keys (shard, key): subset
-      // co-partitioning is always correct; the conservative default
-      // demands full coverage, so the seam relaxes it
-      s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
       val dirA = Scratch.dir("orders_kvshard_price", dir)
       val dirB = Scratch.dir("orders_kvshard_cust", dir)
       def sharded(df: DataFrame): DataFrame =
@@ -2122,8 +2115,9 @@ object AdvancedQueries {
           .write.format(fmt).option("shards", n.toString)
           .mode("overwrite").save(dirB)
       }
-      val a = s.read.format(fmt).load(dirA)
-      val b = s.read.format(fmt).load(dirB)
+      val spj = graft.GraftSession.spj(s)
+      val a = spj.read.format(fmt).load(dirA)
+      val b = spj.read.format(fmt).load(dirB)
         .select(col("key"), col("shard"), col("value").as("custkey"))
       val j = a.join(b.hint("merge"), Seq("shard", "key"))
       val plan = j.queryExecution.executedPlan.toString
@@ -2159,10 +2153,6 @@ object AdvancedQueries {
     "q_dsv2_sorted" -> { (s, dir) =>
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
       val dirA = Scratch.dir("orders_kvsorted_price", dir)
       val dirB = Scratch.dir("orders_kvsorted_day", dir)
       def sortedSharded(df: DataFrame): DataFrame =
@@ -2186,8 +2176,9 @@ object AdvancedQueries {
           .write.format(fmt).option("shards", n.toString)
           .mode("overwrite").save(dirB)
       }
-      val a = s.read.format(fmt).load(dirA)
-      val b = s.read.format(fmt).load(dirB)
+      val spj = graft.GraftSession.spj(s)
+      val a = spj.read.format(fmt).load(dirA)
+      val b = spj.read.format(fmt).load(dirB)
         .select(col("key"), col("shard"), col("value").as("custkey"))
       val j = a.join(b.hint("merge"), Seq("shard", "key"))
       val plan = j.queryExecution.executedPlan.toString
@@ -2222,10 +2213,6 @@ object AdvancedQueries {
     "q_dsv2_spj_agg" -> { (s, dir) =>
       val fmt = classOf[graft.sources.KvTextSource].getName
       val n = 8
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
       val dirA = Scratch.dir("orders_kvsorted_price", dir)
       graft.sources.Sinks.ensureDir(s, dirA, "v1:orders,kvsorted/price",
         inputs = Seq(s"$dir/orders.parquet")) {
@@ -2239,7 +2226,7 @@ object AdvancedQueries {
           .write.format(fmt).option("shards", n.toString)
           .mode("overwrite").save(dirA)
       }
-      val perKey = s.read.format(fmt).load(dirA)
+      val perKey = graft.GraftSession.spj(s).read.format(fmt).load(dirA)
         .groupBy(col("shard"), col("key"))
         .agg(sum(col("value")).as("cents"))
       val plan = perKey.queryExecution.executedPlan.toString
@@ -2358,12 +2345,9 @@ object AdvancedQueries {
       // half-corrected but still marked fresh
       graft.sources.Sinks.withInvalidated(s, base, "v1:orders,mon",
         inputs = Seq(s"$dir/orders.parquet")) {
-        val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
-          df.where(col("mon").between("1996-01", "1996-06"))
-            .write.partitionBy("mon").mode("overwrite").parquet(base)
-        finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        df.where(col("mon").between("1996-01", "1996-06"))
+          .write.option("partitionOverwriteMode", "dynamic")
+          .partitionBy("mon").mode("overwrite").parquet(base)
       }
       s.read.parquet(base)
         .groupBy(col("mon"))

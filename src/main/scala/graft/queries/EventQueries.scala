@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Portable._
+import graft.streaming.Gate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -200,18 +201,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_sess", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -227,9 +217,9 @@ object EventQueries {
           .write.parquet(s"${g.tmp}/b1.parquet"),
         () => ev.where(col("ts") > median)
           .write.parquet(s"${g.tmp}/b2.parquet"),
-        () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -1L, maxTs + Gate.hourNs, -1L, "click")
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -2L, maxTs + 2 * Gate.hourNs, -2L, "click")
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink).where(col("user_id") >= 0)
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
@@ -249,18 +239,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_sessw", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val agg = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -287,9 +266,9 @@ object EventQueries {
           .write.parquet(s"${g.tmp}/b1.parquet"),
         () => ev.where(col("ts") > median)
           .write.parquet(s"${g.tmp}/b2.parquet"),
-        () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -1L, maxTs + Gate.hourNs, -1L, "click")
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -2L, maxTs + 2 * Gate.hourNs, -2L, "click")
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink).where(col("user_id") >= 0)
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
@@ -310,18 +289,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_topk", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("ts_t", timestamp_micros(col("ts_us")))
@@ -340,9 +308,9 @@ object EventQueries {
             .write.parquet(s"${g.tmp}/b1.parquet"),
           () => ev.where(col("ts") > median)
             .write.parquet(s"${g.tmp}/b2.parquet"),
-          () => sentinel(-1L, maxTs + 3600L * 1000 * 1000 * 1000)
+          () => Gate.sentinel(s, -1L, maxTs + Gate.hourNs, -1L, "click")
             .write.parquet(s"${g.tmp}/b3.parquet"),
-          () => sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000)
+          () => Gate.sentinel(s, -2L, maxTs + 2 * Gate.hourNs, -2L, "click")
             .write.parquet(s"${g.tmp}/b4.parquet"))
       }
       s.table(g.sink).where(col("user_id") >= 0)
@@ -396,18 +364,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_outer", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long, typ: String) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(-1L).as("user_id"), lit(typ).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
       g.replay(s)(graft.streaming.StreamingOps.attributionJoinOuter(stream)
@@ -417,18 +374,16 @@ object EventQueries {
           .write.parquet(s"${g.tmp}/b1.parquet"),
         () => ev.where(col("ts") > median)
           .write.parquet(s"${g.tmp}/b2.parquet"),
-        () => sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-          .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-            "purchase"))
+        () => Gate.sentinel(s, -1L, maxTs + 2 * Gate.hourNs, -1L, "click")
+          .union(Gate.sentinel(s, -2L, maxTs + 2 * Gate.hourNs, -1L, "purchase"))
           // one writer task -> the pair lands as ONE file: a two-file
           // sentinel write raced the stream's glob listing and the gate
           // paid an extra partial micro-batch (~1-1.5 s) when the source
           // saw the first file alone
           .coalesce(1)
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-          .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-            "purchase"))
+        () => Gate.sentinel(s, -3L, maxTs + 4 * Gate.hourNs, -1L, "click")
+          .union(Gate.sentinel(s, -4L, maxTs + 4 * Gate.hourNs, -1L, "purchase"))
           .coalesce(1)
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink).where(col("user_id") >= 0)
@@ -454,18 +409,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_fouter", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long, typ: String) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit(typ).as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
       g.replay(s)(graft.streaming.StreamingOps.attributionJoinFullOuter(stream)
@@ -475,18 +419,16 @@ object EventQueries {
           .write.parquet(s"${g.tmp}/b1.parquet"),
         () => ev.where(col("ts") > median)
           .write.parquet(s"${g.tmp}/b2.parquet"),
-        () => sentinel(-1L, maxTs + 7200L * 1000 * 1000 * 1000, "click")
-          .union(sentinel(-2L, maxTs + 7200L * 1000 * 1000 * 1000,
-            "purchase"))
+        () => Gate.sentinel(s, -1L, maxTs + 2 * Gate.hourNs, -1L, "click")
+          .union(Gate.sentinel(s, -2L, maxTs + 2 * Gate.hourNs, -2L, "purchase"))
           // one writer task -> the pair lands as ONE file: a two-file
           // sentinel write raced the stream's glob listing and the gate
           // paid an extra partial micro-batch (~1-1.5 s) when the source
           // saw the first file alone
           .coalesce(1)
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-3L, maxTs + 14400L * 1000 * 1000 * 1000, "click")
-          .union(sentinel(-4L, maxTs + 14400L * 1000 * 1000 * 1000,
-            "purchase"))
+        () => Gate.sentinel(s, -3L, maxTs + 4 * Gate.hourNs, -3L, "click")
+          .union(Gate.sentinel(s, -4L, maxTs + 4 * Gate.hourNs, -4L, "purchase"))
           .coalesce(1)
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink)
@@ -509,18 +451,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_tumb", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
@@ -537,9 +468,9 @@ object EventQueries {
         // micro-batches (r21), so no trailing batch runs after b4. At the
         // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
         // below the last window's end and its rows never emitted.
-        () => sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -1L, maxTs + 3 * Gate.hourNs, -1L, "_sentinel")
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -2L, maxTs + 6 * Gate.hourNs, -2L, "_sentinel")
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink).where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))
@@ -557,18 +488,7 @@ object EventQueries {
       val ev = Tables(s, dir, "events")
       val schema = ev.schema
       val g = graft.streaming.Gate("stream_slide", dir)
-      // one aggregation job computes both gate constants (median split
-      // point + watermark-sentinel anchor) — two separate .head() actions
-      // paid two full scans per gate
-      val mm = ev.selectExpr(
-        "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
-        "max(ts)").head()
-      val median = mm.getLong(0)
-      val maxTs = mm.getLong(1)
-      def sentinel(uid: Long, ts: Long) =
-        s.range(1).select(lit(uid).as("event_id"), lit(ts).as("ts"),
-          lit(uid).as("user_id"), lit("_sentinel").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
+      val (median, maxTs) = Gate.medianAndMax(ev)
       val stream = s.readStream.schema(schema).parquet(s"${g.tmp}/*.parquet")
         .withColumn("ts_us", expr("ts div 1000"))
         .withColumn("val_cents", cents(col("value")))
@@ -585,9 +505,9 @@ object EventQueries {
         // micro-batches (r21), so no trailing batch runs after b4. At the
         // old +1h/+2h, b4's watermark (= sentinel1 − delay = maxTs) sat
         // below the last window's end and its rows never emitted.
-        () => sentinel(-1L, maxTs + 3 * 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -1L, maxTs + 3 * Gate.hourNs, -1L, "_sentinel")
           .write.parquet(s"${g.tmp}/b3.parquet"),
-        () => sentinel(-2L, maxTs + 6 * 3600L * 1000 * 1000 * 1000)
+        () => Gate.sentinel(s, -2L, maxTs + 6 * Gate.hourNs, -2L, "_sentinel")
           .write.parquet(s"${g.tmp}/b4.parquet"))
       s.table(g.sink).where(col("event_type") =!= "_sentinel")
         .select(col("ws_us"), col("event_type"), col("n"), col("val_sum"))

@@ -201,14 +201,12 @@ object Sinks {
       // partitioning (measured: 16 tasks × 32 buckets = 512 files instead
       // of 32). V1 bucketed writes declare no required distribution, so
       // only a static plan guarantees the one-file-per-bucket layout.
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val aqePrev = spark.conf.get(aqeKey)
-      try {
-        spark.conf.set(aqeKey, "false")
+      graft.GraftSession.withConf(spark,
+          "spark.sql.adaptive.enabled" -> "false") {
         df.repartition(nBuckets, org.apache.spark.sql.functions.col(key))
           .write.bucketBy(nBuckets, key).sortBy(key)
           .mode("overwrite").saveAsTable(table)
-      } finally spark.conf.set(aqeKey, aqePrev)
+      }
       writeSidecar(fs, specFile, spec)
     }
   }

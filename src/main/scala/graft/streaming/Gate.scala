@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** One replay of a driver-gated streaming query: a fresh scratch dir the
@@ -42,4 +43,27 @@ object Gate {
   def apply(name: String, sfDir: String): Gate =
     new Gate(graft.queries.Scratch.fresh(name, sfDir),
       s"${name}_${System.nanoTime()}")
+
+  /** The median and the max of `ev`'s `ts` — the split point between the
+    * two data feeds and the sentinel anchor — from ONE aggregation job (two
+    * separate `.head()` actions paid two full scans per gate). */
+  def medianAndMax(ev: DataFrame): (Long, Long) = {
+    val mm = ev.selectExpr(
+      "CAST(percentile_cont(0.5) WITHIN GROUP (ORDER BY ts) AS BIGINT)",
+      "max(ts)").head()
+    (mm.getLong(0), mm.getLong(1))
+  }
+
+  /** One hour in `ts` units (nanoseconds), for sentinel offsets. */
+  val hourNs: Long = 3600L * 1000 * 1000 * 1000
+
+  /** One sentinel row in the events schema (`value` 0.0, `props` "{}"):
+    * the far-future watermark feed the class doc describes. Gates filter
+    * sentinels from their output by a negative `id`/`user` or by
+    * `eventType`. */
+  def sentinel(s: SparkSession, id: Long, ts: Long, user: Long,
+      eventType: String): DataFrame =
+    s.range(1).select(lit(id).as("event_id"), lit(ts).as("ts"),
+      lit(user).as("user_id"), lit(eventType).as("event_type"),
+      lit(0.0).as("value"), lit("{}").as("props"))
 }

@@ -334,8 +334,6 @@ object StreamingOps {
     }
   }
 
-  /** transformWithState needs the RocksDB state store; scope the provider
-    * to the gated execution like [[withStreamShuffle]] scopes partitions. */
   case class PackDoc(shard: Int, doc_id: Long, n: Long)
   case class PackState(lastId: Long, off: Long)
   case class PackedDoc(shard: Int, doc_id: Long, off: Long, n: Long)
@@ -383,17 +381,12 @@ object StreamingOps {
       }
   }
 
-  def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  /** transformWithState needs the RocksDB state store; scope the provider
+    * to the gated execution like [[withStreamShuffle]] scopes partitions. */
+  def withRocksDbState[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(s,
+      "spark.sql.streaming.stateStore.providerClass" -> ("org.apache.spark." +
+        "sql.execution.streaming.state.RocksDBStateStoreProvider"))(body)
 
   def topKPerUser(events: Dataset[Ev], k: Int,
       emitAtMs: Long): Dataset[TopKOut] = {
@@ -424,11 +417,9 @@ object StreamingOps {
     * per-execution runtime conf, so the gate sets it for the stream's
     * lifetime and restores the session value after. Results are
     * partition-count-invariant (PipelineInvarianceSpec). */
-  def withStreamShuffle[T](s: SparkSession, parts: Int = 8)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def withStreamShuffle[T](s: SparkSession, parts: Int = 8)(body: => T): T =
+    graft.GraftSession.withConf(s,
+      "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Bounded parquet dir → streaming DataFrame with the events schema
     * normalized the same way as the batch path (nanos long → micros). */

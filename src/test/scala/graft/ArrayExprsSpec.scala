@@ -23,18 +23,17 @@ class ArrayExprsSpec extends SparkTestBase {
 
   test("codegen path equals interpreted eval path") {
     // force the interpreted path by disabling whole-stage codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df.select(ArrayExprs.dot($"a", $"b")).as[Long].collect().toSeq
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      val gen = df.select(ArrayExprs.dot($"a", $"b")).as[Long].collect().toSeq
-      assert(interp == gen)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    val interp = GraftSession.withConf(spark,
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      df.select(ArrayExprs.dot($"a", $"b")).as[Long].collect().toSeq
     }
+    val gen = GraftSession.withConf(spark,
+        "spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "FALLBACK") {
+      df.select(ArrayExprs.dot($"a", $"b")).as[Long].collect().toSeq
+    }
+    assert(interp == gen)
   }
 
   test("sorted int intersect size: merge walk on int arrays") {

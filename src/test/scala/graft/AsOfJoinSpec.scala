@@ -58,9 +58,11 @@ class AsOfJoinSpec extends SparkTestBase {
     assert(!opt.substring(asofIdx).contains("isnotnull(click_id"),
       s"right-side filter wrongly pushed:\n$opt")
     // and pushed filters survive to the scan
-    df.collect()
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val phys = df.queryExecution.executedPlan.toString()
+    val phys = GraftSession.withConf(spark,
+        "spark.sql.maxMetadataStringLength" -> "2000") {
+      df.collect()
+      df.queryExecution.executedPlan.toString()
+    }
     assert(phys.contains("LessThan(user_id,10)"),
       s"filter did not reach the parquet scan:\n$phys")
   }

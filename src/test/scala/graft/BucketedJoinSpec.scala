@@ -22,33 +22,32 @@ class BucketedJoinSpec extends SparkTestBase {
       Tables(spark, sf, "lineitem")
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("lineitem_b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      val joined = spark.table("lineitem_b")
-        .join(spark.table("orders_b"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-      val result = joined.collect()
-      val p = joined.queryExecution.executedPlan.toString()
-      // co-located: no Exchange below the join (the only exchange allowed is
-      // the final single-aggregation shuffle on o_orderpriority)
-      assert(p.contains("SortMergeJoin"), s"join strategy changed:\n$p")
-      val joinPart = p.substring(p.indexOf("SortMergeJoin"))
-      assert(!joinPart.contains("Exchange hashpartitioning(l_orderkey")
-        && !joinPart.contains("Exchange hashpartitioning(o_orderkey"),
-        s"bucketed join still shuffles a side:\n$p")
-      // cross-check the result against the plain parquet join
-      val want = Tables(spark, sf, "lineitem")
-        .join(Tables(spark, sf, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(result.map(_.toString).sorted.toSeq == want)
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.sources.v2.bucketing.enabled" -> "true") {
+        val joined = spark.table("lineitem_b")
+          .join(spark.table("orders_b"),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n"))
+        val result = joined.collect()
+        val p = joined.queryExecution.executedPlan.toString()
+        // co-located: no Exchange below the join (the only exchange allowed is
+        // the final single-aggregation shuffle on o_orderpriority)
+        assert(p.contains("SortMergeJoin"), s"join strategy changed:\n$p")
+        val joinPart = p.substring(p.indexOf("SortMergeJoin"))
+        assert(!joinPart.contains("Exchange hashpartitioning(l_orderkey")
+          && !joinPart.contains("Exchange hashpartitioning(o_orderkey"),
+          s"bucketed join still shuffles a side:\n$p")
+        // cross-check the result against the plain parquet join
+        val want = Tables(spark, sf, "lineitem")
+          .join(Tables(spark, sf, "orders"),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n"))
+          .collect().map(_.toString).sorted.toSeq
+        assert(result.map(_.toString).sorted.toSeq == want)
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
@@ -69,16 +68,15 @@ class BucketedJoinSpec extends SparkTestBase {
       // autoBucketedScan drops the bucketed layout (and with it pruning)
       // for scans with no join/agg to co-locate — the point-lookup case is
       // exactly where pruning pays, so pin it on
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
-      val q = spark.table("orders_bp").where(col("o_orderkey") === key)
-      assert(q.count() >= 1)
-      val p = q.queryExecution.executedPlan.toString()
-      assert(p.contains("SelectedBucketsCount: 1 out of 8"),
-        s"bucket pruning did not engage:\n$p")
+      GraftSession.withConf(spark,
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
+        val q = spark.table("orders_bp").where(col("o_orderkey") === key)
+        assert(q.count() >= 1)
+        val p = q.queryExecution.executedPlan.toString()
+        assert(p.contains("SelectedBucketsCount: 1 out of 8"),
+          s"bucket pruning did not engage:\n$p")
+      }
     } finally {
-      spark.conf
-        .unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
       spark.sql("DROP TABLE IF EXISTS orders_bp")
     }
   }
@@ -109,26 +107,26 @@ class BucketedJoinSpec extends SparkTestBase {
         Tables(spark, sf, "orders"), "o_orderkey", 8)
       graft.sources.Sinks.ensureBucketedTable(spark, "lineitem_rb2",
         Tables(spark, sf, "lineitem"), "l_orderkey", 8)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("lineitem_rb2")
-        .join(spark.table("orders_rb2"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-      val got = joined.collect().map(_.toString).sorted.toSeq
-      val p = joined.queryExecution.executedPlan.toString()
-      assert(p.contains("SortMergeJoin"), s"join strategy changed:\n$p")
-      val joinPart = p.substring(p.indexOf("SortMergeJoin"))
-      assert(!joinPart.contains("Exchange hashpartitioning(l_orderkey")
-        && !joinPart.contains("Exchange hashpartitioning(o_orderkey"),
-        s"re-registered bucketed join shuffles a side:\n$p")
-      val want = spark.table("lineitem_rb")
-        .join(spark.table("orders_rb"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == want)
+      GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = spark.table("lineitem_rb2")
+          .join(spark.table("orders_rb2"), col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n"))
+        val got = joined.collect().map(_.toString).sorted.toSeq
+        val p = joined.queryExecution.executedPlan.toString()
+        assert(p.contains("SortMergeJoin"), s"join strategy changed:\n$p")
+        val joinPart = p.substring(p.indexOf("SortMergeJoin"))
+        assert(!joinPart.contains("Exchange hashpartitioning(l_orderkey")
+          && !joinPart.contains("Exchange hashpartitioning(o_orderkey"),
+          s"re-registered bucketed join shuffles a side:\n$p")
+        val want = spark.table("lineitem_rb")
+          .join(spark.table("orders_rb"), col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n"))
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == want)
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       names.foreach { t => spark.sql(s"DROP TABLE IF EXISTS $t")
         fs.delete(new Path(wh, t), true) }
     }

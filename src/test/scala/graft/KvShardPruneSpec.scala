@@ -113,32 +113,30 @@ class KvShardPruneSpec extends SparkTestBase {
 
   test("a pruned side still joins storage-partitioned with zero exchanges") {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    val (dirA, dirB) = (freshDir(), freshDir())
-    val n = 4
-    val rowsA = (0 until 200).map(i => (s"k$i", i.toLong))
-    writeSharded(dirA, n, rowsA)
-    writeSharded(dirB, n, rowsA.map { case (k, v) => (k, v * 10) })
-    val a = spark.read.format(fmt).load(dirA).where(col("shard") === 1)
-    val b = spark.read.format(fmt).load(dirB)
-      .select(col("key"), col("shard"), col("value").as("vb"))
-    val j = a.join(b.hint("merge"), Seq("shard", "key"))
-    val plan = j.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(!plan.contains("Exchange"),
-      s"pruned sharded join planned a shuffle:\n$plan")
-    val got = j.select("key", "value", "vb").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val want = rowsA.toDF("key", "value")
-      .select(col("key"), pmod(hash(col("key")), lit(n)).as("s"),
-        col("value"))
-      .collect().filter(_.getInt(1) == 1)
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(2) * 10))
-      .sorted.toSeq
-    assert(got == want, "pruned SPJ lost or invented rows")
+    GraftSession.withConf(spark, GraftSession.spjConfs: _*) {
+      val (dirA, dirB) = (freshDir(), freshDir())
+      val n = 4
+      val rowsA = (0 until 200).map(i => (s"k$i", i.toLong))
+      writeSharded(dirA, n, rowsA)
+      writeSharded(dirB, n, rowsA.map { case (k, v) => (k, v * 10) })
+      val a = spark.read.format(fmt).load(dirA).where(col("shard") === 1)
+      val b = spark.read.format(fmt).load(dirB)
+        .select(col("key"), col("shard"), col("value").as("vb"))
+      val j = a.join(b.hint("merge"), Seq("shard", "key"))
+      val plan = j.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      assert(!plan.contains("Exchange"),
+        s"pruned sharded join planned a shuffle:\n$plan")
+      val got = j.select("key", "value", "vb").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      val want = rowsA.toDF("key", "value")
+        .select(col("key"), pmod(hash(col("key")), lit(n)).as("s"),
+          col("value"))
+        .collect().filter(_.getInt(1) == 1)
+        .map(r => (r.getString(0), r.getLong(2), r.getLong(2) * 10))
+        .sorted.toSeq
+      assert(got == want, "pruned SPJ lost or invented rows")
+    }
   }
 
   test("the streaming path refuses a shard filter loudly") {

@@ -13,9 +13,15 @@ import org.apache.spark.sql.functions._
   */
 class PlanQualitySpec extends SparkTestBase {
 
-  /** Final (post-AQE) physical plan, with untruncated scan metadata. */
+  // scan nodes fix their metadata length when planned: every plan this
+  // suite inspects is planned with untruncated scan metadata
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    GraftSession.withConf(spark, "spark.sql.maxMetadataStringLength" -> "2000") {
+      super.withFixture(test)
+    }
+
+  /** Final (post-AQE) physical plan. */
   private def planOf(df: DataFrame): String = {
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     df.collect()
     df.queryExecution.executedPlan.toString()
   }
@@ -214,11 +220,10 @@ class PlanQualitySpec extends SparkTestBase {
     import spark.implicits._
     // checkpoint with AQE off, exactly as the operator does — an adaptive
     // physical plan hands the checkpoint UnknownPartitioning
-    val ed = try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val ed = GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       (1L to 1000L).map(i => (i % 50, i % 97, 3L)).toDF("u", "v", "d")
         .repartition(col("u")).localCheckpoint()
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val r = (0L until 50L).map(i => (i, 1000000L)).toDF("node", "rnk")
     val sweep = ed.join(r.hint("SHUFFLE_HASH"), ed("u") === r("node"))
       .groupBy(col("v")).agg(sum(expr("rnk DIV d")).as("s"))

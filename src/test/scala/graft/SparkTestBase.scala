@@ -1,33 +1,48 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run: the engine's confs on
+  * `local[4]` with 8 shuffle partitions, keeping Spark's default no-data
+  * micro-batches (see [[GraftSession]]). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession(cores = "4", partitions = "8", noDataMicroBatches = true)
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Keys whose value differs between two `spark.conf.getAll` snapshots,
+    * catalog registrations (`spark.sql.catalog.*`) excepted. */
+  def confChanged(before: Map[String, String],
+      after: Map[String, String]): Seq[String] =
+    (before.keySet ++ after.keySet).toSeq.sorted
+      .filter(k => !k.startsWith("spark.sql.catalog.") &&
+        before.get(k) != after.get(k))
 }
 
-trait SparkTestBase extends AnyFunSuite {
+/** Fails the suite in `afterAll` when it leaves the shared session's conf
+  * changed: a later suite would otherwise plan under it. */
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
 
-  /** Run `body` under a specific shuffle-partition count, restoring whatever
-    * value the shared session had before (not a hardcoded constant). */
-  def withShufflePartitions[T](parts: String)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  private var confAtStart: Map[String, String] = Map.empty
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    confAtStart = spark.conf.getAll
   }
+
+  override protected def afterAll(): Unit =
+    try {
+      val changed = SparkTestBase.confChanged(confAtStart, spark.conf.getAll)
+      assert(changed.isEmpty,
+        s"$suiteName left spark.conf changed: ${changed.mkString(", ")}")
+    } finally super.afterAll()
+
+  /** Run `body` under a specific shuffle-partition count. */
+  def withShufflePartitions[T](parts: String)(body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts)(body)
 }

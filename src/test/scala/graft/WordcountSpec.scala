@@ -48,10 +48,8 @@ class WordcountSpec extends SparkTestBase {
   }
 
   test("invariance: identical results under shuffle partitions 1 vs 8") {
-    def run(parts: String): Seq[(String, Long)] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try SparkEntry.queries("wordcount")(spark, sf).as[(String, Long)].collect().toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", "8")
+    def run(parts: String): Seq[(String, Long)] = withShufflePartitions(parts) {
+      SparkEntry.queries("wordcount")(spark, sf).as[(String, Long)].collect().toSeq
     }
     assert(run("1") == run("8"))
   }
