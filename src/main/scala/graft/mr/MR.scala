@@ -1,7 +1,7 @@
 package graft.mr
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** MapReduce-compatibility layer: the reference library's exact API contract
@@ -24,12 +24,16 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * - value order within a key is unspecified, exactly like the reference
   *   (unstable qsort on key only, reference mapreduce.c:69-73).
   *
-  * Scale note: this layer is *semantics parity*, not the performance path —
-  * `flatMapGroups` cannot partial-aggregate map-side, so algebraic reductions
-  * (wordcount!) should use the relational path (`groupBy().count()`), which
-  * Spark turns into partial→final hash aggregation. That asymmetry is the
-  * single biggest win over the reference, which ships one pair per token
-  * occurrence across its shuffle (reference mapreduce.c:75-86).
+  * Combiner: `runSorted` takes an optional associative, commutative
+  * `combiner` (the MapReduce paper's combiner function, Dean & Ghemawat,
+  * OSDI 2004, §4.3). With one, each map task folds its values per key
+  * before the shuffle and ships one record per distinct key, and the
+  * reduce side merges those partials — the reducer still gets one call per
+  * key in ascending key order, but its values are combined partials, the
+  * Hadoop combiner contract. Without one (the default) every emitted pair
+  * crosses the shuffle, exactly as the reference ships one pair per token
+  * occurrence (reference mapreduce.c:75-86). `wordcount` combines, so its
+  * shuffle carries at most one record per (map task, word).
   */
 object MR {
 
@@ -63,13 +67,16 @@ object MR {
 
   /** RDD MR_Run with the reference's full physical contract: user
     * partitioner + per-partition key sort + one reducer call per distinct
-    * key, keys visited in ascending order within each partition. */
+    * key, keys visited in ascending order within each partition. A
+    * `combiner` (associative and commutative) folds values per key on the
+    * map side, so the reducer's values are combined partials. */
   def runSorted[K: Ordering, V, OUT](
       input: RDD[String],
       mapper: String => IterableOnce[(K, V)],
       reducer: (K, Iterator[V]) => IterableOnce[OUT],
       numPartitions: Int,
-      partitioner: (K, Int) => Int)(
+      partitioner: (K, Int) => Int,
+      combiner: Option[(V, V) => V] = None)(
       implicit kt: scala.reflect.ClassTag[K], vt: scala.reflect.ClassTag[V],
       ot: scala.reflect.ClassTag[OUT]): RDD[OUT] = {
     val nParts = math.max(numPartitions, 1)
@@ -78,9 +85,16 @@ object MR {
       override def getPartition(key: Any): Int =
         partitioner(key.asInstanceOf[K], nParts)
     }
-    input
-      .flatMap(mapper(_).iterator)
-      .repartitionAndSortWithinPartitions(part)
+    val pairs = input.flatMap(mapper(_).iterator)
+    val sorted: RDD[(K, V)] = combiner match {
+      case None => pairs.repartitionAndSortWithinPartitions(part)
+      case Some(c) =>
+        new ShuffledRDD[K, V, V](pairs, part)
+          .setAggregator(Aggregator[K, V, V](v => v, c, c))
+          .setMapSideCombine(true)
+          .setKeyOrdering(implicitly[Ordering[K]])
+    }
+    sorted
       .mapPartitions { it =>
         // walk key runs: one reducer call per distinct key, iterator drains
         // exactly the run (the get_next protocol, reference mapreduce.c:57-67)
@@ -106,14 +120,15 @@ object MR {
   }
 
   /** Wordcount client on the MR layer (reference main.c:11-74): tokenize →
-    * emit (word,"1") → count by draining the iterator. */
+    * emit (word, 1) → combine with `+` map-side → sum the partials. */
   def wordcount(spark: SparkSession, lines: Dataset[String],
       numPartitions: Int): Dataset[(String, Long)] = {
     import spark.implicits._
     val mapper = (line: String) =>
-      graft.functions.Portable.tokensJvm(line).iterator.map(w => (w, "1"))
-    val reducer = (k: String, vs: Iterator[String]) => Iterator((k, vs.size.toLong))
+      graft.functions.Portable.tokensJvm(line).iterator.map(w => (w, 1L))
+    val reducer = (k: String, vs: Iterator[Long]) => Iterator((k, vs.sum))
     runSorted(lines.rdd, mapper, reducer, numPartitions,
-      (k: String, n: Int) => defaultHashPartition(k, n)).toDS()
+      (k: String, n: Int) => defaultHashPartition(k, n),
+      Some((a: Long, b: Long) => a + b)).toDS()
   }
 }

@@ -814,7 +814,11 @@ final class KvMicroBatchStream(path: String, filters: Array[Filter],
       case _ => avail // row limits: no counts without reads
     }
     val n = cap(limit)
-    KvStreamOffset(n, if (n == 0) "" else files(n - 1)._1)
+    // nothing claimable and nothing committed: no offset at all, so Spark
+    // plans no batch (the contract's "null if there is no data to
+    // process"); the initial (0, "") would read as new data and run an
+    // empty batch 0
+    if (n == 0) null else KvStreamOffset(n, files(n - 1)._1)
   }
 
   override def reportLatestOffset(): Offset = latestOffset()

@@ -51,6 +51,37 @@ class KvStreamSpec extends SparkTestBase {
     assert(got.agg(sum("value")).head().getLong(0) == 33L)
   }
 
+  test("a query started on an empty dir records no batch until the first " +
+      "file lands") {
+    val in = Files.createTempDirectory("graft-kvs-empty").toString
+    val ckpt = Files.createTempDirectory("graft-kvs-empty-ck").toString
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val q = graft.streaming.StreamingOps.withStreamShuffle(spark) {
+      spark.readStream
+        .format(classOf[graft.sources.KvTextSource].getName)
+        .load(in)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches.add((id, b.count())); ()
+        }
+        .start()
+    }
+    def offsets = Option(new java.io.File(s"$ckpt/offsets").list())
+      .getOrElse(Array.empty[String]).filterNot(_.startsWith(".")).sorted.toSeq
+    try {
+      q.processAllAvailable()
+      assert(batches.isEmpty && offsets.isEmpty,
+        s"an empty dir ran batches $batches, offset log $offsets")
+      writeFile(in, "b0001.txt", Seq(kvLine("a", 1), kvLine("b", 2)))
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(batches.asScala.toSeq == Seq((0L, 2L)),
+      s"the first file must land as batch 0: $batches")
+    assert(offsets == Seq("0"), s"offset log: $offsets")
+  }
+
   test("a file inserted below the claimed frontier fails loudly") {
     val in = Files.createTempDirectory("graft-kvs-bad").toString
     // claim b0002 first; then a late b0001 sorts BELOW the frontier

@@ -44,6 +44,26 @@ class MrPropertySpec extends SparkTestBase {
     })
   }
 
+  test("the combiner path equals the plain path and the relational " +
+      "wordcount at 1..13 partitions") {
+    val mapper = (line: String) =>
+      graft.functions.Portable.tokensJvm(line).iterator.map(w => (w, 1L))
+    val reducer = (k: String, vs: Iterator[Long]) => Iterator((k, vs.sum))
+    val djb2 = (k: String, n: Int) => MR.defaultHashPartition(k, n)
+    check("combiner", Prop.forAll(corpusGen, Gen.chooseNum(1, 13)) {
+      (docs, parts) =>
+        val lines = spark.createDataset(docs)
+        val plain = MR.runSorted(lines.rdd, mapper, reducer, parts, djb2)
+          .collect().toMap
+        val combined = MR.runSorted(lines.rdd, mapper, reducer, parts, djb2,
+          Some((a: Long, b: Long) => a + b)).collect().toMap
+        val relational = graft.operators.TextOps.wordcount(lines.toDF("text"))
+          .as[(String, Long)].collect().toMap
+        combined == plain && combined == relational &&
+          MR.wordcount(spark, lines, parts).collect().toMap == relational
+    })
+  }
+
   test("runSorted with a constant partitioner equals the default partitioner") {
     check("partitioner", Prop.forAll(corpusGen) { docs =>
       val mapper = (line: String) =>

@@ -73,4 +73,38 @@ class MrSpec extends SparkTestBase {
       .collect().toSeq
     assert(calls.sorted == Seq("x", "y"))
   }
+
+  test("with a combiner, keys ascend within each partition and the reducer " +
+      "gets one call per key over combined partials") {
+    // four input partitions, so every key has partials from several maps
+    val lines = spark.sparkContext.parallelize(
+      Seq("d a c b", "b d a a", "c c a e", "e b d a"), 4)
+    val seen = MR.runSorted[String, Long, (Int, String, Long)](
+      lines,
+      l => l.split(" ").iterator.map(w => (w, 1L)),
+      (k, vs) => Iterator((org.apache.spark.TaskContext.getPartitionId(), k,
+        vs.sum)),
+      numPartitions = 2,
+      (k, n) => MR.defaultHashPartition(k, n),
+      combiner = Some(_ + _))
+      .collect().toSeq
+    seen.groupBy(_._1).values.foreach { perPart =>
+      val keys = perPart.map(_._2)
+      assert(keys == keys.sorted, s"keys not sorted within partition: $keys")
+    }
+    assert(seen.map(_._2).sorted == Seq("a", "b", "c", "d", "e"),
+      s"one reducer call per key expected: $seen")
+    assert(seen.map(s => s._2 -> s._3).toMap ==
+      Map("a" -> 5L, "b" -> 3L, "c" -> 3L, "d" -> 3L, "e" -> 2L))
+  }
+
+  test("MR.wordcount ships at most one shuffle record per (map task, word)") {
+    val lines = Tables(spark, sf, "documents").select(col("text")).as[String]
+    val mapParts = lines.rdd.getNumPartitions
+    val (words, _, stages) = jobsOf(MR.wordcount(spark, lines, 5).rdd.count())
+    val written =
+      stages.map(QBench.metric(_, "shuffle.write.recordsWritten")).sum
+    assert(written > 0 && written <= words * mapParts,
+      s"$written shuffle records for $words words over $mapParts maps")
+  }
 }

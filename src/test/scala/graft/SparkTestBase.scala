@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import graft.queries.Scratch
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,6 +47,44 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       assert(changed.isEmpty,
         s"$suiteName left spark.conf changed: ${changed.mkString(", ")}")
     } finally super.afterAll()
+
+  /** Runs `body` under a fresh job group; returns its result, the number
+    * of jobs it started and the completed stages of those jobs. Suites run
+    * in parallel on the shared context, so only this group's jobs count. A
+    * marker job run afterwards flushes the listener bus, which delivers
+    * events in order. */
+  def jobsOf[T](body: => T): (T, Int, Seq[StageInfo]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val marker = s"$group-end"
+    val jobs = new AtomicInteger()
+    val mine = ConcurrentHashMap.newKeySet[Int]()
+    val done = new ConcurrentLinkedQueue[StageInfo]()
+    val markerSeen = new AtomicBoolean()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            j.stageIds.foreach(mine.add)
+          case Some(`marker`) => markerSeen.set(true)
+          case _ =>
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (mine.contains(e.stageInfo.stageId)) done.add(e.stageInfo)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsOf")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "jobsOf marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Scratch.await("listener bus never delivered the marker job")(
+        markerSeen.get)
+      (out, jobs.get, done.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Run `body` under a specific shuffle-partition count. */
   def withShufflePartitions[T](parts: String)(body: => T): T =
