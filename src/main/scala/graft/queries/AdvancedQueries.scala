@@ -2548,7 +2548,7 @@ object AdvancedQueries {
 
     // METADATA-ONLY COUNT (SnapshotTable.countRows — the Iceberg/Delta
     // count-from-metadata fast path): manifests carry OPTIONAL per-dir
-    // row counts (the `rows=` line; ops that already know their counts
+    // row counts (`rowCounts`; ops that already know their counts
     // record them), and a delete-free version whose every dir is counted
     // answers COUNT(*) from the manifest with zero data I/O. The v2 arm
     // is that metadata answer (a wrong stored count hash-fails against
@@ -2611,18 +2611,18 @@ object AdvancedQueries {
       val dst = Scratch.tagged(s, "orders_clone", dir)
       new java.io.File(dst).mkdirs()
       val srcV2 = ST.manifest(s, src, 2)
-      if (ST.headVersion(s, dst) == 0)
-        ST.cloneAt(s, src, 2, dst)
+      val chain = new SqlChain(s, dst)
+      chain.step(0) { ST.cloneAt(s, src, 2, dst) }
       require(ST.manifest(s, dst, 1) == srcV2,
         "a shallow clone must reference EXACTLY the source version's dirs")
-      val chain = new SqlChain(s, dst)
       chain.step(1) {
         val v = ST.deleteWhere(s, dst, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(6)) === 1)
         require(v == 2, s"clone delete landed at v$v, expected v2")
+      }
+      chain.step(2) {
         require(ST.restore(s, dst, 1) == 3, "restore must land at v3")
       }
-      chain.await(3)
       require(ST.headVersion(s, dst) == 3, "head must be the restore")
       require(ST.manifest(s, dst, 3) == ST.manifest(s, dst, 1),
         "restore must resurrect the pre-delete manifest exactly")
@@ -2840,7 +2840,7 @@ object AdvancedQueries {
           .parquet(s"$base/data_v1")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/data_v1"), Nil))
-      if (ST.headVersion(s, base) == 1) {
+      new SqlChain(s, base).step(1) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(7)) === 2)
         require(v == 2, s"delete commit landed at v$v, expected v2")
@@ -2904,13 +2904,14 @@ object AdvancedQueries {
       }
       ST.commit(s, base, 1,
         ST.Snapshot(Seq(s"$base/data_lo", s"$base/data_hi"), Nil))
-      if (ST.headVersion(s, base) == 1) {
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(5)) === 1 &&
             col("o_orderdate") < lit(cut))
         require(v == 2, s"delete commit landed at v$v, expected v2")
       }
-      if (ST.headVersion(s, base) == 2) {
+      chain.step(2) {
         val rep = ST.compact(s, base, "o_orderkey")
         require(rep == ST.CompactReport(3, 1, 1, 1),
           s"compaction must rewrite exactly the hit dir, got $rep")
@@ -2971,7 +2972,7 @@ object AdvancedQueries {
       }
       ST.commit(s, base, 1,
         ST.Snapshot(Seq(s"$base/data_lo", s"$base/data_hi"), Nil))
-      if (ST.headVersion(s, base) == 1) {
+      new SqlChain(s, base).step(1) {
         val rep = ST.updateWhere(s, base,
           pmod(md5Long(col("o_orderkey").cast("string")), lit(6)) === 2 &&
             col("o_orderdate") < lit(cut),
@@ -3030,7 +3031,7 @@ object AdvancedQueries {
       }
       ST.commit(s, base, 1,
         ST.Snapshot(Seq(s"$base/data_lo", s"$base/data_hi"), Nil))
-      if (ST.headVersion(s, base) == 1) {
+      new SqlChain(s, base).step(1) {
         val o = Tables(s, dir, "orders")
         val upd = o.where(
           pmod(md5Long(col("o_orderkey").cast("string")), lit(7)) === 3 &&
@@ -3104,7 +3105,7 @@ object AdvancedQueries {
       val dirs = buckets.map(b => s"$base/data_${b._1}")
       ST.commit(s, base, 1, ST.Snapshot(dirs, Nil,
         ST.computeBounds(s, dirs, "o_orderdate")))
-      if (ST.headVersion(s, base) == 1) {
+      new SqlChain(s, base).step(1) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(8)) === 6)
         require(v == 2, s"delete commit landed at v$v, expected v2")
@@ -3167,11 +3168,16 @@ object AdvancedQueries {
           .write.mode("overwrite").parquet(s"$base/d_late")
       }
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d_early"), Nil))
-      if (ST.headVersion(s, base) == 1) {
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
         require(ST.evolveAddColumns(s, base, "`disc_cents` BIGINT") == 2)
+      }
+      chain.step(2) {
         val s2 = ST.manifest(s, base, 2)
         ST.commit(s, base, 3,
           s2.copy(dataDirs = s2.dataDirs :+ s"$base/d_late"))
+      }
+      chain.step(3) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(9)) === 4)
         require(v == 4, s"delete landed at v$v, expected v4")
@@ -3219,10 +3225,9 @@ object AdvancedQueries {
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/d0"), Nil))
       ST.commit(s, base, 2, ST.Snapshot(Seq(s"$base/d0", s"$base/d1"), Nil))
       // the store's clock is the contract — pin it (idempotent per run)
-      require(new java.io.File(base, "_MANIFEST_v1")
-        .setLastModified(1000000L), "mtime pin failed")
-      require(new java.io.File(base, "_MANIFEST_v2")
-        .setLastModified(2000000L), "mtime pin failed")
+      for (v <- 1 to 2)
+        require(new java.io.File(ST.manifestFile(base, v))
+          .setLastModified(v * 1000000L), "mtime pin failed")
       require(ST.versionAsOf(s, base, 1500000L) == 1,
         "a mid-window timestamp must resolve to the earlier commit")
       require(ST.versionAsOf(s, base, 2000000L) == 2,
@@ -3259,10 +3264,13 @@ object AdvancedQueries {
         }
       val dirs = (0 to 5).map(m => s"$base/d$m")
       ST.commit(s, base, 1, ST.Snapshot(dirs, Nil))
-      if (ST.headVersion(s, base) == 1) {
+      val chain = new SqlChain(s, base)
+      chain.step(1) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(7)) === 2)
         require(v == 2, s"delete landed at v$v, expected v2")
+      }
+      chain.step(2) {
         val rep = ST.optimizeSmallDirs(s, base, Long.MaxValue / 4)
         require(rep == ST.OptimizeReport(3, 6, 0),
           s"six small dirs must pack into one, got $rep")
@@ -3680,7 +3688,7 @@ object AdvancedQueries {
     // TABLE ... PARTITIONED BY (months(d), bucket(8, k)) records the
     // spec in the manifest; the INSERT routes rows into one dir per
     // (month, bucket) tuple in a single partitionBy job (rows never
-    // touch the driver) and stamps each dir's tuple into `partvals=`;
+    // touch the driver) and stamps each dir's tuple into `partVals`;
     // SELECTs map month-range and bucket-point predicates through the
     // transforms to STRUCTURAL dir pruning — require-pinned kept<total
     // on both shapes with ZERO analyze calls (snap.bounds empty), and a
@@ -4135,7 +4143,7 @@ object AdvancedQueries {
       ST.commit(s, base, 1, ST.Snapshot(Seq(s"$base/data_early"), Nil))
       ST.commit(s, base, 2,
         ST.Snapshot(Seq(s"$base/data_early", s"$base/data_late"), Nil))
-      if (ST.headVersion(s, base) == 2) {
+      new SqlChain(s, base).step(2) {
         val v = ST.deleteWhere(s, base, "o_orderkey",
           pmod(md5Long(col("o_orderkey").cast("string")), lit(9)) === 4)
         require(v == 3, s"delete commit landed at v$v, expected v3")

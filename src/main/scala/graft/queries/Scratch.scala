@@ -6,11 +6,16 @@ import org.apache.spark.sql.SparkSession
   * delete that clears them.
   *
   * Every dir sits directly under [[root]] and is named
-  * `<name>-<sf>[-<tag>]`: `<sf>` is the fixture dir's own name (`sf0.01`)
-  * so scales never share state, and `<tag>` is the first 10 hex chars of
-  * the md5 of [[graft.sources.Sinks.fingerprint]] over the dir's input —
-  * a regenerated fixture lands in a fresh dir instead of re-reading
-  * snapshot manifests built from the old one.
+  * `<name>-<sf>-<format>[-<tag>]`:
+  *  - `<sf>` is the fixture dir's own name (`sf0.01`), so scales never
+  *    share state;
+  *  - `<format>` is [[graft.sources.SnapshotTable.MetaFormat]], so a tree
+  *    whose snapshot metadata format changed rebuilds its tables instead
+  *    of misreading manifests written in the old one;
+  *  - `<tag>` is the first 10 hex chars of the md5 of
+  *    [[graft.sources.Sinks.fingerprint]] over the dir's input — a
+  *    regenerated fixture lands in a fresh dir instead of re-reading
+  *    snapshot manifests built from the old one.
   */
 object Scratch {
 
@@ -25,9 +30,9 @@ object Scratch {
   /** The scale name of a fixture dir: `sf0.01` for `.../sf0.01`. */
   def sfName(sfDir: String): String = new java.io.File(sfDir).getName
 
-  /** `<root><name>-<sf>`. */
+  /** `<root><name>-<sf>-<format>`. */
   def dir(name: String, sfDir: String): String =
-    s"$root$name-${sfName(sfDir)}"
+    s"$root$name-${sfName(sfDir)}-${graft.sources.SnapshotTable.MetaFormat}"
 
   /** 10-char md5 tag of the input file's fingerprint. */
   def tag(s: SparkSession, input: String): String =
@@ -35,7 +40,7 @@ object Scratch {
       .digest(graft.sources.Sinks.fingerprint(s, input).getBytes("UTF-8"))
       .map(b => f"${b & 0xff}%02x").mkString.take(10)
 
-  /** `<root><name>-<sf>-<tag of sfDir/table.parquet>`. */
+  /** `<root><name>-<sf>-<format>-<tag of sfDir/table.parquet>`. */
   def tagged(s: SparkSession, name: String, sfDir: String,
       table: String = "orders"): String =
     s"${dir(name, sfDir)}-${tag(s, s"$sfDir/$table.parquet")}"
@@ -46,7 +51,7 @@ object Scratch {
     f.delete(): Unit
   }
 
-  /** An empty `<root><name>-<sf>`: whatever a previous run left there is
+  /** An empty [[dir]]: whatever a previous run left there is
     * deleted first, so a per-run stream or table starts from nothing. */
   def fresh(name: String, sfDir: String): java.io.File = {
     val f = new java.io.File(dir(name, sfDir))

@@ -27,16 +27,11 @@ class SqlChain(s: SparkSession, val base: String) {
 
   def head: Int = SnapshotTable.headVersion(s, base)
 
-  /** Waits until a (possibly concurrent) builder has committed `v`: the
-    * head has reached `v` AND the head manifest reads back whole. A
-    * version's name is visible before its content lands, so a racer that
-    * saw the bare name and read the manifest failed on its missing crc
-    * footer. */
+  /** Waits until a (possibly concurrent) builder has committed `v`. A
+    * manifest is published whole ([[SnapshotTable.commit]]), so once the
+    * head reaches `v` every version up to it reads back complete. */
   def await(v: Int): Unit =
-    Scratch.await(s"snapshot $base stuck below v$v") {
-      val h = head
-      h >= v && scala.util.Try(SnapshotTable.manifest(s, base, h)).isSuccess
-    }
+    Scratch.await(s"snapshot $base stuck below v$v")(head >= v)
 
   /** Commits version `at + 1` with `op` unless the head has passed `at`. */
   def step(at: Int)(op: => Unit): Unit = {
@@ -67,7 +62,7 @@ object SqlChain {
   }
 
   /** The standard orders-derived fixture: root
-    * `<name>-<sf>-<tag of orders>` ([[Scratch.tagged]]), catalog
+    * `<name>-<sf>-<format>-<tag of orders>` ([[Scratch.tagged]]), catalog
     * `<prefix><sf digits><tag>` — Spark caches a catalog instance per
     * NAME with its options, so the name must change whenever the root
     * does. `key` is the table's merge-on-read key column, if it has one. */

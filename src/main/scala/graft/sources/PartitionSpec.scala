@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
   *  - the TABLE declares transforms once (`CREATE TABLE ... PARTITIONED
   *    BY (days(ts), bucket(8, k))`); the spec rides every manifest;
   *  - routed writes land ONE data dir per distinct transform tuple and
-  *    record the tuple per dir in the manifest (`partvals=`), so the
+  *    record the tuple per dir in the manifest (`partVals`), so the
   *    values are structural facts of the layout, not after-the-fact
-  *    statistics like `bounds=`;
+  *    statistics like `bounds`;
   *  - reads map predicates on the SOURCE columns through the transforms
   *    to dir-level pruning: monotone transforms (identity, days, months,
   *    years, truncate) accept range + point edges, bucket accepts point
@@ -22,9 +22,7 @@ import org.apache.spark.sql.types._
   * Value RENDERING is the load-bearing contract: the executor-side SQL
   * expression ([[exprSql]]) and the driver-side literal rendering
   * ([[render]]) must agree byte-for-byte, or pruning silently drops live
-  * dirs. Every rendered charset is delimiter-safe (ISO dates, decimal
-  * ints) except identity/truncate over arbitrary strings, which REFUSE
-  * values holding a manifest delimiter at write time. */
+  * dirs. */
 object PartitionSpec {
 
   /** One declared transform: `fn` ∈ identity|years|months|days|bucket|
@@ -60,32 +58,10 @@ object PartitionSpec {
     }
   }
 
-  /** Manifest token (delimiter-safe by construction). */
-  def encode(f: PartField): String = s"${f.fn}|${f.n}|${f.col}"
-
-  def decode(entry: String): PartField = entry.split("\\|", -1) match {
-    case Array(fn, n, col)
-        if n.nonEmpty && n.forall(_.isDigit) && col.nonEmpty =>
-      PartField(fn, n.toInt, col)
-    case _ => throw new IllegalArgumentException(
-      s"unparseable partition entry '$entry' — manifest damaged or " +
-        "written by a newer format")
-  }
-
   /** Validate a declared field against the table schema at CREATE:
     * unknown column, unsupported (fn, type) pairing, and bad widths all
     * refuse before the table exists. */
   def validate(f: PartField, schema: StructType): Unit = {
-    // the manifest serializes encode(f) under ','/'|'/';'/':' separators
-    // and one line per key — a (backtick-legal) source column NAME
-    // carrying any of those would commit a manifest decode() can no
-    // longer parse, bricking the table AFTER a successful commit (r19
-    // advice). Refuse at declaration time, the only safe place.
-    require(!f.col.exists(ch => ch == ',' || ch == '|' || ch == ';' ||
-      ch == ':' || ch == '\n' || ch == '\r' || ch == '='),
-      s"partition source column name '${f.col}' contains a manifest " +
-        "delimiter (one of , | ; : = or a newline) — rename the column " +
-        "or partition on a different one")
     val field = schema.fields.find(_.name == f.col).getOrElse(
       throw new IllegalArgumentException(
         s"partition transform ${f} references unknown column ${f.col}"))
@@ -271,10 +247,4 @@ object PartitionSpec {
         java.lang.Long.compare(a.toLong, b.toLong)
       case _ => SnapshotTable.utf8Compare(a, b)
     }
-
-  /** Rendered-value safety gate for the two transforms whose output is
-    * an arbitrary substring of user data: a value that would corrupt the
-    * manifest refuses the WRITE (loudly), never mangles the layout. */
-  def delimiterSafe(s: String): Boolean =
-    !s.exists(c => c == '|' || c == ',' || c == '\n' || c == '\r')
 }

@@ -37,7 +37,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     -- publish via CALL snap.system.fast_forward('t', 'wip')
   * }}}
   *
-  * Each table name is a child dir of `root` holding `_MANIFEST_v*` files;
+  * Each table name is a child dir of `root` holding a [[SnapshotTable]];
   * a load resolves the requested version's manifest (head when
   * unqualified, [[SnapshotTable.versionAsOf]] for timestamps — micros from
   * the parser, mtime semantics from the store) and serves it as Spark's
@@ -723,11 +723,6 @@ object SnapshotTableHandle {
       }
     val leaves = walk(pp, spec.size)
     if (leaves.isEmpty) return (Nil, Map.empty, Map.empty)
-    for ((_, vs) <- leaves; v <- vs)
-      require(PartitionSpec.delimiterSafe(v),
-        s"partition value '$v' holds a manifest delimiter — refusing " +
-          "the write (identity/truncate partitioning needs " +
-          "delimiter-safe values)")
     // the commit precondition: every manifest data dir carries _SUCCESS
     for ((leaf, _) <- leaves)
       fs.create(new org.apache.hadoop.fs.Path(leaf, "_SUCCESS"), true)
@@ -898,14 +893,8 @@ object SnapshotTableHandle {
         SnapshotTable.commit(spark, base, head + 1, next)
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") =>
+        case _: SnapshotTable.CommitConflict if attempt < 20 =>
           // lost the version-number race — re-commit onto the winner
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 20 =>
-          // a racer claimed the version file between commit's exists()
-          // probe and its create — the same lost race, surfaced by the
-          // filesystem instead of the content check
       }
     }
     throw new IllegalStateException(

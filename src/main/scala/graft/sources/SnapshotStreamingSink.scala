@@ -100,11 +100,6 @@ final class SnapshotStreamingWrite(base: String, queryId: String,
     // a prior attempt that died between finalize and fold left dirs no
     // manifest references — rebuild them from this attempt's files
     val byTuple = files.groupBy(_.tuple).toSeq.sortBy(_._1.mkString("|"))
-    for (t <- byTuple.flatMap(_._1) if !PartitionSpec.delimiterSafe(t))
-      throw new IllegalArgumentException(
-        s"partition value '$t' holds a manifest delimiter — refusing " +
-          "the epoch (identity/truncate partitioning needs " +
-          "delimiter-safe values)")
     // a 48-bit suffix collision between two tuples in ONE epoch is
     // ~impossible, but silently merging two partitions' rows under one
     // tuple would be wrong-answer territory — refuse loudly instead
@@ -167,11 +162,7 @@ final class SnapshotStreamingWrite(base: String, queryId: String,
             case (d, t, _) if t.nonEmpty => d -> t }))
         return
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: SnapshotTable.CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(

@@ -3,12 +3,14 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, least, lit, when}
+import org.json4s.{JArray, JInt, JLong, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact => json, parse}
 
 /** Snapshot-versioned table: the lakehouse time-travel contract (Iceberg /
   * Delta, distilled to its two load-bearing ideas) on plain parquet dirs.
   *
   * 1. Data files are IMMUTABLE and snapshots are manifests: version N is a
-  *    `_MANIFEST_vN` sidecar naming the data dirs it reads — an append
+  *    `_MANIFEST_vN` document naming the data dirs it reads — an append
   *    snapshot reuses every prior file and adds one delta dir, so committing
   *    v2 costs O(delta), never a table rewrite. At 100 TB this is the only
   *    viable version story: copy-on-write of the base is a full-table I/O
@@ -19,10 +21,13 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, least, lit, whe
   *    versions are unaffected, and [[compact]] folds the delete files in
   *    later (the rewrite half — only dirs holding a deleted key rewrite).
   *
-  * Time travel = read an old manifest. Manifests are written LAST (after
-  * their data dirs' `_SUCCESS` markers exist), so a crashed commit leaves no
-  * manifest and the previous version stays the readable head — the same
-  * commit-protocol shape as the reference sinks in [[Sinks]].
+  * Time travel = read an old manifest. A manifest is one checksummed JSON
+  * document, published LAST (after its data dirs' `_SUCCESS` markers
+  * exist) with a put-if-absent of the complete file ([[publish]]): the
+  * first committer of a version wins, a reader sees either no manifest or
+  * the whole one, and a crashed commit leaves the previous version as the
+  * readable head — Delta's log-store contract. Tags and branch fork
+  * markers are published the same way.
   */
 object SnapshotTable {
 
@@ -56,10 +61,10 @@ object SnapshotTable {
 
   /** `schema`: the table schema AS OF this version, as Spark DDL — set by
     * [[evolveAddColumns]] and carried by every later commit. None (the
-    * pre-evolution default) means "whatever the data dirs agree on",
-    * which keeps pre-evolution manifests byte-identical. Because the
-    * schema lives IN the versioned manifest, time travel reads each
-    * version under ITS OWN schema — the Iceberg/Delta contract.
+    * pre-evolution default) means "whatever the data dirs agree on".
+    * Because the schema lives IN the versioned manifest, time travel
+    * reads each version under ITS OWN schema — the Iceberg/Delta
+    * contract.
     *
     * `renames`: current LOGICAL column name → the PHYSICAL name data
     * files written before the rename carry ([[evolveRenameColumn]] —
@@ -92,11 +97,10 @@ object SnapshotTable {
     *
     * PARTITION SPEC EVOLUTION ([[alterPartitionSpec]] — the Iceberg
     * spec-evolution contract): `partSpecId` names the CURRENT spec
-    * (0 for never-evolved tables, so pre-evolution manifests stay
-    * byte-identical); `partHist` carries RETIRED specs by id; and
-    * `dirSpecIds` pins each tuple-carrying dir written under a retired
-    * spec to that spec's id. A dir with no pin belongs to the current
-    * spec. Tuples are thus always interpreted under the spec that
+    * (0 for never-evolved tables); `partHist` carries RETIRED specs by
+    * id; and `dirSpecIds` pins each tuple-carrying dir written under a
+    * retired spec to that spec's id. A dir with no pin belongs to the
+    * current spec. Tuples are thus always interpreted under the spec that
     * RENDERED them — old dirs keep pruning under their own transforms
     * while new writes route under the new spec, with no data rewrite. */
   final case class Snapshot(dataDirs: Seq[String], deleteDirs: Seq[String],
@@ -149,20 +153,34 @@ object SnapshotTable {
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Version tag of the metadata documents below. Bumped whenever the
+    * bytes of a manifest, ref or fork marker change incompatibly;
+    * [[graft.queries.Scratch.dir]] folds it into every write-once dir
+    * name, so tables written in an older format are rebuilt, not misread
+    * (there is no legacy parser). */
+  val MetaFormat = "m2"
+
+  /** Entries a per-dir list keeps inline before it spills to sidecar
+    * chunks (see [[encode]]). */
+  val SidecarSpillThreshold = 48
+
+  /** A lost version claim: `v` is already committed with other content.
+    * The optimistic-concurrency loops catch exactly this, re-read the
+    * winner's head and retry one version up. */
+  final class CommitConflict(msg: String) extends IllegalArgumentException(msg)
+
   /** Commit version `v`: data dirs must already be fully written (their
-    * `_SUCCESS` markers are the precondition the manifest asserts). The
-    * manifest body is written to a temp sibling and RENAMED into place, so
-    * on filesystems with atomic rename (HDFS, local) the final path only
-    * ever holds a complete manifest. Object stores (S3A et al.) implement
-    * rename as copy+delete, so a crash mid-rename CAN leave a partial
-    * object there — which is why the body carries a `crc=` footer that
-    * [[manifest]] validates: a truncated/partial manifest is rejected
-    * instead of trusted (an empty/partial manifest would silently
-    * resurrect deleted rows). Re-committing an existing version is a no-op
-    * when the content is identical (idempotent replay) and an ERROR when
-    * it differs: committed history is immutable. */
-  def commit(spark: SparkSession, base: String, v: Int,
-      rawSnap: Snapshot): Unit = {
+    * `_SUCCESS` markers are the precondition the manifest asserts), and
+    * the manifest is PUBLISHED put-if-absent ([[publish]]): the first
+    * committer of `v` wins, and the file only ever holds its complete
+    * document — the Delta log-store contract. A crashed commit leaves no
+    * manifest. Re-committing an existing version is a no-op when the
+    * parsed content is identical (idempotent replay) and a
+    * [[CommitConflict]] when it differs: committed history is immutable.
+    * `spillAt` is the per-dir list length past which entries spill to
+    * sidecar chunks ([[SidecarSpillThreshold]]). */
+  def commit(spark: SparkSession, base: String, v: Int, rawSnap: Snapshot,
+      spillAt: Int = SidecarSpillThreshold): Unit = {
     // normalize FIRST: row-count entries for dirs outside the data set
     // drop here (rewrites carry the old map forward via copy — a
     // rewritten dir simply loses its count, degrading countRows to the
@@ -193,13 +211,6 @@ object SnapshotTable {
       dirSpecIds = rawSnap.dirSpecIds.filter { case (d, id) =>
         rawSnap.dataDirs.contains(d) && rawSnap.partVals.contains(d) &&
           id != rawSnap.partSpecId })
-    // delimiter validation FIRST (cheap, pure): a path with ',' or '|'
-    // would parse back into DIFFERENT dirs — the existence check below
-    // would mask this with a confusing "uncommitted dir" error
-    for (d <- snap.dataDirs ++ snap.deleteDirs)
-      require(!d.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"dir path '$d' holds a manifest delimiter (| , or newline) — " +
-          "refuse rather than write a manifest that parses differently")
     // each referenced dir may live on its own filesystem (manifests name
     // absolute URIs) — resolve per path, not once from the default FS
     for (d <- snap.dataDirs ++ snap.deleteDirs) {
@@ -209,136 +220,39 @@ object SnapshotTable {
     }
     require(snap.bounds.map(_.dir).forall(snap.dataDirs.contains),
       s"snapshot v$v carries bounds for dirs outside its data set")
-    for (b <- snap.bounds; f <- Seq(b.dir, b.col, b.typ, b.min, b.max))
-      require(!f.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"bounds field '$f' holds a manifest delimiter — refuse rather " +
-          "than write an unparseable manifest")
-    // EVERY per-dir line goes through the sidecar seam: below the
-    // threshold it stays inline (pre-sidecar manifests byte-identical —
-    // the standing format-compat rule); past it the entries spill to
-    // content-addressed chunks written BEFORE the manifest references
-    // them. Without this, a one-dir append to a 10⁵-dir table rewrites
-    // every bounds/rows/partvals entry into the new manifest — the
-    // commit payload must stay O(delta dirs), not O(dirs) (r19 verdict).
-    def spillLine(key: String, entries: Seq[String]): String =
-      if (entries.isEmpty) "" // absent line: byte-identical to pre-format
-      else if (entries.size <= sidecarSpillThreshold)
-        s"$key=" + entries.mkString(",") + "\n"
-      else s"${key}_refs=" + chunkEntries(entries)
-        .map(ensureSidecar(spark, base, _)).mkString(",") + "\n"
-    val boundsLine = spillLine("bounds", snap.bounds
-      .map(b => s"${b.dir}|${b.col}|${b.typ}|${b.min}|${b.max}"))
-    // row counts: absence keeps the manifest byte-identical to the
-    // pre-counts format (see the normalization at entry)
     for ((d, n) <- snap.rowCounts)
       require(n >= 0, s"negative row count $n for $d")
-    val counted = snap.dataDirs.filter(snap.rowCounts.contains)
-    val rowsLine = spillLine("rows",
-      counted.map(d => s"$d|${snap.rowCounts(d)}"))
-    // column stats: absent line keeps pre-colstats manifests
-    // byte-identical (the standing format-compat rule); duplicate
-    // (dir, col) entries would make manifestColumnStats double-count
-    for (cs <- snap.colStats) {
+    // duplicate (dir, col) entries would make manifestColumnStats
+    // double-count
+    for (cs <- snap.colStats)
       require(cs.ndv >= 0 && cs.nulls >= 0,
         s"negative column stat ${cs.ndv}/${cs.nulls} for ${cs.dir}|${cs.col}")
-      require(!cs.col.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"colstats column '${cs.col}' holds a manifest delimiter — " +
-          "refuse rather than write an unparseable manifest")
-      for (sk <- cs.sketch)
-        require(sk.nonEmpty && sk.forall(c => c.isLetterOrDigit ||
-          c == '-' || c == '_' || c == '='),
-          s"colstats sketch for ${cs.dir}|${cs.col} is not base64url")
-    }
     require(snap.colStats.map(cs => (cs.dir, cs.col)).distinct.size ==
       snap.colStats.size,
       s"snapshot v$v carries duplicate colstats entries")
-    // small tables stay INLINE (pre-sidecar manifests byte-identical);
-    // past the threshold the entries spill to content-addressed sidecar
-    // chunks written BEFORE the manifest references them (the crash
-    // order that can strand orphans but never dangle a reference)
-    val colStatsLine = spillLine("colstats", snap.colStats
-      .map(cs => s"${cs.dir}|${cs.col}|${cs.ndv}|${cs.nulls}" +
-        cs.sketch.map("|" + _).getOrElse("")))
-    // checks: names stay SQL-identifier-shaped; the EXPRESSION is
-    // base64url-encoded (expressions legitimately contain every manifest
-    // delimiter), so the line parses under the same split rules as the
-    // rest. Absent line keeps pre-checks manifests byte-identical.
     for ((n, _) <- snap.checks)
       require(n.nonEmpty && n.forall(c => c.isLetterOrDigit || c == '_'),
         s"CHECK constraint name '$n' must be [A-Za-z0-9_]+")
     require(snap.checks.map(_._1).distinct.size == snap.checks.size,
       s"snapshot v$v carries duplicate CHECK constraint names")
-    val checksLine =
-      if (snap.checks.isEmpty) ""
-      else "checks=" + snap.checks.map { case (n, e) =>
-        s"$n|${java.util.Base64.getUrlEncoder.withoutPadding
-          .encodeToString(e.getBytes("UTF-8"))}"
-      }.mkString(",") + "\n"
-    // the COPY INTO ledger: absent line keeps pre-ingest manifests
-    // byte-identical; a duplicate path would make dedup ambiguous
-    for (f <- snap.ingested) {
-      require(!f.path.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"ingested path '${f.path}' holds a manifest delimiter — " +
-          "refuse rather than write an unparseable manifest")
+    // the COPY INTO ledger: a duplicate path would make dedup ambiguous
+    for (f <- snap.ingested)
       require(f.len >= 0 && f.mtime >= 0,
         s"negative ingested-file metadata for ${f.path}")
-    }
     require(snap.ingested.map(_.path).distinct.size ==
       snap.ingested.size,
       s"snapshot v$v carries duplicate ingested-file ledger paths")
-    val ingestedLine = spillLine("ingested",
-      snap.ingested.map(f => s"${f.path}|${f.len}|${f.mtime}"))
-    val schemaLine = snap.schema.map { ddl =>
-      require(!ddl.exists(c => c == '\n' || c == '\r'),
-        "schema DDL may not contain a newline — it is one manifest line")
-      // parse NOW: an unparseable schema must fail the commit, not every
-      // future read of the version
-      org.apache.spark.sql.types.StructType.fromDDL(ddl): Unit
-      s"schema=$ddl\n"
-    }.getOrElse("")
-    // rename/drop evolution state: absent lines keep pre-evolution
-    // manifests byte-identical (the standing format-compat rule)
-    for (n <- snap.renames.keysIterator ++ snap.renames.valuesIterator ++
-        snap.dropped.iterator)
-      require(!n.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"column name '$n' holds a manifest delimiter — refuse rather " +
-          "than write an unparseable manifest")
+    // parse NOW: an unparseable schema must fail the commit, not every
+    // future read of the version
+    snap.schema.foreach(org.apache.spark.sql.types.StructType.fromDDL(_): Unit)
     require(snap.renames.isEmpty || snap.schema.isDefined,
       "renames require a manifest-carried schema (rename is evolution)")
-    val renamesLine =
-      if (snap.renames.isEmpty) ""
-      else "renames=" + snap.renames.toSeq.sorted
-        .map { case (l, p) => s"$l|$p" }.mkString(",") + "\n"
-    val droppedLine =
-      if (snap.dropped.isEmpty) ""
-      else "dropped=" + snap.dropped.mkString(",") + "\n"
-    // hidden-partitioning spec + per-dir tuples: absent lines keep
-    // pre-partition manifests byte-identical (the standing format-compat
-    // rule). Tuples must match the spec's arity and stay delimiter-safe
-    // — [[PartitionSpec.render]] guarantees the charset for every
-    // transform except identity/truncate over arbitrary strings, whose
-    // writers refuse unsafe values before landing bytes.
     require(!snap.partHist.contains(snap.partSpecId),
       s"snapshot v$v carries the current partition spec id " +
         s"${snap.partSpecId} in its retired-spec history")
-    // encode(f) = fn|n|col with '|' as ITS separator, so the delimiter
-    // check must range over the col COMPONENT (a col name holding '|'
-    // decodes to >3 parts — table bricked after a successful commit),
-    // plus every manifest-level separator. Mirrored for the CURRENT
-    // spec's partition= line, which had no write-site guard (r19 advice).
-    def specDelimSafe(f: PartitionSpec.PartField, what: String): Unit =
-      require(!f.col.exists(c => c == ',' || c == ';' || c == ':' ||
-        c == '|' || c == '\n' || c == '\r' || c == '='),
-        s"$what entry '${PartitionSpec.encode(f)}' holds a manifest " +
-          "delimiter — refuse rather than write an unparseable manifest")
-    for (f <- snap.partSpec)
-      specDelimSafe(f, s"partition spec (v$v)")
-    for ((id, fields) <- snap.partHist) {
+    for ((id, fields) <- snap.partHist)
       require(id >= 0 && fields.nonEmpty,
         s"snapshot v$v carries an empty retired partition spec $id")
-      for (f <- fields)
-        specDelimSafe(f, s"retired partition spec $id")
-    }
     for ((d, id) <- snap.dirSpecIds)
       require(snap.partHist.contains(id),
         s"dir $d pins partition spec $id which v$v does not carry")
@@ -350,36 +264,10 @@ object SnapshotTable {
       require(vs.size == spec.size,
         s"partition tuple for $d has ${vs.size} values, its spec has " +
           s"${spec.size}")
-      for (pv <- vs)
-        require(PartitionSpec.delimiterSafe(pv),
-          s"partition value '$pv' for $d holds a manifest delimiter — " +
-            "refuse rather than write an unparseable manifest")
     }
-    val partLine =
-      if (snap.partSpec.isEmpty) ""
-      else "partition=" + snap.partSpec.map(PartitionSpec.encode)
-        .mkString(",") + "\n"
-    val partValsLine = spillLine("partvals",
-      snap.dataDirs.filter(snap.partVals.contains)
-        .map(d => (d +: snap.partVals(d)).mkString("|")))
-    // spec-evolution state: all three lines absent on never-evolved
-    // tables (the standing format-compat rule). ':' and ';' are safe
-    // sub-delimiters here — encode() charset is validated above.
-    val partSpecIdLine =
-      if (snap.partSpecId == 0) "" else s"partspecid=${snap.partSpecId}\n"
-    val partHistLine =
-      if (snap.partHist.isEmpty) ""
-      else "parthist=" + snap.partHist.toSeq.sortBy(_._1)
-        .map { case (id, fs) =>
-          s"$id:" + fs.map(PartitionSpec.encode).mkString(";")
-        }.mkString(",") + "\n"
-    val dirSpecLine = spillLine("partdirspec",
-      snap.dataDirs.filter(snap.dirSpecIds.contains)
-        .map(d => s"$d|${snap.dirSpecIds(d)}"))
-    // declared write order (WRITE ORDERED BY): absent line keeps
-    // pre-order manifests byte-identical. Hidden partitioning and a
+    // declared write order (WRITE ORDERED BY): hidden partitioning and a
     // write order both claim the INSERT landing layout — a manifest
-    // carrying both is contradictory and refuses.
+    // carrying both is contradictory and refuses
     require(snap.writeOrder.nonEmpty || snap.writeOrderSlices == 0,
       s"snapshot v$v carries write-order slices without order columns")
     require(snap.writeOrder.isEmpty || snap.writeOrderSlices >= 1,
@@ -387,366 +275,238 @@ object SnapshotTable {
     require(snap.writeOrder.isEmpty || snap.partSpec.isEmpty,
       s"snapshot v$v declares both a partition spec and a write order " +
         "— the two landing layouts are mutually exclusive")
-    for (c <- snap.writeOrder)
-      require(c.nonEmpty && !c.exists(ch => ch == ',' || ch == '|' ||
-        ch == ';' || ch == ':' || ch == '\n' || ch == '\r' || ch == '='),
-        s"write-order column '$c' holds a manifest delimiter — refuse " +
-          "rather than write an unparseable manifest")
-    val writeOrderLine =
-      if (snap.writeOrder.isEmpty) ""
-      else s"writeorder=${snap.writeOrderSlices}|" +
-        snap.writeOrder.mkString(";") + "\n"
-    val core = s"data=${snap.dataDirs.mkString(",")}\n" +
-      s"delete=${snap.deleteDirs.mkString(",")}\n" + boundsLine +
-      rowsLine + colStatsLine + schemaLine + renamesLine + droppedLine +
-      checksLine + ingestedLine + partLine + partValsLine +
-      partSpecIdLine + partHistLine + dirSpecLine + writeOrderLine
-    val body = core + f"crc=${crc32(core)}%08x\n"
     val dst = manifestPath(base, v)
     val fs = fsFor(spark, dst)
-    if (!fs.exists(dst)) {
-      // OPTIMISTIC CONCURRENCY: claim the version number with the store's
-      // atomic create-if-absent primitive (create(overwrite = false) — on
-      // HDFS/object stores exactly one concurrent writer wins the create).
-      // A loser lands in the reconciliation branch below and either
-      // idempotently replays the winner's identical snapshot or fails
-      // LOUDLY with the already-committed-differently conflict — never a
-      // silent last-writer-wins clobber of committed history (the hole a
-      // check-then-rename shape leaves open). A writer crashing mid-create
-      // leaves a footer-less partial manifest, which readers already
-      // reject loudly and an identical recommit repairs — that existing
-      // contract is what makes direct create safe here.
-      try { writeVia(fs, dst, body, v); return }
-      catch {
-        case e: java.io.IOException =>
-          if (!fs.exists(dst)) throw e // a real write failure, not a race
-        // fall through: someone else claimed v — reconcile against it
-      }
-    }
-    if (fs.exists(dst)) {
-      // Decide footer validity BEFORE asserting immutability: a truncated
-      // manifest is not a trustworthy committed manifest, so comparing its
-      // (damaged) core against `snap` first would reject the documented
-      // recovery — "recommit the same snapshot" — with a misleading
-      // "different content" error.
-      //
-      // RETRY the read while the footer is invalid: a racer that lost the
-      // claim can observe the winner's claimed-but-unwritten window (the
-      // O_EXCL empty file before its body lands, or a transient filesystem
-      // checksum mismatch mid-write). The body is a few hundred bytes and
-      // lands within milliseconds, so a short bounded backoff separates
-      // "winner still writing" from a genuine crash-partial manifest;
-      // only after the window do the loud partial/corrupt paths below
-      // engage. (r12 ADVICE: the un-retried read made a loser fail
-      // spuriously in exactly that window.)
-      var attempt = 0
-      var text: String = null
-      var footerValidNow = false
-      while (!footerValidNow && attempt < 40) { // ≤ ~1 s total
-        if (attempt > 0) Thread.sleep(25)
-        attempt += 1
-        try {
-          text = readUtf8(fs, dst, v)
-          val (_, f, c, _) = parseBody(text, readSidecar(spark, base, _))
-          footerValidNow = f.contains(f"${crc32(c)}%08x")
-        } catch {
-          // mid-write checksum flap: retryable inside the window, the
-          // original loud stop once it's exhausted (bytes unreliable)
-          case e: IllegalArgumentException =>
-            text = null
-            if (attempt >= 40) throw new IllegalArgumentException(
-              s"manifest v$v exists but fails the filesystem checksum — " +
-                s"inspect and delete $dst to recommit", e)
-        }
-      }
-      if (text == null) throw new IllegalArgumentException(
-        s"manifest v$v exists but fails the filesystem checksum — " +
-          s"inspect and delete $dst to recommit")
-      val (existing, footer, existingCore, _) =
-        parseBody(text, readSidecar(spark, base, _))
-      val footerValid = footer.contains(f"${crc32(existingCore)}%08x")
-      if (footerValid) {
-        // a trustworthy committed manifest: history is immutable
-        require(existing == snap,
-          s"snapshot v$v already committed with different content")
-        return // idempotent replay
-      }
-      // No valid footer: a pre-footer manifest or a partial write. When its
-      // surviving core matches what we're committing, rewrite in place
-      // (footer upgrade / tail repair). When it doesn't, we cannot tell a
-      // core-damaged copy of THIS snapshot from a damaged copy of a
-      // DIFFERENT committed version — auto-overwriting could erase real
-      // history, so refuse with the ambiguity spelled out (never a bare
-      // "different content", which misleads a caller who IS recommitting
-      // the original).
-      require(existing == snap,
-        s"manifest v$v is partial/corrupt (no valid crc footer) and its " +
-          s"surviving content differs from the snapshot being committed — " +
-          s"cannot distinguish a core-damaged copy of this snapshot from a " +
-          s"damaged DIFFERENT committed version; verify and delete $dst to " +
-          s"recommit")
-      fs.delete(dst, false)
-    }
-    writeVia(fs, dst, body, v)
+    // sidecar chunks are published BEFORE the manifest that references
+    // them: a crash strands orphans (swept), never a dangling reference
+    if (fs.exists(dst) || !publish(fs, dst,
+        encode(snap, ensureSidecar(spark, base, _), spillAt)))
+      if (manifest(spark, base, v) != snap) throw new CommitConflict(
+        s"snapshot v$v already committed with different content")
   }
 
-  /** Atomic version claim + write — what the optimistic-concurrency
-    * commit rides on (see [[commit]]). On HDFS/object stores the claim is
-    * the store's create-if-absent (`create(overwrite = false)` is atomic
-    * there). On the LOCAL filesystem Hadoop's create is check-then-create
-    * — NOT atomic (two racers can both pass the check; a race test caught
-    * exactly this) — so the claim is an O_EXCL `Files.createFile` of the
-    * empty manifest, after which only the claim winner writes the body.
-    * A reader or racing committer that observes the claimed-but-unwritten
-    * window sees a footer-less partial manifest — the loud-reject /
-    * identical-recommit-repairs contract that already covers crashes
-    * covers that window too. */
-  private def writeVia(fs: FileSystem, dst: Path, body: String,
-      v: Int): Unit = {
+  /** PUT-IF-ABSENT of a complete file — the one primitive every manifest,
+    * sidecar chunk, tag and fork marker is published through. True when
+    * this call created `dst` holding exactly `body`; false when `dst`
+    * already existed (comparing its content is the caller's job).
+    *  - local filesystem: the body goes to a hidden temp sibling, which is
+    *    then hard-linked to `dst` (link(2) fails with EEXIST, so exactly
+    *    one racer wins) and deleted — a reader never sees `dst`
+    *    half-written, and a crash strands at most the temp, which
+    *    [[sweepStagingOrphans]] collects. The file carries no Hadoop
+    *    `.crc` sidecar; the document checksum is its integrity check.
+    *  - HDFS / object stores: `create(overwrite = false)`, the store's
+    *    atomic create-if-absent. Object stores show the object only once
+    *    it is closed; an HDFS reader racing the write may see a short
+    *    file, which the document checksum refuses loudly. */
+  private def publish(fs: FileSystem, dst: Path, body: String): Boolean = {
+    val bytes = body.getBytes("UTF-8")
     val scheme = dst.toUri.getScheme
-    val out =
-      if (scheme == null || scheme == "file") {
-        // a brand-new base (first commit of a clone/create) has no parent
-        // dir yet — createFile, unlike fs.create, does not make parents
-        val p = java.nio.file.Paths.get(dst.toUri.getPath)
-        java.nio.file.Files.createDirectories(p.getParent)
-        // throws java.nio.file.FileAlreadyExistsException (an IOException)
-        // when a concurrent writer already claimed this version
-        java.nio.file.Files.createFile(p)
-        fs.create(dst, true) // we own the claim; fill the empty file
-      } else fs.create(dst, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (scheme == null || scheme == "file") {
+      import java.nio.file.{Files, StandardOpenOption}
+      val p = java.nio.file.Paths.get(dst.toUri.getPath)
+      Files.createDirectories(p.getParent)
+      val tmp = p.resolveSibling(s".${p.getFileName}." +
+        java.util.UUID.randomUUID().toString.take(8) + ".tmp")
+      Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+      try { Files.createLink(p, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally Files.delete(tmp)
+    } else
+      try {
+        val out = fs.create(dst, false)
+        try out.write(bytes) finally out.close()
+        true
+      } catch { case _: java.io.IOException if fs.exists(dst) => false }
   }
 
   def manifest(spark: SparkSession, base: String, v: Int): Snapshot = {
     val p = manifestPath(base, v)
     val fs = fsFor(spark, p)
     require(fs.exists(p), s"no committed snapshot v$v under $base")
-    val text = readUtf8(fs, p, v)
-    val (snap, footer, core, _) =
-      parseBody(text, readSidecar(spark, base, _))
-    // The footer is REQUIRED: object-store rename is copy+delete, so a
-    // partial manifest is possible, and a truncation that cuts the tail off
-    // is precisely the case that deletes the footer — treating it as
-    // optional would trust exactly the writes it exists to catch.
-    require(footer.nonEmpty,
-      s"manifest v$v has no crc footer — partial/corrupt manifest write " +
-        "detected (or a pre-footer manifest: recommit it)")
-    val actual = f"${crc32(core)}%08x"
-    require(footer.contains(actual),
-      s"manifest v$v failed checksum ($actual != ${footer.get}) — " +
-        "partial/corrupt manifest write detected")
-    snap
+    decode(readUtf8(fs, p), readSidecar(spark, base, _), s"manifest v$v")._1
   }
 
-  /** Read the manifest bytes. A filesystem-level checksum failure (LocalFS /
-    * HDFS `.crc` sidecar mismatch) means the same thing as a failed footer —
-    * the body on disk is not what was committed — so surface it as the same
-    * loud partial/corrupt rejection rather than a transport error. */
-  private def readUtf8(fs: FileSystem, p: Path, v: Int): String = {
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
+  /** The sidecar names manifest `v` references (the vacuum GC seam). */
+  private def sidecarRefs(spark: SparkSession, base: String,
+      v: Int): Seq[String] = {
+    val p = manifestPath(base, v)
+    decode(readUtf8(fsFor(spark, p), p), readSidecar(spark, base, _),
+      s"manifest v$v")._2
+  }
+
+  /** Read a metadata file. A filesystem-level checksum failure (HDFS, or
+    * a LocalFS `.crc` sidecar) means the same as a failed document
+    * checksum, so it surfaces as the same loud rejection. */
+  private def readUtf8(fs: FileSystem, p: Path): String = {
+    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     try {
       val in = fs.open(p)
       try in.readFully(buf) finally in.close()
     } catch {
       case e: org.apache.hadoop.fs.ChecksumException =>
         throw new IllegalArgumentException(
-          s"manifest v$v failed filesystem checksum — partial/corrupt " +
-            "manifest write detected", e)
+          s"partial/corrupt file $p: it fails the filesystem checksum", e)
     }
     new String(buf, "UTF-8")
   }
 
-  /** Split a manifest body into its core snapshot, the optional crc footer
-    * value, the exact core STRING the footer covers — returned so both
-    * callers checksum the same bytes this parse saw (no second, possibly
-    * divergent, partition of the text) — and the sidecar names the body
-    * references (the vacuum GC seam). `resolve` maps a sidecar name to
-    * its (hash-validated) payload; spilled lines parse into exactly the
-    * entries the inline form would. Validation is the caller's call. */
-  private def parseBody(text: String, resolve: String => String)
-      : (Snapshot, Option[String], String, Seq[String]) = {
-    val (coreLines, crcLines) =
-      text.linesIterator.toSeq.partition(!_.startsWith("crc="))
-    val kv = coreLines
-      .map(_.split("=", 2)).map(a => a(0) -> a.lift(1).getOrElse(""))
-      .toMap
-    def dirs(k: String) = kv.getOrElse(k, "").split(",").filter(_.nonEmpty)
-    // every per-dir line may spill (the write-side spillLine contract)
-    val spillableKeys = Seq("colstats", "ingested", "bounds", "rows",
-      "partvals", "partdirspec")
-    val refs: Seq[String] =
-      spillableKeys.flatMap(k => dirs(s"${k}_refs"))
-    // a line present both inline and spilled would double-parse — the
-    // writer never emits that, so a manifest carrying it is damaged
-    for (k <- spillableKeys)
-      if (kv.get(k).exists(_.nonEmpty) &&
-          kv.get(s"${k}_refs").exists(_.nonEmpty))
+  // ---- metadata documents: one checksummed JSON object per file ----
+  //
+  // A manifest, a `_TAG_<name>` ref and a branch's `_FORK` marker are each
+  // one JSON object whose last member, `crc`, is the CRC32 of the compact
+  // JSON of the members before it. A file that does not parse or whose
+  // checksum does not match is refused loudly: a damaged manifest must
+  // never resurrect deleted rows, a damaged tag never serve a version.
+
+  private def crc32(s: String): Long = {
+    val c = new java.util.zip.CRC32
+    c.update(s.getBytes("UTF-8"))
+    c.getValue
+  }
+
+  private def seal(members: List[(String, JValue)]): String = {
+    val core = json(JObject(members))
+    json(JObject(members :+ ("crc" -> JString(f"${crc32(core)}%08x"))))
+  }
+
+  /** The members of a sealed document, checksum verified, as plain values
+    * (String, Long, null, List of those). */
+  private def open(text: String, what: String): Map[String, Any] = {
+    val members = scala.util.Try(parse(text)).toOption match {
+      case Some(JObject(ms)) => ms
+      case _ => Nil
+    }
+    val (crc, core) = members.partition(_._1 == "crc")
+    require(crc.map(_._2) ==
+      List(JString(f"${crc32(json(JObject(core)))}%08x")),
+      s"partial/corrupt $what: not a complete checksummed document — " +
+        "inspect it, then delete it to write it again")
+    core.map { case (k, j) => k -> plain(j) }.toMap
+  }
+
+  private def plain(j: JValue): Any = j match {
+    case JString(s) => s
+    case JInt(n) => n.toLong
+    case JLong(n) => n
+    case JArray(xs) => xs.map(plain)
+    case _ => null
+  }
+
+  private def str(s: String): JValue = JString(s)
+  private def num(n: Long): JValue = JLong(n)
+  private def arr(xs: Seq[JValue]): JValue = JArray(xs.toList)
+  private def strs(xs: Seq[String]): JValue = arr(xs.map(str))
+  private def specJson(fs: Seq[PartitionSpec.PartField]): JValue =
+    arr(fs.map(f => arr(Seq(str(f.fn), num(f.n), str(f.col)))))
+
+  /** The manifest document of `snap`. The six per-dir lists (bounds,
+    * rows, colstats, ingested, partvals, partdirspec) grow with the
+    * table: past `spillAt` entries a list is stored as `<key>_refs`, the
+    * names of content-addressed sidecar chunks `spill` publishes, so a
+    * one-dir append writes O(delta dirs) bytes instead of re-inlining
+    * every entry. */
+  private[graft] def encode(snap: Snapshot, spill: String => String,
+      spillAt: Int = SidecarSpillThreshold): String = {
+    def perDir(k: String, entries: Seq[JValue]): (String, JValue) =
+      if (entries.size <= spillAt) k -> arr(entries)
+      else s"${k}_refs" ->
+        strs(chunkEntries(entries).map(c => spill(json(arr(c)))))
+    def byDir[A](m: Map[String, A])(f: A => JValue): Seq[JValue] =
+      snap.dataDirs.filter(m.contains).map(d => arr(Seq(str(d), f(m(d)))))
+    seal(List(
+      "data" -> strs(snap.dataDirs),
+      "delete" -> strs(snap.deleteDirs),
+      perDir("bounds", snap.bounds.map(b =>
+        strs(Seq(b.dir, b.col, b.typ, b.min, b.max)))),
+      perDir("rows", byDir(snap.rowCounts)(num)),
+      perDir("colstats", snap.colStats.map(cs => arr(Seq(str(cs.dir),
+        str(cs.col), num(cs.ndv), num(cs.nulls)) ++ cs.sketch.map(str)))),
+      "schema" -> snap.schema.map(str).getOrElse(JNull),
+      "renames" -> arr(snap.renames.toSeq.sorted.map { case (l, p) =>
+        strs(Seq(l, p)) }),
+      "dropped" -> strs(snap.dropped),
+      "checks" -> arr(snap.checks.map { case (n, e) => strs(Seq(n, e)) }),
+      perDir("ingested", snap.ingested.map(f =>
+        arr(Seq(str(f.path), num(f.len), num(f.mtime))))),
+      "partition" -> specJson(snap.partSpec),
+      perDir("partvals", byDir(snap.partVals)(strs)),
+      "partspecid" -> num(snap.partSpecId),
+      "parthist" -> arr(snap.partHist.toSeq.sortBy(_._1).map {
+        case (id, fs) => arr(Seq(num(id), specJson(fs))) }),
+      perDir("partdirspec", byDir(snap.dirSpecIds)(id => num(id))),
+      "writeorder" -> strs(snap.writeOrder),
+      "writeorderslices" -> num(snap.writeOrderSlices)))
+  }
+
+  /** The inverse of [[encode]]: the snapshot and the sidecar names it
+    * references. `resolve` maps a sidecar name to its hash-validated
+    * payload. */
+  private def decode(text: String, resolve: String => String,
+      what: String): (Snapshot, Seq[String]) = {
+    val doc = open(text, what)
+    def list(x: Any): List[Any] = x match {
+      case xs: List[_] => xs
+      case _ => Nil
+    }
+    def at(k: String) = list(doc.getOrElse(k, null))
+    def strings(k: String) = at(k).map(_.asInstanceOf[String])
+    def int(k: String) = doc.get(k).collect { case n: Long => n.toInt }
+      .getOrElse(0)
+    def perDir(k: String): List[Any] = at(k) ++ strings(s"${k}_refs")
+      .flatMap(n => list(plain(parse(resolve(n)))))
+    def spec(x: Any) = list(x).map {
+      case List(fn: String, n: Long, c: String) =>
+        PartitionSpec.PartField(fn, n.toInt, c)
+    }
+    try (Snapshot(strings("data"), strings("delete"),
+      perDir("bounds").map {
+        case List(d: String, c: String, t: String, lo: String, hi: String) =>
+          DirBounds(d, c, t, lo, hi)
+      },
+      doc.get("schema").collect { case s: String => s },
+      perDir("rows").map { case List(d: String, n: Long) => d -> n }.toMap,
+      at("renames").map { case List(l: String, p: String) => l -> p }.toMap,
+      strings("dropped"),
+      perDir("colstats").map {
+        case List(d: String, c: String, ndv: Long, nulls: Long) =>
+          ColStats(d, c, ndv, nulls)
+        case List(d: String, c: String, ndv: Long, nulls: Long, sk: String) =>
+          ColStats(d, c, ndv, nulls, Some(sk))
+      },
+      at("checks").map { case List(n: String, e: String) => n -> e },
+      perDir("ingested").map {
+        case List(p: String, len: Long, mt: Long) => IngestedFile(p, len, mt)
+      },
+      spec(doc.getOrElse("partition", null)),
+      perDir("partvals").map {
+        case List(d: String, vs: List[_]) =>
+          d -> vs.map(_.asInstanceOf[String])
+      }.toMap,
+      int("partspecid"),
+      at("parthist").map { case List(id: Long, fs) => id.toInt -> spec(fs) }
+        .toMap,
+      perDir("partdirspec").map { case List(d: String, id: Long) =>
+        d -> id.toInt }.toMap,
+      strings("writeorder"), int("writeorderslices")),
+      doc.keys.filter(_.endsWith("_refs")).toSeq.flatMap(strings))
+    catch {
+      case e @ (_: MatchError | _: ClassCastException) =>
         throw new IllegalArgumentException(
-          s"manifest carries both $k and ${k}_refs — damaged or written " +
-            "by a newer format")
-    def spillable(k: String): Seq[String] = {
-      val inline = dirs(k).toSeq
-      if (inline.nonEmpty) inline
-      else dirs(s"${k}_refs").toSeq
-        .flatMap(n => resolve(n).split(",").filter(_.nonEmpty))
+          s"$what is not a snapshot manifest document", e)
     }
-    val bounds = spillable("bounds").map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(d, c, t, mn, mx) => DirBounds(d, c, t, mn, mx)
-        case _ => throw new IllegalArgumentException(
-          s"unparseable bounds entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }
-    val rows = spillable("rows").map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(d, n) if n.forall(_.isDigit) && n.nonEmpty => d -> n.toLong
-        case _ => throw new IllegalArgumentException(
-          s"unparseable rows entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }.toMap
-    val renames = dirs("renames").toSeq.map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(l, p) if l.nonEmpty && p.nonEmpty => l -> p
-        case _ => throw new IllegalArgumentException(
-          s"unparseable renames entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }.toMap
-    val colStats = spillable("colstats").map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(d, c, ndv, nulls)
-            if ndv.nonEmpty && ndv.forall(_.isDigit) &&
-              nulls.nonEmpty && nulls.forall(_.isDigit) =>
-          ColStats(d, c, ndv.toLong, nulls.toLong)
-        case Array(d, c, ndv, nulls, sk)
-            if ndv.nonEmpty && ndv.forall(_.isDigit) &&
-              nulls.nonEmpty && nulls.forall(_.isDigit) && sk.nonEmpty =>
-          ColStats(d, c, ndv.toLong, nulls.toLong, Some(sk))
-        case _ => throw new IllegalArgumentException(
-          s"unparseable colstats entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }
-    val checks = dirs("checks").toSeq.map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(n, b64) if n.nonEmpty && b64.nonEmpty =>
-          try n -> new String(
-            java.util.Base64.getUrlDecoder.decode(b64), "UTF-8")
-          catch {
-            case _: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"unparseable checks entry '$entry' — manifest damaged " +
-                  "or written by a newer format")
-          }
-        case _ => throw new IllegalArgumentException(
-          s"unparseable checks entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }
-    val ingested = spillable("ingested").map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(p, len, mt)
-            if len.nonEmpty && len.forall(_.isDigit) &&
-              mt.nonEmpty && mt.forall(_.isDigit) =>
-          IngestedFile(p, len.toLong, mt.toLong)
-        case _ => throw new IllegalArgumentException(
-          s"unparseable ingested entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }
-    val partSpec = dirs("partition").toSeq.map(PartitionSpec.decode)
-    val partSpecId = kv.get("partspecid").filter(_.nonEmpty).map { s =>
-      if (!s.forall(_.isDigit)) throw new IllegalArgumentException(
-        s"unparseable partspecid '$s' — manifest damaged or written " +
-          "by a newer format")
-      s.toInt
-    }.getOrElse(0)
-    val partHist = dirs("parthist").toSeq.map { entry =>
-      entry.split(":", 2) match {
-        case Array(id, fs)
-            if id.nonEmpty && id.forall(_.isDigit) && fs.nonEmpty =>
-          id.toInt -> fs.split(";").filter(_.nonEmpty).toSeq
-            .map(PartitionSpec.decode)
-        case _ => throw new IllegalArgumentException(
-          s"unparseable parthist entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      }
-    }.toMap
-    val dirSpecIds = spillable("partdirspec").map { entry =>
-      entry.split("\\|", -1) match {
-        case Array(d, id)
-            if d.nonEmpty && id.nonEmpty && id.forall(_.isDigit) =>
-          d -> id.toInt
-        case _ => throw new IllegalArgumentException(
-          s"unparseable partdirspec entry '$entry' — manifest damaged " +
-            "or written by a newer format")
-      }
-    }.toMap
-    val partVals = spillable("partvals").map { entry =>
-      val parts = entry.split("\\|", -1)
-      // a tuple's arity is governed by the spec that RENDERED it — the
-      // dir's pinned retired spec when evolution moved past it
-      val specSize = dirSpecIds.get(parts.headOption.getOrElse("")) match {
-        case Some(id) if id != partSpecId =>
-          partHist.getOrElse(id, throw new IllegalArgumentException(
-            s"partvals dir '${parts(0)}' pins partition spec $id which " +
-              "the manifest does not carry — manifest damaged")).size
-        case _ => partSpec.size
-      }
-      if (parts.length != 1 + specSize || parts(0).isEmpty)
-        throw new IllegalArgumentException(
-          s"unparseable partvals entry '$entry' — manifest damaged or " +
-            "written by a newer format")
-      parts(0) -> parts.drop(1).toSeq
-    }.toMap
-    val (writeOrder, writeOrderSlices) =
-      kv.get("writeorder").filter(_.nonEmpty).map { s =>
-        s.split("\\|", -1) match {
-          case Array(n, cs)
-              if n.nonEmpty && n.forall(_.isDigit) && cs.nonEmpty =>
-            (cs.split(";").filter(_.nonEmpty).toSeq, n.toInt)
-          case _ => throw new IllegalArgumentException(
-            s"unparseable writeorder line '$s' — manifest damaged or " +
-              "written by a newer format")
-        }
-      }.getOrElse((Nil, 0))
-    (Snapshot(dirs("data").toSeq, dirs("delete").toSeq, bounds,
-      kv.get("schema").filter(_.nonEmpty), rows, renames,
-      dirs("dropped").toSeq, colStats, checks, ingested, partSpec,
-      partVals, partSpecId, partHist, dirSpecIds, writeOrder,
-      writeOrderSlices),
-      crcLines.headOption.map(_.stripPrefix("crc=")),
-      coreLines.mkString("", "\n", "\n"), refs)
   }
 
   // ---- manifest scaling seam: content-addressed sidecar files ----
   //
-  // The two unbounded-growth manifest lines — per-dir column stats and
-  // the COPY INTO ledger — spill to sidecar files once they pass the
-  // threshold, so a commit writes O(delta) bytes instead of rewriting
-  // O(dirs×cols + ingested-files) inline text per version. Sidecars are
-  // CONTENT-ADDRESSED (name = sha256 of payload): write-once, idempotent
-  // under racers (two writers of the same chunk write the same file),
-  // and immune to partial-write corruption (a payload that doesn't hash
-  // to its own name is rejected loudly, and an identical recommit
-  // repairs it). Entries chunk at CONTENT-DEFINED boundaries (a chunk
+  // Sidecars are CONTENT-ADDRESSED (name = sha256 of payload): write-once,
+  // idempotent under racers (two writers of the same chunk publish the
+  // same file), and a payload that doesn't hash to its own name is
+  // rejected loudly. Entries chunk at CONTENT-DEFINED boundaries (a chunk
   // break after any entry whose own crc lands in 1/32 of the space, with
   // a hard cap), so inserting or dropping entries re-writes only the
   // chunks they touch — neighbors keep their names and a later commit
-  // re-references them for free. Sidecars are written BEFORE the
-  // manifest that references them: a crash strands orphan sidecars
-  // (vacuum collects them), never a manifest pointing at missing bytes.
-
-  /** Spill threshold (entries per line). `private[graft] var` so specs
-    * can exercise the sidecar path without fabricating 48-dir tables —
-    * production never touches it. Spilling is semantically transparent
-    * (parse resolves refs back to the same entries), so a concurrent
-    * suite observing a temporarily lowered threshold stays correct. */
-  private[graft] var sidecarSpillThreshold = 48
+  // re-references them for free.
 
   private def sidecarName(payload: String): String = {
     val h = java.security.MessageDigest.getInstance("SHA-256")
@@ -758,50 +518,33 @@ object SnapshotTable {
   private def sidecarPath(base: String, name: String) =
     new Path(s"$base/$name")
 
-  /** Split entries into content-defined chunks (payload = the same
-    * comma-joined line syntax the inline form uses). Boundaries are a
+  /** Split entries into content-defined chunks. Boundaries are a
     * property of entry CONTENT, not position, so they survive
     * insertions/removals elsewhere in the sorted entry list. */
-  private def chunkEntries(entries: Seq[String]): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def chunkEntries(entries: Seq[JValue]): Seq[Seq[JValue]] = {
+    val out = Seq.newBuilder[Seq[JValue]]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[JValue]
     for (e <- entries) {
       cur += e
-      if ((crc32(e) & 31L) == 0L || cur.size >= 128) {
-        out += cur.mkString(","); cur.clear()
+      if ((crc32(json(e)) & 31L) == 0L || cur.size >= 128) {
+        out += cur.toList; cur.clear()
       }
     }
-    if (cur.nonEmpty) out += cur.mkString(",")
-    out.toSeq
+    if (cur.nonEmpty) out += cur.toList
+    out.result()
   }
 
-  /** Write the sidecar if absent (content-addressed: an existing file
-    * with the right hash is THE file). A hash-mismatched existing file
-    * is a crashed writer's partial — delete and rewrite (safe: nothing
-    * can legitimately live at this name with other content). */
+  /** Publish the chunk unless it exists; an existing file at the name
+    * must carry exactly this payload. */
   private def ensureSidecar(spark: SparkSession, base: String,
       payload: String): String = {
     val name = sidecarName(payload)
     val p = sidecarPath(base, name)
     val fs = fsFor(spark, p)
-    if (fs.exists(p)) {
-      val txt = try readUtf8(fs, p, -1) catch { case _: Exception => null }
-      if (txt == payload) return name
-      fs.delete(p, false)
-    }
-    val tmp = new Path(s"$base/.$name." +
-      java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(payload.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      // a racer landed the same name first — verify it carries the
-      // content this name promises, then discard our temp
-      fs.delete(tmp, false)
-      val txt = readUtf8(fs, p, -1)
-      require(txt == payload,
+    if (fs.exists(p) || !publish(fs, p, payload))
+      require(readUtf8(fs, p) == payload,
         s"sidecar $name exists with content not matching its own hash " +
           s"— store corruption under $base")
-    }
     name
   }
 
@@ -815,17 +558,11 @@ object SnapshotTable {
       s"manifest references sidecar $name which does not exist under " +
         s"$base — partial/corrupt commit detected (or the sidecar was " +
         "vacuumed from under a live manifest)")
-    val txt = readUtf8(fs, p, -1)
+    val txt = readUtf8(fs, p)
     if (sidecarName(txt) != name) throw new IllegalArgumentException(
       s"sidecar $name failed its content hash — partial/corrupt " +
-        "sidecar write detected; recommit the snapshot to repair")
+        "sidecar write detected")
     txt
-  }
-
-  private def crc32(s: String): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(s.getBytes("UTF-8"))
-    c.getValue
   }
 
   /** Scan of version `v`: union of its data dirs minus its delete keys.
@@ -865,11 +602,6 @@ object SnapshotTable {
       val p = new Path(d)
       fsFor(spark, p).makeQualified(p).toString
     }
-    def refsOf(v: Int): Seq[String] = {
-      val p = manifestPath(base, v)
-      parseBody(readUtf8(fsFor(spark, p), p, v),
-        readSidecar(spark, base, _))._4
-    }
     val live = (keepFrom to upTo).flatMap { v =>
       val s = manifest(spark, base, v)
       (s.dataDirs ++ s.deleteDirs).map(canon)
@@ -878,7 +610,7 @@ object SnapshotTable {
     // manifest are live; old-manifest-only names delete after their
     // manifests do (same crash order — a crash strands orphan sidecars,
     // never a live manifest over deleted ones)
-    val liveRefs = (keepFrom to upTo).flatMap(refsOf).toSet
+    val liveRefs = (keepFrom to upTo).flatMap(sidecarRefs(spark, base, _)).toSet
     val old = (1 until keepFrom).filter { v =>
       val p = manifestPath(base, v)
       fsFor(spark, p).exists(p)
@@ -889,7 +621,7 @@ object SnapshotTable {
       val s = manifest(spark, base, v)
       (s.dataDirs ++ s.deleteDirs).map(canon)
     }.distinct
-    val oldRefs = old.flatMap(refsOf).distinct
+    val oldRefs = old.flatMap(sidecarRefs(spark, base, _)).distinct
     for (v <- old) {
       val p = manifestPath(base, v)
       require(fsFor(spark, p).delete(p, false),
@@ -1003,8 +735,8 @@ object SnapshotTable {
   // ───── NAMED REFS: tags + branches (the Iceberg-style WAP story) ─────
 
   /** Ref names share the SQL `VERSION AS OF '<ref>'` namespace with
-    * numeric versions, so all-digit names are refused along with path/
-    * manifest delimiter characters. */
+    * numeric versions, so all-digit names are refused; the name is also a
+    * file-name suffix, so only a path-safe charset is allowed. */
   private def requireRefName(name: String): Unit = {
     require(name.nonEmpty && name.forall(c =>
       c.isLetterOrDigit || c == '_' || c == '-' || c == '.'),
@@ -1016,45 +748,27 @@ object SnapshotTable {
   private def tagPath(base: String, name: String) =
     new Path(s"$base/_TAG_$name")
 
-  private def refBody(core: String): String =
-    core + f"crc=${crc32(core)}%08x\n"
-
-  /** Parse a ref file's `version=N` body, crc-validated; None when the
-    * file is absent. A partial/corrupt ref fails loudly — a wrong tag
-    * silently serving the wrong version is worse than an error. */
-  private def readRefVersion(spark: SparkSession, p: Path): Option[Int] = {
+  /** The version a ref file (tag or fork marker) points at; None when the
+    * file is absent. A damaged ref fails loudly — a wrong tag silently
+    * serving the wrong version is worse than an error. */
+  private def readRef(spark: SparkSession, p: Path): Option[Int] = {
     val fs = fsFor(spark, p)
-    if (!fs.exists(p)) return None
-    val text = readUtf8(fs, p, 0)
-    val lines = text.split("\n", -1)
-    val core = lines.takeWhile(!_.startsWith("crc=")).map(_ + "\n").mkString
-    val crcLine = lines.find(_.startsWith("crc="))
-    require(crcLine.contains(f"crc=${crc32(core)}%08x"),
-      s"ref file $p is partial/corrupt (bad crc) — delete it to recreate")
-    val v = core.stripPrefix("version=").trim
-    require(v.forall(_.isDigit) && v.nonEmpty, s"unparseable ref file $p")
-    Some(v.toInt)
+    if (!fs.exists(p)) None
+    else open(readUtf8(fs, p), s"ref file $p").get("version") match {
+      case Some(v: Long) => Some(v.toInt)
+      case _ => throw new IllegalArgumentException(
+        s"ref file $p carries no version")
+    }
   }
 
-  /** [[readRefVersion]] with a bounded crc-retry — for RECONCILE reads
-    * after a lost create-if-absent claim, where the winner's
-    * claimed-but-unwritten O_EXCL window (empty file before its few-byte
-    * body lands) must read as "winner still writing", not as corrupt
-    * (the same ~1 s window [[commit]]'s footer-retry loop covers). */
-  private def readRefVersionRetry(spark: SparkSession,
-      p: Path): Option[Int] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return readRefVersion(spark, p)
-      catch {
-        case e: IllegalArgumentException
-            if attempt < 40 && e.getMessage != null &&
-              e.getMessage.contains("crc") =>
-          Thread.sleep(25)
-      }
-    }
-    None // unreachable
+  /** Publish ref `p` → `v` put-if-absent; returns the version the ref
+    * holds afterwards (the winner's, when another creator got there
+    * first). */
+  private def putRef(spark: SparkSession, p: Path, v: Int): Int = {
+    val fs = fsFor(spark, p)
+    if (!fs.exists(p) && publish(fs, p, seal(List("version" -> num(v))))) v
+    else readRef(spark, p).getOrElse(
+      throw new IllegalStateException(s"ref file $p vanished"))
   }
 
   /** CREATE TAG — an immutable named pointer to a committed version (the
@@ -1071,43 +785,27 @@ object SnapshotTable {
     val mp = manifestPath(base, version)
     require(fsFor(spark, mp).exists(mp),
       s"cannot tag $base v$version — no such committed version")
-    val p = tagPath(base, name)
-    val fs = fsFor(spark, p)
-    def reconcile(): Unit = {
-      val existing = readRefVersionRetry(spark, p)
-      require(existing.contains(version),
-        s"tag $name already points at v${existing.orNull} — tags are " +
-          "immutable; pick another name or delete the tag file " +
-          "deliberately")
-    }
-    if (fs.exists(p)) { reconcile(); return }
-    try writeVia(fs, p, refBody(s"version=$version\n"), version)
-    catch { // lost the claim to a racer — identical content is fine
-      case e: java.io.IOException => if (fs.exists(p)) reconcile() else throw e
-    }
+    val existing = putRef(spark, tagPath(base, name), version)
+    require(existing == version,
+      s"tag $name already points at v$existing — tags are immutable; " +
+        "pick another name or delete the tag file deliberately")
   }
 
-  /** Resolve a tag name to its version (None = no such tag). Rides the
-    * crc-retry read: a concurrent creator's claimed-but-unwritten O_EXCL
-    * window (empty file before the body lands) must read as "winner
-    * still writing", never as spuriously corrupt. */
+  /** Resolve a tag name to its version (None = no such tag). */
   def readTagVersion(spark: SparkSession, base: String,
       name: String): Option[Int] = {
     requireRefName(name)
-    readRefVersionRetry(spark, tagPath(base, name))
+    readRef(spark, tagPath(base, name))
   }
 
-  /** `(name, version)` of every tag under `base`. Retry-read like
-    * [[readTagVersion]]: a listing that races a createTag winner's
-    * write window must wait it out, not fail as partial/corrupt. */
+  /** `(name, version)` of every tag under `base`. */
   def listTags(spark: SparkSession, base: String): Seq[(String, Int)] = {
     val b = new Path(base)
     val fs = fsFor(spark, b)
     if (!fs.exists(b)) return Nil
     fs.listStatus(b).iterator.map(_.getPath.getName)
       .filter(_.startsWith("_TAG_")).map(_.stripPrefix("_TAG_"))
-      .flatMap(n => readRefVersionRetry(spark, tagPath(base, n))
-        .map(n -> _))
+      .flatMap(n => readRef(spark, tagPath(base, n)).map(n -> _))
       .toSeq.sortBy(_._1)
   }
 
@@ -1162,11 +860,7 @@ object SnapshotTable {
     lazy val liveRefs = (1 to head).filter { v =>
       val mp = manifestPath(base, v)
       fsFor(spark, mp).exists(mp)
-    }.flatMap { v =>
-      val mp = manifestPath(base, v)
-      parseBody(readUtf8(fsFor(spark, mp), mp, v),
-        readSidecar(spark, base, _))._4
-    }.toSet
+    }.flatMap(sidecarRefs(spark, base, _)).toSet
     for (st <- fs.listStatus(b) if st.isFile;
          name = st.getPath.getName
          if sidecarRe.findFirstIn(name).isDefined) {
@@ -1175,12 +869,12 @@ object SnapshotTable {
         if (fs.delete(st.getPath, false)) n += 1
       }
     }
-    // a sidecar writer that crashed between its temp write and the
-    // rename strands a `._SIDECAR_*.tmp` file — idle ones are dead
-    val sidecarTmpRe = """^\._SIDECAR_[0-9a-f]{32}\.mf\..*\.tmp$""".r
+    // a publisher that crashed between its temp write and the link
+    // strands a hidden `._<name>.<8 hex>.tmp` file — idle ones are dead
+    val publishTmpRe = """^\._.+\.[0-9a-f]{8}\.tmp$""".r
     for (st <- fs.listStatus(b) if st.isFile;
          name = st.getPath.getName
-         if sidecarTmpRe.findFirstIn(name).isDefined &&
+         if publishTmpRe.findFirstIn(name).isDefined &&
            now - st.getModificationTime >= olderThanMs) {
       if (fs.delete(st.getPath, false)) n += 1
     }
@@ -1197,10 +891,9 @@ object SnapshotTable {
     * column scans once and every later run touches only new dirs. Dirs
     * physically lacking the column (pre-ADD-evolution) get no entry —
     * pruning keeps them, the direction that errs wide. The report names
-    * how many dirs REMAIN uncovered (column physically absent, all-null,
-    * or min/max carrying a manifest delimiter — those re-scan on every
-    * ANALYZE, so a persistent nonzero count is the operator's signal to
-    * pick another stats column). Commits only when new entries landed —
+    * how many dirs REMAIN uncovered (column physically absent or
+    * all-null — those re-scan on every ANALYZE, so a persistent nonzero
+    * count is the operator's signal to pick another stats column). Commits only when new entries landed —
     * no empty version boundary. Refused on rename/drop-evolved tables:
     * bounds are keyed by the name pruning probes with, which must equal
     * the dirs' physical column name — optimizeZorder (which normalizes
@@ -1234,8 +927,6 @@ object SnapshotTable {
           val fields = spark.read.parquet(d).schema.fieldNames.toSet
           if (!fields(statsCol)) Nil
           else computeBounds(spark, Seq(d), statsCol)
-            .filter(b => Seq(b.dir, b.col, b.typ, b.min, b.max).forall(
-              f => !f.exists(ch => ch == '|' || ch == ',' || ch == '\n')))
         })
       }
       val uncovered = missing.size - fresh.size
@@ -1248,11 +939,7 @@ object SnapshotTable {
         // lost the version claim to a concurrent committer — fold onto
         // the winner's head instead of discarding the computed bounds
         // (the ADVICE r17 finding: every other multi-step op retries)
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -1297,9 +984,6 @@ object SnapshotTable {
     require(cols.nonEmpty, "analyzeColumnStats needs at least one column")
     require(cols.distinct.size == cols.size,
       s"duplicate columns in $cols")
-    for (c <- cols)
-      require(!c.exists(ch => ch == '|' || ch == ',' || ch == '\n'),
-        s"column name '$c' holds a manifest delimiter")
     // per-dir scan results memoized across OCC retries (the
     // analyzeBounds discipline): a lost version claim re-commits the
     // additive entries onto the winner's head without re-paying the
@@ -1377,11 +1061,7 @@ object SnapshotTable {
           rowCounts = snap.rowCounts ++ freshRows))
         return AnalyzeColsReport(v, fresh.size, uncovered)
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -1487,11 +1167,7 @@ object SnapshotTable {
           snap.copy(checks = snap.checks :+ (name -> exprSql)))
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -1515,11 +1191,7 @@ object SnapshotTable {
           snap.copy(checks = snap.checks.filterNot(_._1 == name)))
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -1601,18 +1273,14 @@ object SnapshotTable {
     // fork clamps come from the RAW fork markers, not listBranches: a
     // crashed createBranch (marker claimed, clone not yet committed)
     // must still hold its fork version until completed or dropped, or
-    // the half-created branch becomes permanently uncompletable. The
-    // retry read covers a LIVE createBranch's claimed-but-unwritten
-    // window — expire must wait the winner's few-byte write out, not
-    // fail spuriously as partial/corrupt.
+    // the half-created branch becomes permanently uncompletable.
     val forkFloors = {
       val b = new Path(base)
       val fs = fsFor(spark, b)
       if (!fs.exists(b)) Nil
       else fs.listStatus(b).iterator.filter(_.isDirectory)
         .map(_.getPath.getName).filter(_.startsWith("_branch_"))
-        .flatMap(n => readRefVersionRetry(spark,
-          forkPath(s"$base/$n"))).toSeq
+        .flatMap(n => readRef(spark, forkPath(s"$base/$n"))).toSeq
     }
     val refFloor =
       (listTags(spark, base).map(_._2) ++ forkFloors).minOption
@@ -1639,8 +1307,7 @@ object SnapshotTable {
       if (!fs.exists(b)) Nil
       else fs.listStatus(b).iterator.filter(_.isDirectory)
         .map(_.getPath.getName).filter(_.startsWith("_branch_"))
-        .flatMap(n => readRefVersionRetry(spark,
-          forkPath(s"$base/$n"))).toSeq
+        .flatMap(n => readRef(spark, forkPath(s"$base/$n"))).toSeq
     }
     val refFloor =
       (listTags(spark, base).map(_._2) ++ forkFloors).minOption
@@ -1745,7 +1412,7 @@ object SnapshotTable {
         val bb = branchBase(base, n)
         val h = headVersion(spark, bb)
         if (h < 1) None
-        else readRefVersionRetry(spark, forkPath(bb)).map(f => (n, h, f))
+        else readRef(spark, forkPath(bb)).map(f => (n, h, f))
       }.toSeq.sortBy(_._1)
   }
 
@@ -1777,17 +1444,7 @@ object SnapshotTable {
     val bb = branchBase(base, name)
     require(headVersion(spark, bb) == 0,
       s"branch $name already exists under $base")
-    val p = forkPath(bb)
-    val fs = fsFor(spark, p)
-    def forkVersion(): Int = readRefVersionRetry(spark, p).getOrElse(
-      throw new IllegalStateException(s"fork marker vanished under $bb"))
-    if (!fs.exists(p)) {
-      try writeVia(fs, p, refBody(s"version=$head\n"), head)
-      catch {
-        case e: java.io.IOException => if (!fs.exists(p)) throw e
-      }
-    }
-    val fork = forkVersion() // the claim winner's fork point
+    val fork = putRef(spark, forkPath(bb), head) // the claim winner's
     cloneAt(spark, base, fork, bb) // idempotent: commit's replay contract
     fork
   }
@@ -1805,7 +1462,7 @@ object SnapshotTable {
     val bb = branchBase(base, name)
     val bHead = headVersion(spark, bb)
     require(bHead >= 1, s"no branch $name under $base")
-    val fork = readRefVersionRetry(spark, forkPath(bb)).getOrElse(
+    val fork = readRef(spark, forkPath(bb)).getOrElse(
       throw new IllegalArgumentException(
         s"branch $name has no fork marker — not a branch created by " +
           "createBranch"))
@@ -2032,12 +1689,11 @@ object SnapshotTable {
     * marginal column-pruned read of the ONE new dir — without this,
     * every compact/update/merge would permanently degrade its hit dirs
     * to always-scanned and manifest pruning would decay as the table
-    * ages. A column the rewrite made un-encodable (dropped, an
-    * unsupported type after a SET, or a value carrying a manifest
-    * delimiter) contributes NO entry for this dir — always scanned,
-    * the safe direction and the pre-rebound behavior. */
+    * ages. A column the rewrite made un-encodable (dropped, or an
+    * unsupported type after a SET) contributes NO entry for this dir —
+    * always scanned, the safe direction and the pre-rebound behavior. */
   /** Fresh-dir COLUMN STATS + ROW COUNT for a rewrite commit — the
-    * [[reboundDir]] idea for the `colstats=`/`rows=` lines: recompute
+    * [[reboundDir]] idea for the colstats/rows lists: recompute
     * (exact ndv, nulls) for every column the PRIOR manifest fully
     * covered, and the row count when the prior manifest was fully
     * counted, so stats-driven planning (CBO sizing, metadata COUNT,
@@ -2107,8 +1763,7 @@ object SnapshotTable {
       else
         try computeBounds(spark, Seq(dir), c)
         catch { case _: IllegalArgumentException => Nil }
-    }.filter(b => Seq(b.dir, b.col, b.typ, b.min, b.max)
-      .forall(f => !f.exists(ch => ch == '|' || ch == ',' || ch == '\n')))
+    }
   }
 
   /** Row-level `UPDATE WHERE` — COPY-ON-WRITE of only the dirs holding a
@@ -2790,14 +2445,8 @@ object SnapshotTable {
             rowCounts = prior.rowCounts + (epochDir -> epochRows)))
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") =>
+        case _: CommitConflict if attempt < 20 =>
           // lost the version-number race — fold onto the winner's head
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 20 =>
-          // racer claimed the version file between commit's exists()
-          // probe and its O_EXCL create — same lost race, surfaced by
-          // the filesystem instead of the content check
       }
     }
     throw new IllegalStateException(
@@ -2832,10 +2481,6 @@ object SnapshotTable {
       .map(st => IngestedFile(gfs.makeQualified(st.getPath).toString,
         st.getLen, st.getModificationTime))
       .sortBy(_.path).toSeq
-    for (f <- listed)
-      require(!f.path.exists(c => c == '|' || c == ',' || c == '\n'),
-        s"landing file path '${f.path}' holds a manifest delimiter — " +
-          "the ledger could not record it; rename the file")
     // staged state carried across OCC retries; re-staged only when the
     // fresh set (a racer ingested some of our files) or the rename map
     // (a racer evolved/normalized names) drifted
@@ -2920,11 +2565,7 @@ object SnapshotTable {
         return IngestFilesReport(head + 1, fresh.size,
           listed.size - fresh.size)
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -2950,7 +2591,8 @@ object SnapshotTable {
   }
 
   /** The manifest file path for version `v` — exposed so write-once MV
-    * layers can name it as their (tiny) fingerprint input. */
+    * layers can name it as their (tiny) fingerprint input, and callers
+    * can read or pin its mtime (the [[versionAsOf]] clock). */
   def manifestFile(base: String, v: Int): String =
     manifestPath(base, v).toString
 
@@ -3375,8 +3017,7 @@ object SnapshotTable {
       s"column $from is a declared write-order column — renaming it " +
         "would orphan the table's WRITE ORDERED BY; clear the order " +
         "first")
-    require(to.nonEmpty && !to.exists(c => c == '|' || c == ',' ||
-      c == '\n'), s"column name '$to' holds a manifest delimiter")
+    require(to.nonEmpty, "the new column name is empty")
     val physical = snap.renames.getOrElse(from, from)
     // renaming BACK to the column's own stored physical name is an
     // un-rename (the mapping just drops) — only OTHER ghost names would
@@ -3552,11 +3193,7 @@ object SnapshotTable {
         commit(spark, base, head + 1, next)
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(
@@ -3628,11 +3265,7 @@ object SnapshotTable {
           writeOrderSlices = if (cols.isEmpty) 0 else slices))
         return head + 1
       } catch {
-        case e: IllegalArgumentException
-            if attempt < 20 && e.getMessage != null && e.getMessage
-              .contains("already committed with different content") => ()
-        case _: java.nio.file.FileAlreadyExistsException
-            if attempt < 20 => ()
+        case _: CommitConflict if attempt < 20 => ()
       }
     }
     throw new IllegalStateException(

@@ -37,7 +37,7 @@ final class Gate private (val tmp: java.io.File, val sink: String) {
 
 object Gate {
 
-  /** A gate over the fresh scratch dir `<name>-<sf>`
+  /** A gate over the fresh scratch dir `<name>-<sf>-<format>`
     * ([[graft.queries.Scratch.fresh]]); its sink name is `<name>_<nanoTime>`
     * so repeated runs in one session never collide. */
   def apply(name: String, sfDir: String): Gate =

@@ -187,15 +187,22 @@ class PartitionSpecPropertySpec extends SparkTestBase {
     }
   }
 
-  test("validate refuses delimiter-bearing source column names (a '|' " +
-      "in a backtick-legal name would commit an unparseable manifest)") {
-    val schema = StructType(Seq("a|b", "a,b", "a;b", "a:b", "a=b", "ok")
-      .map(StructField(_, StringType)))
-    for (bad <- Seq("a|b", "a,b", "a;b", "a:b", "a=b"))
-      assert(intercept[IllegalArgumentException] {
-        PartitionSpec.validate(PartField("identity", 0, bad), schema)
-      }.getMessage.contains("delimiter"), bad)
-    PartitionSpec.validate(PartField("identity", 0, "ok"), schema)
+  test("source column names holding , | ; : = validate, route, and " +
+      "round-trip the manifest's partition spec") {
+    import graft.sources.SnapshotTable
+    val names = Seq("a|b", "a,b", "a;b", "a:b", "a=b", "a,b|c;d")
+    val schema = StructType(names.map(StructField(_, StringType)))
+    val base = java.nio.file.Files.createTempDirectory("pspec").toString
+    spark.range(1).write.parquet(s"$base/d")
+    for ((n, v) <- names.zip(1 to names.size)) {
+      val f = PartField("identity", 0, n)
+      PartitionSpec.validate(f, schema)
+      assert(sqlValues(f, StringType, Seq("x,|y")) == Seq("x,|y"))
+      val snap = SnapshotTable.Snapshot(Seq(s"$base/d"), Nil,
+        partSpec = Seq(f), partVals = Map(s"$base/d" -> Seq("x,|y")))
+      SnapshotTable.commit(spark, base, v, snap)
+      assert(SnapshotTable.manifest(spark, base, v) == snap, n)
+    }
   }
 
   test("parse round-trips the user-facing textual form (the CALL " +

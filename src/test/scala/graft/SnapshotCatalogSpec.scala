@@ -1234,8 +1234,8 @@ class SnapshotCatalogSpec extends SparkTestBase {
         + 10L * 10 + 20L * 10))
   }
 
-  test("hidden partitioning: truncate/identity transforms, " +
-      "delimiter-unsafe value refusal, unsupported transform refusal") {
+  test("hidden partitioning: truncate/identity transforms, values " +
+      "holding , | ; route and prune, unsupported transform refusal") {
     val root = Files.createTempDirectory("snapcat").toString
     setupCatalog("snappu", root)
     val base = s"$root/u"
@@ -1262,16 +1262,19 @@ class SnapshotCatalogSpec extends SparkTestBase {
       "SELECT COUNT(*) AS n FROM snappu.u WHERE g = 20").head
     val (kept3, total3) = graft.plans.SnapshotDmlRule.lastPrune.get(base)
     assert(kept3 < total3 && r3.getLong(0) == 1L)
-    // a partition value that would corrupt the manifest refuses the
-    // WRITE loudly (nothing commits)
-    val headBefore = ST.headVersion(spark, base)
-    val e = intercept[Exception] {
-      spark.sql("INSERT INTO snappu.u VALUES (9, 'a|b', 30)") }
-    assert(Iterator.iterate(e: Throwable)(_.getCause)
-      .takeWhile(_ != null).take(8)
-      .exists(t => t.getMessage != null &&
-        t.getMessage.contains("manifest delimiter")), e.getMessage)
-    assert(ST.headVersion(spark, base) == headBefore)
+    // partition values holding , | ; land in their own dirs, their
+    // tuples round-trip the manifest, and point probes prune to them
+    spark.sql("INSERT INTO snappu.u VALUES (9, 'a|b', 30), (10, ',;x', 30)")
+    val tuples4 = ST.manifest(spark, base, ST.headVersion(spark, base))
+      .partVals.values.toSet
+    assert(tuples4.contains(Seq("a|", "30")) &&
+      tuples4.contains(Seq(",;", "30")), tuples4)
+    for ((v, k) <- Seq(("a|b", 9L), (",;x", 10L))) {
+      graft.plans.SnapshotDmlRule.lastPrune.remove(base)
+      val r4 = spark.sql(s"SELECT k FROM snappu.u WHERE s = '$v'").collect()
+      val (kept4, total4) = graft.plans.SnapshotDmlRule.lastPrune.get(base)
+      assert(kept4 < total4 && r4.map(_.getLong(0)).toSeq == Seq(k), v)
+    }
     // hours(ts): UTC hour floor, fixed-width rendering, range pruning
     spark.sql("CREATE TABLE snappu.h (k BIGINT, ts TIMESTAMP) " +
       "PARTITIONED BY (hours(ts))")
@@ -1841,6 +1844,39 @@ class SnapshotCatalogSpec extends SparkTestBase {
       "a cleared order must stop recording bounds")
     assert(spark.sql("SELECT COUNT(*) FROM snapwo.t").head.getLong(0)
       == 1401L)
+  }
+
+  test("a column named `a,b|c;d` round-trips a rename, WRITE ORDERED " +
+      "BY, bounds pruning and column stats") {
+    val root = Files.createTempDirectory("snapcat").toString
+    setupCatalog("snapodd", root)
+    val odd = "a,b|c;d"
+    spark.sql("CREATE TABLE snapodd.r (k BIGINT, v BIGINT)")
+    spark.sql("INSERT INTO snapodd.r VALUES (1, 10), (2, 20)")
+    spark.sql(s"ALTER TABLE snapodd.r RENAME COLUMN v TO `$odd`")
+    val rbase = s"$root/r"
+    assert(ST.manifest(spark, rbase, ST.headVersion(spark, rbase))
+      .renames == Map(odd -> "v"))
+    assert(spark.sql(s"SELECT SUM(`$odd`) FROM snapodd.r").head
+      .getLong(0) == 30L)
+    spark.sql(s"ALTER TABLE snapodd.r RENAME COLUMN `$odd` TO v")
+    assert(spark.sql("SELECT SUM(v) FROM snapodd.r").head.getLong(0) == 30L)
+    spark.sql(s"CREATE TABLE snapodd.w (k BIGINT, `$odd` BIGINT)")
+    val wbase = s"$root/w"
+    ST.alterWriteOrder(spark, wbase, Seq(odd), 4)
+    spark.sql("INSERT INTO snapodd.w " +
+      "SELECT id AS k, (id * 37) % 1000 FROM range(1000)")
+    val wm = ST.manifest(spark, wbase, ST.headVersion(spark, wbase))
+    assert(wm.writeOrder == Seq(odd) && wm.bounds.count(_.col == odd) == 4,
+      wm.toString)
+    graft.plans.SnapshotDmlRule.lastPrune.remove(wbase)
+    assert(spark.sql(s"SELECT COUNT(*) FROM snapodd.w WHERE `$odd` < 50")
+      .head.getLong(0) == 50L)
+    val (kept, total) = graft.plans.SnapshotDmlRule.lastPrune.get(wbase)
+    assert(kept < total, s"range probe must prune ($kept/$total)")
+    val v = ST.analyzeColumnStats(spark, wbase, Seq(odd)).version
+    val (ndv, nulls) = ST.manifestColumnStats(ST.manifest(spark, wbase, v))(odd)
+    assert(nulls == 0L && math.abs(ndv - 1000L) <= 50L, (ndv, nulls))
   }
 
   test("WRITE ORDERED BY landing plans exactly ONE sort (r21: the slice " +

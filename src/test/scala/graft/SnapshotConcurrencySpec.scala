@@ -6,12 +6,12 @@ import java.util.concurrent.CountDownLatch
 import graft.sources.SnapshotTable
 import graft.sources.SnapshotTable.Snapshot
 
-/** Optimistic concurrency of snapshot commits: the version number is
-  * claimed with the store's atomic create-if-absent, so two writers
-  * racing for the same version can never silently clobber each other —
-  * the loser either idempotently replays an identical snapshot or fails
-  * with the committed-differently conflict, and the surviving manifest is
-  * always EXACTLY one writer's content (the crc footer rejects any mix).
+/** Optimistic concurrency of snapshot commits: a version's manifest is
+  * published put-if-absent as a complete file, so two writers racing for
+  * the same version can never silently clobber each other — the loser
+  * either idempotently replays an identical snapshot or fails with the
+  * committed-differently conflict, and the surviving manifest is always
+  * EXACTLY one writer's content, readable from the moment it exists.
   */
 class SnapshotConcurrencySpec extends SparkTestBase {
 
@@ -64,26 +64,18 @@ class SnapshotConcurrencySpec extends SparkTestBase {
     ready.await(); go.countDown()
     tx.join(30000); ty.join(30000)
     // invariant: whatever the interleaving, the surviving manifest reads
-    // VALIDLY (footer-checked) as exactly one racer's snapshot — or, if
-    // both writers' bytes interleaved, the footer rejects it loudly; a
-    // silent mix is the one impossible outcome
-    val head = try Some(SnapshotTable.manifest(spark, base, 1)) catch {
-      case _: IllegalArgumentException => None
-    }
-    head match {
-      case Some(s) =>
-        assert(s == Snapshot(Seq(s"$base/dX"), Nil) ||
-          s == Snapshot(Seq(s"$base/dY"), Nil),
-          s"manifest is a mix of both writers: $s")
-        // the racer whose content lost must have seen the conflict (unless
-        // its bytes ARE the survivor's — then it replayed idempotently)
-        val loserErr = if (s.dataDirs == Seq(s"$base/dX")) errY else errX
-        assert(loserErr.isDefined,
-          "both racers claim success for different content")
-      case None =>
-        // interleaved partial — rejected loudly; a recommit repairs it
-        assert(errX.isDefined || errY.isDefined)
-    }
+    // VALIDLY as exactly one racer's snapshot — a mix or a partial file is
+    // impossible, since only a complete file is ever published
+    val s = SnapshotTable.manifest(spark, base, 1)
+    assert(s == Snapshot(Seq(s"$base/dX"), Nil) ||
+      s == Snapshot(Seq(s"$base/dY"), Nil),
+      s"manifest is a mix of both writers: $s")
+    // the racer whose content lost must have seen the conflict
+    val (winErr, loseErr) =
+      if (s.dataDirs == Seq(s"$base/dX")) (errX, errY) else (errY, errX)
+    assert(winErr.isEmpty, s"the winner failed: $winErr")
+    assert(loseErr.exists(_.isInstanceOf[SnapshotTable.CommitConflict]),
+      s"both racers claim success for different content: $loseErr")
   }
 
   test("dropBranch racing publishBranch: main's head never references " +
@@ -171,30 +163,57 @@ class SnapshotConcurrencySpec extends SparkTestBase {
         s"head lost the $c bounds for $d")
   }
 
-  test("ref listings wait out a creator's claimed-but-unwritten window " +
-      "instead of failing as partial/corrupt") {
+  test("readers racing commits and tag creation on one base never see " +
+      "a partial manifest or ref") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
     val base = freshBase()
-    writeNums(s"$base/d1", 0, 5)
-    SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
-    // simulate a createTag winner mid-write: the O_EXCL claim (empty
-    // file) exists, the few-byte body has not landed yet
-    val tagFile = java.nio.file.Paths.get(base, "_TAG_rel")
-    java.nio.file.Files.createFile(tagFile)
-    val writer = new Thread(() => {
-      Thread.sleep(150)
-      val core = "version=1\n"
-      val crc = new java.util.zip.CRC32()
-      crc.update(core.getBytes("UTF-8"))
-      java.nio.file.Files.write(tagFile,
-        f"${core}crc=${crc.getValue}%08x\n".getBytes("UTF-8")): Unit
+    writeNums(s"$base/d0", 0, 5)
+    val dirs = (1 to 6).map { i =>
+      writeNums(s"$base/d$i", i * 10, i * 10 + 3); s"$base/d$i" }
+    SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d0"), Nil))
+    // writer w commits v with content of its own, so every version has
+    // one winner and one CommitConflict loser; both then create the
+    // same tag (an idempotent race)
+    def snapOf(w: Int, v: Int) =
+      Snapshot(Seq(s"$base/d0", dirs(v % dirs.size)).take(w + 1), Nil)
+    val done = new AtomicBoolean(false)
+    val reads = new AtomicInteger(0)
+    val errs = new ConcurrentLinkedQueue[Throwable]()
+    val go = new CountDownLatch(1)
+    def thread(body: => Unit) = new Thread(() => {
+      go.await()
+      try body catch { case t: Throwable => errs.add(t): Unit }
     })
-    writer.start()
-    // pre-fix behavior: an immediate un-retried read threw
-    // "partial/corrupt"; the retry read classifies the window as
-    // "winner still writing" and returns the landed tag
-    val tags = SnapshotTable.listTags(spark, base)
-    writer.join(10000)
-    assert(tags == Seq("rel" -> 1), s"listTags saw $tags")
+    val writers = (0 to 1).map(w => thread {
+      for (v <- 2 to 41) {
+        try SnapshotTable.commit(spark, base, v, snapOf(w, v))
+        catch { case _: SnapshotTable.CommitConflict => () }
+        SnapshotTable.createTag(spark, base, s"t$v", v)
+      }
+    })
+    val readers = (0 to 1).map(_ => thread {
+      while (!done.get) {
+        val h = SnapshotTable.headVersion(spark, base)
+        val m = SnapshotTable.manifest(spark, base, h)
+        assert(h == 1 || m == snapOf(0, h) || m == snapOf(1, h), m)
+        for ((n, v) <- SnapshotTable.listTags(spark, base))
+          assert(n == s"t$v", s"tag $n points at v$v")
+        assert(SnapshotTable.readTagVersion(spark, base, s"t$h")
+          .forall(_ == h))
+        reads.incrementAndGet(): Unit
+      }
+    })
+    (writers ++ readers).foreach(_.start())
+    go.countDown()
+    writers.foreach(_.join(60000))
+    done.set(true)
+    readers.foreach(_.join(60000))
+    assert(errs.isEmpty, errs)
+    assert(reads.get > 0)
+    assert(SnapshotTable.headVersion(spark, base) == 41)
+    assert(SnapshotTable.listTags(spark, base).toMap ==
+      (2 to 41).map(v => s"t$v" -> v).toMap)
   }
 
   test("expire_snapshots racing a reader of a to-be-retired version: " +

@@ -158,14 +158,15 @@ class SnapshotTableSpec extends SparkTestBase {
     writeNums(s"$base/d1", 0, 10)
     SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
     SnapshotTable.deleteWhere(spark, base, "k", col("k") < 2)
-    // a racing committer's claimed-but-unwritten manifest (the O_EXCL
-    // empty file before its body lands): the phantom head must surface
-    // loudly, never compact as if it were readable committed history
+    // an empty manifest file (store damage — publish never leaves one):
+    // the phantom head must surface loudly, never compact as if it were
+    // readable committed history
     Files.createFile(java.nio.file.Paths.get(s"$base/_MANIFEST_v3"))
     val e = intercept[IllegalArgumentException] {
       SnapshotTable.compact(spark, base, "k")
     }
-    assert(e.getMessage.contains("crc footer"), e.getMessage)
+    assert(e.getMessage.contains("partial/corrupt manifest v3"),
+      e.getMessage)
     Files.delete(java.nio.file.Paths.get(s"$base/_MANIFEST_v3"))
     // caller data carrying the staging column name must be rejected
     val base2 = freshBase()
@@ -272,14 +273,15 @@ class SnapshotTableSpec extends SparkTestBase {
       .collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
       (0 until 10).filterNot(_ == 1)
         .map(i => (i, if (i < 3) i + 100 else i)))
-    // a racing committer's claimed-but-unwritten manifest: loud, never a
-    // silent update of a phantom head
+    // an empty manifest file (store damage): loud, never a silent update
+    // of a phantom head
     Files.createFile(java.nio.file.Paths.get(s"$base/_MANIFEST_v4"))
     val e2 = intercept[IllegalArgumentException] {
       SnapshotTable.updateWhere(spark, base, col("k") < 1,
         Seq("v" -> lit(0)))
     }
-    assert(e2.getMessage.contains("crc footer"), e2.getMessage)
+    assert(e2.getMessage.contains("partial/corrupt manifest v4"),
+      e2.getMessage)
   }
 
   test("mergeInto replaces matched rows, appends new keys, rewrites only " +
@@ -595,15 +597,13 @@ class SnapshotTableSpec extends SparkTestBase {
     val base = freshBase()
     writeNums(s"$base/d1", 0, 5)
     SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
-    // Simulate an object-store partial rename: truncate the committed
-    // manifest mid-body. The reader must refuse it, not resurrect state.
-    // Object stores have no checksum sidecars, so drop LocalFS's `.crc`
-    // companion — otherwise ChecksumFileSystem rejects the read before the
-    // engine's own footer validation (the path under test) ever runs.
+    // Simulate store damage: truncate the committed manifest mid-body.
+    // The reader must refuse it, not resurrect state. (A published
+    // manifest carries no LocalFS `.crc` companion, so the document's own
+    // checksum is the path under test.)
     val resolved = java.nio.file.Paths.get(s"$base/_MANIFEST_v1")
-    val sidecar = java.nio.file.Paths.get(s"$base/._MANIFEST_v1.crc")
     assert(Files.exists(resolved), s"no v1 manifest found under $base")
-    Files.deleteIfExists(sidecar)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$base/._MANIFEST_v1.crc")))
     val full = Files.readAllBytes(resolved)
     Files.write(resolved, java.util.Arrays.copyOfRange(full, 0, full.length / 2))
     val partial = intercept[IllegalArgumentException] {
@@ -616,24 +616,26 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(SnapshotTable.readVersion(spark, base, 1, "k").count() == 5)
   }
 
-  test("pre-footer manifest is footer-upgraded by an identical recommit") {
+  test("a manifest that is not a checksummed document is refused on " +
+      "read and on recommit, never overwritten") {
     val base = freshBase()
     writeNums(s"$base/d1", 0, 5)
-    // A manifest from before the crc footer existed: core lines only.
-    Files.write(java.nio.file.Paths.get(s"$base/_MANIFEST_v1"),
-      s"data=$base/d1\ndelete=\n".getBytes("UTF-8"))
-    // Reading it directly is refused (no footer)...
-    intercept[IllegalArgumentException] {
-      SnapshotTable.manifest(spark, base, 1)
-    }
-    // ...but recommitting the SAME snapshot upgrades it in place,
-    SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
-    assert(SnapshotTable.readVersion(spark, base, 1, "k").count() == 5)
-    // while committed history stays immutable for different content.
-    writeNums(s"$base/d2", 5, 8)
-    intercept[IllegalArgumentException] {
-      SnapshotTable.commit(spark, base, 1,
-        Snapshot(Seq(s"$base/d1", s"$base/d2"), Nil))
+    // the pre-JSON line format, and a JSON body whose crc was not
+    // recomputed after an edit: both are damage, not history
+    val mp = java.nio.file.Paths.get(SnapshotTable.manifestFile(base, 1))
+    val line = s"data=$base/d1\ndelete=\ncrc=00000000\n"
+    SnapshotTable.commit(spark, base, 2, Snapshot(Seq(s"$base/d1"), Nil))
+    val edited = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      SnapshotTable.manifestFile(base, 2))), "UTF-8").replace("/d1", "/d2")
+    for (body <- Seq(line, edited)) {
+      Files.write(mp, body.getBytes("UTF-8"))
+      for (read <- Seq(() => SnapshotTable.manifest(spark, base, 1): Unit,
+          () => SnapshotTable.commit(spark, base, 1,
+            Snapshot(Seq(s"$base/d1"), Nil))))
+        assert(intercept[IllegalArgumentException](read())
+          .getMessage.contains("partial/corrupt manifest v1"))
+      assert(new String(Files.readAllBytes(mp), "UTF-8") == body,
+        "a recommit must never overwrite a damaged manifest")
     }
   }
 
@@ -789,18 +791,15 @@ class SnapshotTableSpec extends SparkTestBase {
     val base = freshBase()
     writeKv(s"$base/d1", 0, 5)
     SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
+    // simulate a crash between the _FORK claim (at v1) and the clone
+    // commit: marker exists, branch head == 0, listBranches omits it
+    assert(SnapshotTable.createBranch(spark, base, "wip") == 1)
+    val bb = SnapshotTable.branchBase(base, "wip")
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(SnapshotTable.manifestFile(bb, 1)))
     writeKv(s"$base/d2", 5, 10)
     SnapshotTable.commit(spark, base, 2,
       Snapshot(Seq(s"$base/d1", s"$base/d2"), Nil))
-    // simulate a crash between the _FORK claim (at v1) and the clone
-    // commit: marker exists, branch head == 0, listBranches omits it
-    val bb = SnapshotTable.branchBase(base, "wip")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(bb))
-    val core = "version=1\n"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$bb/_FORK"),
-      core + f"crc=${new java.util.zip.CRC32 {
-        update(core.getBytes("UTF-8")) }.getValue}%08x\n")
     assert(SnapshotTable.listBranches(spark, base).isEmpty)
     // expire with an aggressive keep_from: the RAW marker must clamp
     // retention to v1 (listBranches alone would let v1 vacuum away and
@@ -933,6 +932,22 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(e.getMessage.contains("did not exist"), e.getMessage)
   }
 
+  test("a published manifest's mtime is its commit instant: versionAsOf " +
+      "resolves a just-committed version by the wall clock") {
+    val base = freshBase()
+    writeKv(s"$base/d1", 0, 10)
+    val before = System.currentTimeMillis()
+    SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
+    val after = System.currentTimeMillis()
+    val mtime = new java.io.File(SnapshotTable.manifestFile(base, 1))
+      .lastModified
+    // the filesystem clock may trail the JVM's by a coarse tick
+    assert(mtime >= before - 1000 && mtime <= after, (before, mtime, after))
+    assert(SnapshotTable.versionAsOf(spark, base, after) == 1)
+    // no publish temp is left behind beside the manifest
+    assert(new java.io.File(base).list.forall(!_.endsWith(".tmp")))
+  }
+
   test("OPTIMIZE bin-packs small dirs into one, keeps big dirs and the " +
       "delete set, rebounds the packed dir; sub-2 packing is a no-op") {
     val base = freshBase()
@@ -975,8 +990,8 @@ class SnapshotTableSpec extends SparkTestBase {
     }
   }
 
-  test("bounds computation: all-null dirs get no entry, delimiter values " +
-      "and unorderable types are refused loudly") {
+  test("bounds computation: all-null dirs get no entry, values holding " +
+      ", | ; round-trip, and unorderable types are refused loudly") {
     import spark.implicits._
     val base = freshBase()
     Seq((1, Option.empty[Int]), (2, Option.empty[Int]))
@@ -985,14 +1000,17 @@ class SnapshotTableSpec extends SparkTestBase {
     // all-null stats col: no entry (dir is always kept — safe direction)
     assert(SnapshotTable.computeBounds(
       spark, Seq(s"$base/dnull"), "s").isEmpty)
-    // a string value holding the manifest delimiter: commit refuses
-    Seq(("a|b", 1)).toDF("name", "v").write.parquet(s"$base/dbad")
-    val bad = SnapshotTable.computeBounds(spark, Seq(s"$base/dbad"), "name")
-    val e = intercept[IllegalArgumentException] {
-      SnapshotTable.commit(spark, base, 1,
-        Snapshot(Seq(s"$base/dbad"), Nil, bad))
-    }
-    assert(e.getMessage.contains("delimiter"), e.getMessage)
+    // string values holding , | ; and a newline: stored and read back
+    // exactly, and they prune like any other bounds
+    Seq(("a|b,c", 1), ("z;d\ne", 2)).toDF("name", "v")
+      .write.parquet(s"$base/dodd")
+    val odd = SnapshotTable.computeBounds(spark, Seq(s"$base/dodd"), "name")
+    assert(odd.map(b => (b.min, b.max)) == Seq(("a|b,c", "z;d\ne")))
+    SnapshotTable.commit(spark, base, 1,
+      Snapshot(Seq(s"$base/dodd"), Nil, odd))
+    assert(SnapshotTable.manifest(spark, base, 1).bounds == odd)
+    assert(SnapshotTable.readVersionPruned(spark, base, 1, "v", "name",
+      "zz", "zzz")._2 == SnapshotTable.PruneReport(0, 1))
     // a double stats column: refused (string encoding would not preserve
     // value order)
     Seq((1.5, 1)).toDF("d", "v").write.parquet(s"$base/ddbl")
@@ -1003,7 +1021,7 @@ class SnapshotTableSpec extends SparkTestBase {
     // bounds naming a dir outside the data set: refused
     val ok = SnapshotTable.computeBounds(spark, Seq(s"$base/dv"), "k")
     val e3 = intercept[IllegalArgumentException] {
-      SnapshotTable.commit(spark, base, 1,
+      SnapshotTable.commit(spark, base, 2,
         Snapshot(Seq(s"$base/dnull"), Nil, ok))
     }
     assert(e3.getMessage.contains("outside"), e3.getMessage)
@@ -1062,9 +1080,9 @@ class SnapshotTableSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       SnapshotTable.optimizeZorder(spark, base, "k", "x", "nope", 4)
     }
-    // a racing committer's claimed-but-unwritten manifest (the O_EXCL
-    // empty file before its body lands): the phantom head surfaces loudly
-    // through the manifest read, never rewrites as if it were history
+    // an empty manifest file (store damage): the phantom head surfaces
+    // loudly through the manifest read, never rewrites as if it were
+    // history
     val raced = freshBase()
     writeGrid(s"$raced/d0", 4)
     SnapshotTable.commit(spark, raced, 1, Snapshot(Seq(s"$raced/d0"), Nil))
@@ -1072,7 +1090,8 @@ class SnapshotTableSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException] {
       SnapshotTable.optimizeZorder(spark, raced, "k", "x", "y", 4)
     }
-    assert(e.getMessage.contains("crc footer"), e.getMessage)
+    assert(e.getMessage.contains("partial/corrupt manifest v2"),
+      e.getMessage)
     // schema carrying the staging column: refused, never clobbered
     val zb = freshBase()
     Seq((1L, 1L, 1L, 0)).toDF("k", "x", "y", "zb")
@@ -1101,18 +1120,21 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(e4.getMessage.contains("empty"), e4.getMessage)
   }
 
-  test("commit refuses dir paths carrying manifest delimiters") {
+  test("dir paths holding , | ; and = round-trip the manifest") {
     val base = freshBase()
-    writeKv(s"$base/d1", 0, 5)
-    // a path with ',' or '|' would parse back into DIFFERENT dirs later —
-    // refused at commit, not discovered as a phantom replay conflict
-    for (bad <- Seq(s"$base/a,b", s"$base/a|b")) {
-      val e = intercept[IllegalArgumentException] {
-        SnapshotTable.commit(spark, base, 1,
-          Snapshot(Seq(s"$base/d1"), Seq(bad)))
-      }
-      assert(e.getMessage.contains("delimiter"), e.getMessage)
-    }
+    val odd = s"$base/d,1|x;y=z"
+    writeKv(odd, 0, 5)
+    writeNums(s"$base/del|,", 0, 2)
+    val snap = Snapshot(Seq(odd), Seq(s"$base/del|,"),
+      rowCounts = Map(odd -> 5L),
+      partSpec = Seq(graft.sources.PartitionSpec
+        .PartField("identity", 0, "k")),
+      partVals = Map(odd -> Seq("1,2|3")))
+    SnapshotTable.commit(spark, base, 1, snap)
+    assert(SnapshotTable.manifest(spark, base, 1) == snap)
+    // idempotent replay recognizes the identical snapshot
+    SnapshotTable.commit(spark, base, 1, snap)
+    assert(SnapshotTable.readVersion(spark, base, 1, "k").count() == 3)
   }
 
   test("rename evolution: mapped reads across mixed dirs, rewrite " +
@@ -1218,8 +1240,8 @@ class SnapshotTableSpec extends SparkTestBase {
     val base = java.nio.file.Files
       .createTempDirectory("snapmanifest").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$base/d1")
-    // the expression legitimately contains , | and quotes — the base64url
-    // line encoding exists exactly for this
+    // the expression legitimately contains , | and quotes, which the
+    // JSON document stores verbatim
     val nasty = "k > 0 AND (s IN ('a,b', 'c|d') OR s = 'x')"
     val snap = SnapshotTable.Snapshot(Seq(s"$base/d1"), Nil,
       rowCounts = Map(s"$base/d1" -> 2L),
@@ -1398,98 +1420,96 @@ class SnapshotTableSpec extends SparkTestBase {
       (0 until n).map(i =>
         SnapshotTable.IngestedFile(f"/lz/file_$i%05d.parquet", 100L + i,
           1000L + i))
-    val prev = SnapshotTable.sidecarSpillThreshold
-    SnapshotTable.sidecarSpillThreshold = 6
-    try {
-      // v1: 40 ledger entries spill; the manifest stays small and the
-      // parsed snapshot round-trips the exact entries
-      val s1 = Snapshot(Seq(s"$base/d1"), Nil, ingested = ledger(40))
-      SnapshotTable.commit(spark, base, 1, s1)
-      assert(sidecars().nonEmpty, "ledger must have spilled")
-      val m1 = SnapshotTable.manifest(spark, base, 1)
-      assert(m1.ingested == ledger(40).sortBy(_.path))
-      assert(manifestLen(1) < 1200,
-        s"manifest v1 is ${manifestLen(1)} bytes — entries inlined?")
-      // v2: +10 entries + 1 dir. O(delta): the manifest grows by the
-      // dir line + a few chunk names, NOT by re-inlining 50 entries,
-      // and only the touched chunk(s) write new sidecars
-      val before = sidecars()
-      SnapshotTable.commit(spark, base, 2, s1.copy(
-        dataDirs = Seq(s"$base/d1", s"$base/d2"),
-        ingested = ledger(50)))
-      val added = sidecars() -- before
-      assert(added.size <= 3,
-        s"adding 10 entries wrote ${added.size} new chunks — chunking " +
-          "is not content-defined")
-      assert(manifestLen(2) - manifestLen(1) < 400,
-        s"manifest grew ${manifestLen(2) - manifestLen(1)} bytes for a " +
-          "10-entry delta — commit payload is not O(delta)")
-      assert(SnapshotTable.manifest(spark, base, 2).ingested ==
-        ledger(50).sortBy(_.path))
-      // colstats spill the same way (8 entries over the 2 dirs)
-      val cs = for (d <- Seq(s"$base/d1", s"$base/d2");
-                    c <- Seq("a", "b", "c", "d"))
-        yield SnapshotTable.ColStats(d, c, 5L, 1L)
-      SnapshotTable.commit(spark, base, 3, s1.copy(
-        dataDirs = Seq(s"$base/d1", s"$base/d2"),
-        ingested = ledger(50), colStats = cs))
-      assert(SnapshotTable.manifest(spark, base, 3).colStats ==
-        cs.sortBy(x => (x.dir, x.col)))
-      // idempotent replay of a spilled manifest: same content, no error
-      SnapshotTable.commit(spark, base, 3, s1.copy(
-        dataDirs = Seq(s"$base/d1", s"$base/d2"),
-        ingested = ledger(50), colStats = cs))
-      // CRASH SHAPE 1 — a referenced sidecar goes missing (vacuumed
-      // from under a live manifest / torn store): the read is LOUD
-      val refName = sidecars().head
-      val refPath = new org.apache.hadoop.fs.Path(s"$base/$refName")
-      val bytes = {
-        val in = fs.open(refPath)
-        try { val b = new Array[Byte](
-          fs.getFileStatus(refPath).getLen.toInt)
-          in.readFully(b); b } finally in.close()
-      }
-      fs.delete(refPath, false)
-      val e1 = intercept[IllegalArgumentException] {
-        (1 to 3).foreach(v =>
-          SnapshotTable.manifest(spark, base, v): Unit)
-      }
-      assert(e1.getMessage.contains("does not exist"), e1.getMessage)
-      // CRASH SHAPE 2 — a truncated sidecar (partial write) fails its
-      // content hash loudly instead of parsing half a ledger
-      val out = fs.create(refPath, true)
-      try out.write(bytes.dropRight(7)) finally out.close()
-      val e2 = intercept[IllegalArgumentException] {
-        (1 to 3).foreach(v =>
-          SnapshotTable.manifest(spark, base, v): Unit)
-      }
-      assert(e2.getMessage.contains("content hash"), e2.getMessage)
-      // restore the real bytes: reads recover
-      val out2 = fs.create(refPath, true)
-      try out2.write(bytes) finally out2.close()
-      assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50)
-      // GC: vacuum to head keeps every sidecar the head references and
-      // drops old-only ones; the never-referenced crash orphan is swept
-      // age-gated (sweepStagingOrphans), never a live reference
-      val orphan = new org.apache.hadoop.fs.Path(
-        s"$base/_SIDECAR_${"0" * 32}.mf")
-      fs.create(orphan, true).close()
-      SnapshotTable.vacuum(spark, base, 3, 3): Unit
-      val headRefs = sidecars()
-      (1 to 2).foreach { v =>
-        assert(!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$base/_MANIFEST_v$v")))
-      }
-      assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50,
-        "vacuum must keep every sidecar the surviving head references")
-      assert(headRefs.contains(orphan.getName),
-        "vacuum must NOT touch unreferenced sidecars (in-flight commits)")
-      assert(SnapshotTable.sweepStagingOrphans(spark, base, 0L) >= 1)
-      assert(!fs.exists(orphan),
-        "the age-gated sweep collects crash-orphaned sidecars")
-      assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50,
-        "the sweep must keep referenced sidecars")
-    } finally SnapshotTable.sidecarSpillThreshold = prev
+    def commit(v: Int, snap: Snapshot): Unit =
+      SnapshotTable.commit(spark, base, v, snap, spillAt = 6)
+    // v1: 40 ledger entries spill; the manifest stays small and the
+    // parsed snapshot round-trips the exact entries
+    val s1 = Snapshot(Seq(s"$base/d1"), Nil, ingested = ledger(40))
+    commit(1, s1)
+    assert(sidecars().nonEmpty, "ledger must have spilled")
+    val m1 = SnapshotTable.manifest(spark, base, 1)
+    assert(m1.ingested == ledger(40).sortBy(_.path))
+    assert(manifestLen(1) < 1200,
+      s"manifest v1 is ${manifestLen(1)} bytes — entries inlined?")
+    // v2: +10 entries + 1 dir. O(delta): the manifest grows by the
+    // dir line + a few chunk names, NOT by re-inlining 50 entries,
+    // and only the touched chunk(s) write new sidecars
+    val before = sidecars()
+    commit(2, s1.copy(
+      dataDirs = Seq(s"$base/d1", s"$base/d2"),
+      ingested = ledger(50)))
+    val added = sidecars() -- before
+    assert(added.size <= 3,
+      s"adding 10 entries wrote ${added.size} new chunks — chunking " +
+        "is not content-defined")
+    assert(manifestLen(2) - manifestLen(1) < 400,
+      s"manifest grew ${manifestLen(2) - manifestLen(1)} bytes for a " +
+        "10-entry delta — commit payload is not O(delta)")
+    assert(SnapshotTable.manifest(spark, base, 2).ingested ==
+      ledger(50).sortBy(_.path))
+    // colstats spill the same way (8 entries over the 2 dirs)
+    val cs = for (d <- Seq(s"$base/d1", s"$base/d2");
+                  c <- Seq("a", "b", "c", "d"))
+      yield SnapshotTable.ColStats(d, c, 5L, 1L)
+    commit(3, s1.copy(
+      dataDirs = Seq(s"$base/d1", s"$base/d2"),
+      ingested = ledger(50), colStats = cs))
+    assert(SnapshotTable.manifest(spark, base, 3).colStats ==
+      cs.sortBy(x => (x.dir, x.col)))
+    // idempotent replay of a spilled manifest: same content, no error
+    commit(3, s1.copy(
+      dataDirs = Seq(s"$base/d1", s"$base/d2"),
+      ingested = ledger(50), colStats = cs))
+    // CRASH SHAPE 1 — a referenced sidecar goes missing (vacuumed
+    // from under a live manifest / torn store): the read is LOUD
+    val refName = sidecars().head
+    val refPath = new org.apache.hadoop.fs.Path(s"$base/$refName")
+    val bytes = {
+      val in = fs.open(refPath)
+      try { val b = new Array[Byte](
+        fs.getFileStatus(refPath).getLen.toInt)
+        in.readFully(b); b } finally in.close()
+    }
+    fs.delete(refPath, false)
+    val e1 = intercept[IllegalArgumentException] {
+      (1 to 3).foreach(v =>
+        SnapshotTable.manifest(spark, base, v): Unit)
+    }
+    assert(e1.getMessage.contains("does not exist"), e1.getMessage)
+    // CRASH SHAPE 2 — a truncated sidecar (partial write) fails its
+    // content hash loudly instead of parsing half a ledger
+    val out = fs.create(refPath, true)
+    try out.write(bytes.dropRight(7)) finally out.close()
+    val e2 = intercept[IllegalArgumentException] {
+      (1 to 3).foreach(v =>
+        SnapshotTable.manifest(spark, base, v): Unit)
+    }
+    assert(e2.getMessage.contains("content hash"), e2.getMessage)
+    // restore the real bytes: reads recover
+    val out2 = fs.create(refPath, true)
+    try out2.write(bytes) finally out2.close()
+    assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50)
+    // GC: vacuum to head keeps every sidecar the head references and
+    // drops old-only ones; the never-referenced crash orphan is swept
+    // age-gated (sweepStagingOrphans), never a live reference
+    val orphan = new org.apache.hadoop.fs.Path(
+      s"$base/_SIDECAR_${"0" * 32}.mf")
+    fs.create(orphan, true).close()
+    SnapshotTable.vacuum(spark, base, 3, 3): Unit
+    val headRefs = sidecars()
+    (1 to 2).foreach { v =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        s"$base/_MANIFEST_v$v")))
+    }
+    assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50,
+      "vacuum must keep every sidecar the surviving head references")
+    assert(headRefs.contains(orphan.getName),
+      "vacuum must NOT touch unreferenced sidecars (in-flight commits)")
+    assert(SnapshotTable.sweepStagingOrphans(spark, base, 0L) >= 1)
+    assert(!fs.exists(orphan),
+      "the age-gated sweep collects crash-orphaned sidecars")
+    assert(SnapshotTable.manifest(spark, base, 3).ingested.size == 50,
+      "the sweep must keep referenced sidecars")
   }
 
   test("per-dir manifest lines (bounds/rows/partvals/partdirspec) spill " +
@@ -1521,44 +1541,42 @@ class SnapshotTableSpec extends SparkTestBase {
         .PartField("identity", 0, "k"))),
       dirSpecIds = ds.zipWithIndex.collect {
         case (d, i) if i % 2 == 0 => d -> 0 }.toMap)
-    val prev = SnapshotTable.sidecarSpillThreshold
-    SnapshotTable.sidecarSpillThreshold = 6
-    try {
-      val s1 = stateOf(dirsOf(nd))
-      SnapshotTable.commit(spark, base, 1, s1)
-      assert(sidecars().nonEmpty, "per-dir lines must have spilled")
-      val m1 = SnapshotTable.manifest(spark, base, 1)
-      // full round-trip: every per-dir structure survives the spill.
-      // dirSpecIds normalize at commit (pins kept only for partVals-
-      // carrying dirs off the current spec — all of these qualify)
-      assert(m1.bounds.sortBy(_.dir) == s1.bounds.sortBy(_.dir))
-      assert(m1.rowCounts == s1.rowCounts)
-      assert(m1.partVals == s1.partVals)
-      assert(m1.dirSpecIds == s1.dirSpecIds)
-      assert(m1.partSpec == s1.partSpec && m1.partHist == s1.partHist)
-      // one-dir append: manifest growth and new-chunk count are
-      // delta-sized, never a re-inline of every per-dir entry
-      val before = sidecars()
-      SnapshotTable.commit(spark, base, 2, stateOf(dirsOf(nd + 1)))
-      val added = sidecars() -- before
-      assert(added.size <= 8,
-        s"a one-dir append wrote ${added.size} new sidecar chunks — " +
-          "chunking is not content-defined across the four lines")
-      assert(manifestLen(2) - manifestLen(1) < 500,
-        s"manifest grew ${manifestLen(2) - manifestLen(1)} bytes for a " +
-          "one-dir delta — commit payload is not O(delta dirs)")
-      val m2 = SnapshotTable.manifest(spark, base, 2)
-      assert(m2.dataDirs.size == nd + 1 &&
-        m2.bounds.size == nd + 1 && m2.partVals.size == nd + 1)
-      // pruning still works off the spilled structures: a bucket point
-      // edge keeps only matching-tuple dirs (wide dirs: none here)
-      val keyHash = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal
-          .create(5, org.apache.spark.sql.types.IntegerType)), 42)
-        .eval(null).asInstanceOf[Int]
-      val want = (((keyHash % 4) + 4) % 4).toString
-      assert(m2.partVals.values.count(_ == Seq(want)) <
-        m2.dataDirs.size, "fixture must have prunable tuples")
-    } finally SnapshotTable.sidecarSpillThreshold = prev
+    def commit(v: Int, snap: Snapshot): Unit =
+      SnapshotTable.commit(spark, base, v, snap, spillAt = 6)
+    val s1 = stateOf(dirsOf(nd))
+    commit(1, s1)
+    assert(sidecars().nonEmpty, "per-dir lines must have spilled")
+    val m1 = SnapshotTable.manifest(spark, base, 1)
+    // full round-trip: every per-dir structure survives the spill.
+    // dirSpecIds normalize at commit (pins kept only for partVals-
+    // carrying dirs off the current spec — all of these qualify)
+    assert(m1.bounds.sortBy(_.dir) == s1.bounds.sortBy(_.dir))
+    assert(m1.rowCounts == s1.rowCounts)
+    assert(m1.partVals == s1.partVals)
+    assert(m1.dirSpecIds == s1.dirSpecIds)
+    assert(m1.partSpec == s1.partSpec && m1.partHist == s1.partHist)
+    // one-dir append: manifest growth and new-chunk count are
+    // delta-sized, never a re-inline of every per-dir entry
+    val before = sidecars()
+    commit(2, stateOf(dirsOf(nd + 1)))
+    val added = sidecars() -- before
+    assert(added.size <= 8,
+      s"a one-dir append wrote ${added.size} new sidecar chunks — " +
+        "chunking is not content-defined across the four lines")
+    assert(manifestLen(2) - manifestLen(1) < 500,
+      s"manifest grew ${manifestLen(2) - manifestLen(1)} bytes for a " +
+        "one-dir delta — commit payload is not O(delta dirs)")
+    val m2 = SnapshotTable.manifest(spark, base, 2)
+    assert(m2.dataDirs.size == nd + 1 &&
+      m2.bounds.size == nd + 1 && m2.partVals.size == nd + 1)
+    // pruning still works off the spilled structures: a bucket point
+    // edge keeps only matching-tuple dirs (wide dirs: none here)
+    val keyHash = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
+      Seq(org.apache.spark.sql.catalyst.expressions.Literal
+        .create(5, org.apache.spark.sql.types.IntegerType)), 42)
+      .eval(null).asInstanceOf[Int]
+    val want = (((keyHash % 4) + 4) % 4).toString
+    assert(m2.partVals.values.count(_ == Seq(want)) <
+      m2.dataDirs.size, "fixture must have prunable tuples")
   }
 }
