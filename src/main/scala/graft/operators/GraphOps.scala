@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed graph primitives for the dedup pipeline.
@@ -696,10 +699,13 @@ object GraphOps {
     // (AdaptiveSparkPlanExec is a propagation leaf — same discipline as
     // pageRank's own materialization) and the sweeps stay exchange-free on
     // the edge side. Inputs that are already checkpoint-backed (LogicalRDD,
-    // e.g. from [[pageRank]]) are used as-is — re-checkpointing would copy
-    // every block for nothing.
+    // e.g. from [[pageRank]], or a select of its bare columns, which keeps
+    // hash(u)) are used as-is — re-checkpointing would copy every block for
+    // nothing.
     val ed = ed0.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => ed0
+      case _: LogicalRDD => ed0
+      case Project(ps, _: LogicalRDD)
+          if ps.forall(_.isInstanceOf[AttributeReference]) => ed0
       case _ =>
         graft.GraftSession.withConf(ed0.sparkSession,
             "spark.sql.adaptive.enabled" -> "false") {

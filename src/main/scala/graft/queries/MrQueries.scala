@@ -19,7 +19,7 @@ object MrQueries {
         .orderBy("word")
     },
 
-    // Dataset-native MR_Run shape (groupByKey + flatMapGroups), with a
+    // MR_Run with the default djb2 partitioner and no combiner, and a
     // non-algebraic reducer (distinct source count per language) to show the
     // general (k, Iterator[v]) contract, not just counting.
     "mr_run_grouped" -> { (s, dir) =>
@@ -36,7 +36,7 @@ object MrQueries {
       }
       val reducer = (lang: String, vs: Iterator[String]) =>
         Iterator((lang, vs.toSet.size.toLong))
-      MR.run(lines, mapper, reducer)
+      MR.run(lines, mapper, reducer, 8, MR.defaultHashPartition)
         .toDF("lang", "n_sources")
         .orderBy("lang")
     })

@@ -426,6 +426,26 @@ class GraphOpsSpec extends SparkTestBase {
     assert(got(0L) == got.values.max)
   }
 
+  test("pageRankOn over a bare-column select of a checkpointed edge table " +
+      "runs no extra checkpoint job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val e0 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 6L))
+      .toDF("u", "v")
+    val e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
+    val deg = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
+    val ed = GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      e.join(deg, "u").repartition(col("u")).localCheckpoint()
+    }
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (plain, plainJobs, _) = jobsOf(rows(GraphOps.pageRankOn(ed, iters = 2)))
+    val (sel, selJobs, _) =
+      jobsOf(rows(GraphOps.pageRankOn(ed.select("u", "v", "d"), iters = 2)))
+    assert(sel == plain)
+    assert(selJobs == plainJobs, s"$selJobs jobs over the select, $plainJobs over ed")
+  }
+
   // ---- triangle counting ----
 
   private def triModel(edges: Set[(Long, Long)]): (Long, Long, Long) = {

@@ -47,10 +47,10 @@ class MrSpec extends SparkTestBase {
     assert(wc(f2.toString, f1.toString) == got)
   }
 
-  test("runSorted visits keys in ascending order within each partition") {
+  test("MR.run visits keys in ascending order within each partition") {
     val lines = Seq("d a c b", "b d a a").toDS()
-    val seen = MR.runSorted[String, String, (Int, String)](
-      lines.rdd,
+    val seen = MR.run[String, String, (Int, String)](
+      lines,
       l => l.split(" ").iterator.map(w => (w, "1")),
       (k, vs) => { vs.size; Iterator((org.apache.spark.TaskContext.getPartitionId(), k)) },
       numPartitions = 2,
@@ -64,8 +64,8 @@ class MrSpec extends SparkTestBase {
 
   test("reducer sees exactly one call per distinct key, even if it doesn't drain") {
     val lines = Seq("x x x y").toDS()
-    val calls = MR.runSorted[String, String, String](
-      lines.rdd,
+    val calls = MR.run[String, String, String](
+      lines,
       l => l.split(" ").iterator.map(w => (w, "1")),
       (k, vs) => Iterator(k), // never touches vs — reference would livelock here
       numPartitions = 1,
@@ -78,8 +78,8 @@ class MrSpec extends SparkTestBase {
       "gets one call per key over combined partials") {
     // four input partitions, so every key has partials from several maps
     val lines = spark.sparkContext.parallelize(
-      Seq("d a c b", "b d a a", "c c a e", "e b d a"), 4)
-    val seen = MR.runSorted[String, Long, (Int, String, Long)](
+      Seq("d a c b", "b d a a", "c c a e", "e b d a"), 4).toDS()
+    val seen = MR.run[String, Long, (Int, String, Long)](
       lines,
       l => l.split(" ").iterator.map(w => (w, 1L)),
       (k, vs) => Iterator((org.apache.spark.TaskContext.getPartitionId(), k,
@@ -96,6 +96,23 @@ class MrSpec extends SparkTestBase {
       s"one reducer call per key expected: $seen")
     assert(seen.map(s => s._2 -> s._3).toMap ==
       Map("a" -> 5L, "b" -> 3L, "c" -> 3L, "d" -> 3L, "e" -> 2L))
+  }
+
+  test("every reducer call runs in the partition its key's partitioner picks") {
+    // a non-hash partitioner: the reduce partition is the key length mod n
+    val lines = Seq("a bb ccc dddd", "eeeee ffffff a bb", "ggggggg hh i").toDS()
+    val seen = MR.run[String, String, (Int, String)](
+      lines,
+      l => l.split(" ").iterator.map(w => (w, "1")),
+      (k, vs) => { vs.size; Iterator((org.apache.spark.TaskContext.getPartitionId(), k)) },
+      numPartitions = 3,
+      (k, n) => k.length % n)
+      .collect().toSeq
+    assert(seen.map(_._2).sorted ==
+      Seq("a", "bb", "ccc", "dddd", "eeeee", "ffffff", "ggggggg", "hh", "i"))
+    seen.foreach { case (pid, k) =>
+      assert(pid == k.length % 3, s"key $k reduced in partition $pid")
+    }
   }
 
   test("MR.wordcount ships at most one shuffle record per (map task, word)") {

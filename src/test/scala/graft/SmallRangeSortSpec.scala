@@ -58,4 +58,18 @@ class SmallRangeSortSpec extends SparkTestBase {
     assert(rows == Tables(spark, sf, "orders").select(col("o_orderkey"))
       .collect().toSeq.map(_.getLong(0)).sorted)
   }
+
+  test("mr_wordcount plans one partition-id exchange of width 8 under a " +
+      "one-partition final sort and runs its 8 reduce tasks once") {
+    val df = SparkEntry.queries("mr_wordcount")(spark, sf)
+    val (_, _, stages) = jobsOf(df.collect())
+    val fin = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    val byId = """shufflepartitionidpassthrough\(.*, (\d+)\)""".r
+      .findAllMatchIn(fin).map(_.group(1).toInt).toSeq
+    assert(byId == Seq(8), fin)
+    assert(finalRangeWidths(df) == Seq(1), fin)
+    assert(stages.map(_.numTasks).count(_ == 8) == 1,
+      s"stage task counts: ${stages.map(_.numTasks)}")
+  }
 }
