@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, unix_micros}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated star schema (TESTDATA.md).
@@ -9,6 +11,30 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * The reference engine's only source is line-oriented local text opened by the
   * client mapper (reference main.c:13-18); here every table is a columnar
   * Parquet scan so Catalyst gets predicate pushdown + column pruning for free.
+  *
+  * Like the reference, which opens and maps its inputs once, each fixture is
+  * resolved once: `spark.read.parquet` lists the file and infers its schema
+  * with a one-task Spark job, so [[apply]] keeps the analyzed relation and
+  * hands every caller a fresh DataFrame over `relation.newInstance()` (fresh
+  * attribute ids, so two calls self-join like two reads). Building a query
+  * then runs no Spark job. The memo key, and why each part is in it:
+  *  - the session, held weakly: a relation is bound to the session that
+  *    resolved it (its file index and conf), so `newSession()` and the SPJ
+  *    clone ([[GraftSession.spj]]) resolve their own;
+  *  - `path@Sinks.fingerprint(path)`, recomputed on every call: a rewrite
+  *    that changes any file's name, length, mtime or last 64 bytes
+  *    re-resolves on the next call. What a relation keeps is the schema and
+  *    the file list; a file that keeps its name and length is read with its
+  *    new bytes anyway;
+  *  - the session's values of the `spark.sql.parquet.*` and
+  *    `spark.sql.legacy.parquet.*` confs, which decide the inferred schema
+  *    (`nanosAsLong`, `inferTimestampNTZ.enabled`, `mergeSchema`, ...), so
+  *    a read under a flipped conf sees what a raw read would.
+  * Each path keeps only its latest entry, so a memo holds at most one
+  * relation per fixture. A relation references its own session, so in
+  * practice an entry lives as long as the JVM; the engine makes a fixed
+  * handful of sessions. No other src/main code reads a fixture file
+  * (TablesMemoSpec sweeps it).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -16,8 +42,36 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = DatasetBridge.ofRows(spark, relation(spark, dir, name).newInstance())
     if (name == "events") canonEvents(df) else df
+  }
+
+  private val resolved = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (String, LogicalRelation)]]()
+
+  /** The fixture's analyzed raw relation (no [[canonEvents]] pass), shared
+    * by every call with the same memo key; callers that build a plan over
+    * it take `newInstance()`. */
+  def relation(spark: SparkSession, dir: String,
+      name: String): LogicalRelation = {
+    val path = s"$dir/$name.parquet"
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") }.sorted
+    val key = s"$path@${graft.sources.Sinks.fingerprint(spark, path)}" +
+      confs.map { case (k, v) => s"|$k=$v" }.mkString
+    val memo = resolved.synchronized {
+      resolved.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    memo.get(path) match {
+      case (`key`, plan) => plan
+      case _ =>
+        val plan = spark.read.parquet(path).queryExecution.analyzed
+          .asInstanceOf[LogicalRelation]
+        memo.put(path, (key, plan))
+        plan
+    }
   }
 
   /** Canonicalize `events.ts` to the engine-internal shape: an epoch-NANOS

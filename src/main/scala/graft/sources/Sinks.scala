@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Write-once sink registration.
@@ -66,16 +66,25 @@ object Sinks {
       val p = new Path(sp)
       val fs = p.getFileSystem(conf)
       require(fs.exists(p), s"fingerprint input missing: $sp")
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
+      for (st <- leafFiles(fs, p))
         entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}:" +
           f"${tailCrc(fs, st.getPath, st.getLen)}%08x"
-      }
     }
     entries.sorted.foreach(e => crc.update(e.getBytes("UTF-8")))
     f"${crc.getValue}%08x"
   }
+
+  /** Every file under `p` (or `p` itself), as `fs.listFiles(p, true)` lists
+    * them, but as plain `FileStatus`es: `listFiles` returns
+    * `LocatedFileStatus`es, whose constructor loads each file's permissions,
+    * and on the local filesystem without Hadoop's native library that forks
+    * an `ls -ld` child process per file. [[graft.Tables]] fingerprints its
+    * fixture on every call, so such a fork would sit on every query's
+    * construction. */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap { st =>
+      if (st.isDirectory) leafFiles(fs, st.getPath) else Seq(st)
+    }
 
   private def tailCrc(fs: FileSystem, p: Path, len: Long): Long = {
     val n = math.min(64L, len).toInt

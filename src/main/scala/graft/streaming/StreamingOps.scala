@@ -422,9 +422,11 @@ object StreamingOps {
       "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Bounded parquet dir → streaming DataFrame with the events schema
-    * normalized the same way as the batch path (nanos long → micros). */
+    * normalized the same way as the batch path (nanos long → micros). The
+    * schema is the fixture's raw one, from the relation [[graft.Tables]]
+    * already resolved. */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.relation(spark, dir, "events").schema
     // The testdata table is a bare file, and FileStreamSource forces
     // basePath=<path> for non-glob paths ('basePath' must be a directory).
     // A glob that matches only this file sidesteps the override.

@@ -80,4 +80,41 @@ class SinksSpec extends SparkTestBase {
         "live catalog entry served stale bucket files")
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
+
+  test("fingerprint covers the files fs.listFiles(p, true) lists, unchanged") {
+    // a committed layer's _GRAFT_TAG holds its inputs' fingerprint, so the
+    // listing must not change which files count or how they are named
+    val dir = Files.createTempDirectory("graft-fp-tree").toString
+    Files.createDirectories(Paths.get(dir, "k=1", "nested"))
+    for ((f, n) <- Seq("_SUCCESS" -> 0, "part-0" -> 200, "k=1/part-1" -> 70,
+        "k=1/nested/part-2" -> 5))
+      Files.write(Paths.get(dir, f), Array.tabulate[Byte](n)(i => (i * 7).toByte))
+    // a checksum sidecar, which the local filesystem hides from listings
+    Files.write(Paths.get(dir, ".part-0.crc"), Array[Byte](1, 2, 3))
+    def located(p: String): String = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val entries = scala.collection.mutable.ArrayBuffer[String]()
+      val it = fs.listFiles(path, true)
+      while (it.hasNext) {
+        val st = it.next()
+        val n = math.min(64L, st.getLen).toInt
+        val tail = if (n == 0) 0L else {
+          val buf = new Array[Byte](n)
+          val in = fs.open(st.getPath)
+          try { in.seek(st.getLen - n); in.readFully(buf) } finally in.close()
+          val c = new java.util.zip.CRC32
+          c.update(buf)
+          c.getValue
+        }
+        entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}:" +
+          f"$tail%08x"
+      }
+      val crc = new java.util.zip.CRC32
+      entries.sorted.foreach(e => crc.update(e.getBytes("UTF-8")))
+      f"${crc.getValue}%08x"
+    }
+    for (p <- Seq(dir, s"$dir/k=1", s"$dir/part-0"))
+      assert(Sinks.fingerprint(spark, p) == located(p), p)
+  }
 }
