@@ -43,9 +43,12 @@ object Sinks {
     * metadata triple alone misses a same-length in-place regeneration
     * within the store's mtime granularity (1 s on typical object stores) —
     * exactly the silent-staleness case the feature exists to catch — so
-    * each file also contributes the CRC of its last 64 bytes: a parquet
-    * tail holds the footer metadata (row-group stats, column offsets),
-    * which changes whenever the data does, even at identical file size.
+    * each file also contributes the CRC of its last 64 bytes. For a raw
+    * file those are its last content bytes. For a parquet file they are
+    * the end of the footer: the writer's `created_by` string, the column
+    * orders, the 4-byte footer length and `PAR1`, not the row-group stats.
+    * So a parquet rewrite by the same writer that keeps each file's name,
+    * length, mtime and footer length keeps the fingerprint.
     * Cost: one LIST per input plus one bounded ranged read per file.
     * A missing input path is a caller bug (typo'd / renamed fixture), not
     * an empty contribution — it fails loudly instead of yielding a stable
@@ -76,11 +79,10 @@ object Sinks {
 
   /** Every file under `p` (or `p` itself), as `fs.listFiles(p, true)` lists
     * them, but as plain `FileStatus`es: `listFiles` returns
-    * `LocatedFileStatus`es, whose constructor loads each file's permissions,
-    * and on the local filesystem without Hadoop's native library that forks
-    * an `ls -ld` child process per file. [[graft.Tables]] fingerprints its
-    * fixture on every call, so such a fork would sit on every query's
-    * construction. */
+    * `LocatedFileStatus`es, whose constructor also loads each file's
+    * permission, owner and group, which the fingerprint never reads. (On
+    * the local filesystem that load no longer forks an `ls -ld`:
+    * [[GraftRawLocalFileSystem]] reads it in-process.) */
   private def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
     fs.listStatus(p).toSeq.flatMap { st =>
       if (st.isDirectory) leafFiles(fs, st.getPath) else Seq(st)

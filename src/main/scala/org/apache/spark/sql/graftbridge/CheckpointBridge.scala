@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Exact-statistics localCheckpoint for iterative kernels.
   *
@@ -16,13 +16,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `BigInteger.multiplyToomCook3` just folding statistics (observed as a
   * silent stall in the delta-iteration CC kernel on a 30-node chain).
   *
-  * This bridge replaces the inherited estimate with the TRUTH: the
-  * checkpoint has already materialized the RDD, so one cheap job over the
-  * in-memory blocks counts the real rows, and the rebuilt `LogicalRDD`
-  * carries `Statistics(rows·rowBytes, rows)`. Two birds: the compounding
-  * resets every round, and the optimizer sees the real (usually shrinking)
-  * delta size — a tiny frontier is broadcast even at static planning time,
-  * not just after AQE's runtime correction.
+  * This bridge replaces the inherited estimate with the TRUTH: the one job
+  * that writes the checkpoint blocks also counts the rows, and the
+  * `LogicalRDD` carries `Statistics(rows·rowBytes, rows)`. Two birds: the
+  * compounding resets every round, and the optimizer sees the real
+  * (usually shrinking) delta size — a tiny frontier is broadcast even at
+  * static planning time, not just after AQE's runtime correction.
   *
   * Lives in the `org.apache.spark.sql` package because `LogicalRDD`'s
   * session parameter and `Dataset.ofRows` are `private[sql]` (same
@@ -30,28 +29,31 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object CheckpointBridge {
 
-  /** Materialize `df` via eager localCheckpoint, count the materialized
-    * blocks, and return the dataset rebuilt with exact statistics plus the
-    * row count (callers use it as their convergence signal — no separate
-    * isEmpty job). `rowBytes` is the caller's estimate of one row's width;
-    * only relative magnitude matters (it gates broadcast thresholds). */
+  /** Materialize `df` into local-checkpoint blocks and count its rows in
+    * ONE job, then return the dataset rebuilt with exact statistics plus
+    * the row count (callers use it as their convergence signal — no
+    * separate isEmpty job). `Dataset.localCheckpoint()` would run its own
+    * eager job (`doCheckpoint`) and leave the count to a second one; here
+    * the count is the job that fills the blocks, and the `doCheckpoint`
+    * Spark runs after it finds every block present. `rowBytes` is the
+    * caller's estimate of one row's width; only relative magnitude matters
+    * (it gates broadcast thresholds). */
   def checkpointExact(df: DataFrame, rowBytes: Long): (DataFrame, Long) = {
-    val ck = df.localCheckpoint()
-    ck.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        val n = lr.rdd.count()
-        val stats = Statistics(
-          sizeInBytes = BigInt(math.max(rowBytes, n * rowBytes)),
-          rowCount = Some(BigInt(n)))
-        val fixed = new LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, lr.stream)(
-          df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          Some(stats), None)
-        (DatasetBridge.ofRows(df.sparkSession, fixed), n)
-      case _ =>
-        // not reachable for localCheckpoint, but degrade soundly
-        (ck, ck.count())
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    val (rdd, n) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      qe.executedPlan.resetMetrics()
+      val rows = qe.executedPlan.execute().map(_.copy())
+      rows.localCheckpoint()
+      (rows, rows.count())
     }
+    val lr = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
+    val stats = Statistics(
+      sizeInBytes = BigInt(math.max(rowBytes, n * rowBytes)),
+      rowCount = Some(BigInt(n)))
+    val fixed = new LogicalRDD(
+      lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(ds.sparkSession, Some(stats), None)
+    (DatasetBridge.ofRows(df.sparkSession, fixed), n)
   }
 }

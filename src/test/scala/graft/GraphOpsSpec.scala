@@ -519,4 +519,18 @@ class GraphOpsSpec extends SparkTestBase {
       .collect().map(_.getLong(1))
     assert(ranks.forall(_ == 0L))
   }
+
+  test("checkpointExact fills the checkpoint and counts its rows in one job") {
+    import spark.implicits._
+    val df = (1L to 200L).map(i => (i, i % 7)).toDF("u", "v").where($"v" =!= 3L)
+    val ((ck, n), jobs, _) = jobsOf(
+      org.apache.spark.sql.graftbridge.CheckpointBridge.checkpointExact(df, 16L))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(n == 171)
+    assert(ck.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(n)))
+    val (rows, again, _) = jobsOf(ck.collect().toSeq)
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).sorted ==
+      df.as[(Long, Long)].collect().toSeq.sorted)
+    assert(again == 1, "reading the checkpoint re-ran more than its own scan")
+  }
 }
