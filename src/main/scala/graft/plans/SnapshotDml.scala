@@ -17,14 +17,14 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   * table cannot express through `SupportsDelete` alone):
   *
   *  - `UPDATE snap.t SET ... WHERE ...`  →
-  *    [[SnapshotTable.updateWhere]] (copy-on-write of only the hit dirs)
+  *    [[SnapshotTable.updateMatching]] (copy-on-write of only the hit
+  *    dirs)
   *  - `MERGE INTO snap.t USING src ON t.key = src.key ...`  →
-  *    [[SnapshotTable.mergeInto]] / [[SnapshotTable.mergeIntoWith]] for
-  *    the upsert fast paths, [[SnapshotTable.mergeIntoActions]] for the
-  *    full clause surface (ordered conditional matched UPDATE/DELETE,
+  *    [[SnapshotTable.mergeIntoActions]], one path for every clause
+  *    shape (the upsert, ordered conditional matched UPDATE/DELETE,
   *    ordered conditional INSERT *, ordered NOT MATCHED BY SOURCE
   *    UPDATE/DELETE); only non-key merge conditions, partial-column
-  *    inserts, and subqueries refuse
+  *    inserts, and non-decorrelatable subqueries refuse
   *  - a SELECT over a version carrying merge-on-read delete files
   *    rewrites into the same scan-minus-broadcast-anti-join plan the API
   *    read uses, so SQL readers see deletes applied instead of refused
@@ -379,14 +379,6 @@ case class SnapshotDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     })
   }
 
-  /** Decorrelate a subquery-carrying DELETE condition: conjuncts split
-    * into plain predicates (rebound by name at run time), uncorrelated
-    * `attr IN (subquery)` semi-join specs, and uncorrelated EXISTS
-    * plans (run-time booleans). Sub plans go through [[maskReads]] here
-    * AND re-analyze inside the command's `ofRows` (delete-carrying /
-    * rename-evolved snapshot sources stay correct either way).
-    * Everything else — correlated shapes, NOT IN, scalar subqueries —
-    * refuses loudly rather than deleting the wrong rows. */
   /** Shared decorrelation for subquery-carrying DML conditions:
     * conjuncts split into plain predicates (rebound by name at run
     * time), uncorrelated `attr IN (subquery)` semi specs, and
@@ -454,20 +446,15 @@ case class SnapshotDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
         case v => Some(name -> toCol(v, "UPDATE SET"))
       }
     }
-    // subquery-carrying conditions decorrelate like DELETE's
+    // the condition decorrelates like DELETE's
     // ([[rewriteSubqueryDelete]]): uncorrelated IN → marker-join specs
     // evaluated by updateMatching, uncorrelated EXISTS → run-time
-    // boolean; anything else refuses via toCol's loud path
-    if (u.condition.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))) {
-      val (plain, semis, exists) =
-        splitSubqueryCondition(u.condition.get, "UPDATE")
-      SnapshotUpdateSubqueryCommand(h.base, sets, plain, semis, exists)
-    } else {
-      val cond = u.condition
-        .map(toCol(_, "UPDATE WHERE"))
-        .getOrElse(org.apache.spark.sql.functions.lit(true))
-      SnapshotUpdateCommand(h.base, sets, cond)
-    }
+    // boolean, other subquery shapes refuse; a subquery-free condition
+    // is all plain conjuncts
+    val (plain, semis, exists) = u.condition
+      .map(splitSubqueryCondition(_, "UPDATE"))
+      .getOrElse((None, Nil, Nil))
+    SnapshotUpdateSubqueryCommand(h.base, sets, plain, semis, exists)
   }
 
   /** Decorrelate a subquery-carrying MERGE clause condition, mirroring
@@ -702,81 +689,62 @@ case class SnapshotDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
           case v: AttributeReference
               if v.name == name && tOut.contains(v) =>
             None // target identity: alignment's no-op padding
+          case v: AttributeReference
+              if name == key && v.name == key && sOut.contains(v) =>
+            None // SET key = s.key (the `SET *` expansion): the merge
+                 // condition already equates the two on matched rows
           case _ => Some(name -> toMergeCol(a.value, tOut, sOut))
         }
       }
-    (m.matchedActions, bySource) match {
-      // the pre-existing upsert fast paths — unconditional single
-      // matched UPDATE plus unconditional INSERT *, routed to the
-      // specialized ops (a conditional insert takes the actions path)
-      // insertSubbed.isEmpty guards the fast paths: a decorrelated
-      // INSERT condition leaves insertCond None at plan time, and the
-      // upsert fast path would silently insert EVERY unmatched row
-      case (Seq(UpdateStarAction(None)), Nil)
-          if insertUnmatched && insertCond.isEmpty &&
-            insertSubbed.isEmpty =>
-        SnapshotMergeCommand(h.base, key, maskReads(m.sourceTable))
-      case (Seq(UpdateAction(None, as, _)), Nil)
-          if insertUnmatched && insertCond.isEmpty &&
-            insertSubbed.isEmpty && as.forall(srcIdentity) =>
-        SnapshotMergeCommand(h.base, key, maskReads(m.sourceTable))
-      case (Seq(UpdateAction(None, as, _)), Nil)
-          if insertUnmatched && insertCond.isEmpty &&
-            insertSubbed.isEmpty =>
-        SnapshotMergeWithCommand(h.base, key, maskReads(m.sourceTable),
-          updateSets(as))
-      // GENERALIZED CDC surface — ordered conditional matched clauses
-      // (UPDATE/DELETE, first-match), optional INSERT *, optional NOT
-      // MATCHED BY SOURCE DELETE: SnapshotTable.mergeIntoActions
-      case (actions, _) =>
-        def matchedCond(c: Option[Expression])
-            : (Option[Column], MergeSubqueries) = c match {
-          case Some(e) if hasSub(e) =>
-            val (pe, subs) = splitMergeClauseCond(e, "MATCHED",
-              tOut, sOut, "matched", nextId)
-            (pe.map(toMergeCol(_, tOut, sOut)), subs)
-          case _ =>
-            (c.map(toMergeCol(_, tOut, sOut)), MergeSubqueries.empty)
-        }
-        val matchedSplit = actions.map {
-          case UpdateStarAction(c) =>
-            // SET * = every non-key column from the same-name source
-            val sets = h.schema().fieldNames.toSeq.filterNot(_ == key)
-              .map(n => n ->
-                org.apache.spark.sql.functions.col(s"s.`$n`"))
-            val (cc, subs) = matchedCond(c)
-            (cc, SnapshotTable.MatchedUpdate(sets)
-              : SnapshotTable.MatchedAction, subs)
-          case UpdateAction(c, as, _) =>
-            val (cc, subs) = matchedCond(c)
-            (cc, SnapshotTable.MatchedUpdate(updateSets(as))
-              : SnapshotTable.MatchedAction, subs)
-          case DeleteAction(c) =>
-            val (cc, subs) = matchedCond(c)
-            (cc, SnapshotTable.MatchedDelete
-              : SnapshotTable.MatchedAction, subs)
-          case other => throw new UnsupportedOperationException(
-            "snapshot MERGE matched clauses support UPDATE and DELETE " +
-              s"only, got ${other.getClass.getSimpleName}")
-        }
-        val matched = matchedSplit.map(x => (x._1, x._2))
-        val matchedSubs0 = matchedSplit.map(_._3)
-        require(matched.nonEmpty || insertUnmatched || bySource.nonEmpty,
-          "snapshot MERGE needs at least one clause")
-        SnapshotMergeActionsCommand(h.base, key, maskReads(m.sourceTable),
-          matched, insertUnmatched, bySource, insertCond,
-          matchedSubs =
-            if (matchedSubs0.exists(_ != MergeSubqueries.empty))
-              matchedSubs0 else Nil,
-          bySourceSubs =
-            if (bySourceSubs0.exists(_ != MergeSubqueries.empty))
-              bySourceSubs0 else Nil,
-          insertClausesSub = insertSubbed)
+    def matchedCond(c: Option[Expression])
+        : (Option[Column], MergeSubqueries) = c match {
+      case Some(e) if hasSub(e) =>
+        val (pe, subs) = splitMergeClauseCond(e, "MATCHED",
+          tOut, sOut, "matched", nextId)
+        (pe.map(toMergeCol(_, tOut, sOut)), subs)
+      case _ =>
+        (c.map(toMergeCol(_, tOut, sOut)), MergeSubqueries.empty)
     }
+    // ordered conditional matched clauses (UPDATE/DELETE, first-match);
+    // the whole-row upsert is the one-clause `UPDATE SET *` case
+    val matchedSplit = m.matchedActions.map {
+      case UpdateStarAction(c) =>
+        // SET * = every non-key column from the same-name source
+        val sets = h.schema().fieldNames.toSeq.filterNot(_ == key)
+          .map(n => n ->
+            org.apache.spark.sql.functions.col(s"s.`$n`"))
+        val (cc, subs) = matchedCond(c)
+        (cc, SnapshotTable.MatchedUpdate(sets)
+          : SnapshotTable.MatchedAction, subs)
+      case UpdateAction(c, as, _) =>
+        val (cc, subs) = matchedCond(c)
+        (cc, SnapshotTable.MatchedUpdate(updateSets(as))
+          : SnapshotTable.MatchedAction, subs)
+      case DeleteAction(c) =>
+        val (cc, subs) = matchedCond(c)
+        (cc, SnapshotTable.MatchedDelete
+          : SnapshotTable.MatchedAction, subs)
+      case other => throw new UnsupportedOperationException(
+        "snapshot MERGE matched clauses support UPDATE and DELETE " +
+          s"only, got ${other.getClass.getSimpleName}")
+    }
+    val matched = matchedSplit.map(x => (x._1, x._2))
+    val matchedSubs0 = matchedSplit.map(_._3)
+    require(matched.nonEmpty || insertUnmatched || bySource.nonEmpty,
+      "snapshot MERGE needs at least one clause")
+    SnapshotMergeActionsCommand(h.base, key, maskReads(m.sourceTable),
+      matched, insertUnmatched, bySource, insertCond,
+      matchedSubs =
+        if (matchedSubs0.exists(_ != MergeSubqueries.empty))
+          matchedSubs0 else Nil,
+      bySourceSubs =
+        if (bySourceSubs0.exists(_ != MergeSubqueries.empty))
+          bySourceSubs0 else Nil,
+      insertClausesSub = insertSubbed)
   }
 
-  /** Rebind a matched-update assignment expression onto
-    * [[SnapshotTable.mergeIntoWith]]'s internal t./s. join aliases. */
+  /** Rebind a matched-clause expression onto
+    * [[SnapshotTable.mergeIntoActions]]'s internal t./s. join aliases. */
   private def toMergeCol(e: Expression,
       tOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       sOut: org.apache.spark.sql.catalyst.expressions.AttributeSet)
@@ -793,10 +761,6 @@ case class SnapshotDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** `UPDATE snap.t SET ... WHERE ...` — runs
-  * [[SnapshotTable.updateWhere]] (copy-on-write of only the dirs holding
-  * a matching row) against the table's CURRENT head; the commit's
-  * optimistic version claim arbitrates racers. */
 /** The decorrelated subquery DELETE ([[SnapshotDmlRule]]): plain
   * conjuncts rebind by name onto the head scan, each IN spec becomes a
   * LEFT SEMI join against the (distinct, single-column) subquery result
@@ -835,11 +799,14 @@ case class SnapshotDeleteSubqueryCommand(base: String, key: String,
   }
 }
 
-/** The decorrelated subquery UPDATE: plain conjuncts rebind by name,
-  * IN specs become marker joins inside
-  * [[SnapshotTable.updateMatching]], and uncorrelated EXISTS plans
-  * evaluate once — any false one makes the whole UPDATE a no-op (no
-  * version boundary, matching updateWhere's nothing-matched shape). */
+/** `UPDATE snap.t SET ... WHERE ...` — every UPDATE: runs
+  * [[SnapshotTable.updateMatching]] (copy-on-write of only the dirs
+  * holding a matching row) against the table's CURRENT head; the
+  * commit's optimistic version claim arbitrates racers. Plain conjuncts
+  * rebind by name, decorrelated IN specs become marker joins, and
+  * uncorrelated EXISTS plans evaluate once — any false one makes the
+  * whole UPDATE a no-op (no version boundary, matching updateWhere's
+  * nothing-matched shape). */
 case class SnapshotUpdateSubqueryCommand(base: String,
     sets: Seq[(String, Column)], plain: Option[Expression],
     semis: Seq[(String, LogicalPlan)], exists: Seq[LogicalPlan])
@@ -859,48 +826,6 @@ case class SnapshotUpdateSubqueryCommand(base: String,
   }
 }
 
-case class SnapshotUpdateCommand(base: String,
-    sets: Seq[(String, Column)], cond: Column)
-    extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    SnapshotTable.updateWhere(sparkSession, base, cond, sets): Unit
-    Seq.empty
-  }
-}
-
-/** `MERGE INTO snap.t USING src ON t.k = src.k ...` (upsert shape) —
-  * runs [[SnapshotTable.mergeInto]]: source rows replace same-key stored
-  * rows and append otherwise, copy-on-write of only the hit dirs. */
-case class SnapshotMergeCommand(base: String, key: String,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    SnapshotTable.mergeInto(sparkSession, base, key,
-      DatasetBridge.ofRows(sparkSession, source)): Unit
-    Seq.empty
-  }
-}
-
-/** `MERGE INTO ... WHEN MATCHED THEN UPDATE SET col = expr ...` — the
-  * partial-column matched update ([[SnapshotTable.mergeIntoWith]]):
-  * matched rows compute each assigned column from both sides, unmatched
-  * source rows insert whole. */
-case class SnapshotMergeWithCommand(base: String, key: String,
-    source: LogicalPlan, sets: Seq[(String, Column)])
-    extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    SnapshotTable.mergeIntoWith(sparkSession, base, key,
-      DatasetBridge.ofRows(sparkSession, source), sets): Unit
-    Seq.empty
-  }
-}
-
-/** The generalized MERGE clause surface (`WHEN MATCHED [AND cond] THEN
-  * UPDATE/DELETE` × N in order, `WHEN NOT MATCHED [AND cond] THEN
-  * INSERT *` × N in order — collapsed to one OR-of-conditions insert
-  * leg, since every clause inserts the identical row — and `WHEN NOT
-  * MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE` × N in order) —
-  * [[SnapshotTable.mergeIntoActions]]: first-match clause semantics,
-  * copy-on-write of only the in-scope dirs. */
 /** Decorrelated subqueries of ONE MERGE clause condition: `semis` =
   * (marker, targetSide, attr, subplan) per uncorrelated `attr IN
   * (subquery)` conjunct — the engine left-joins the DISTINCT values and
@@ -914,8 +839,14 @@ object MergeSubqueries {
   val empty: MergeSubqueries = MergeSubqueries(Nil, Nil)
 }
 
-/** The generalized MERGE clause surface with per-clause decorrelated
-  * subqueries. `matchedSubs`/`bySourceSubs` align by index with
+/** Every `MERGE INTO snap.t` — the clause surface (`WHEN MATCHED [AND
+  * cond] THEN UPDATE/DELETE` × N in order, `WHEN NOT MATCHED [AND cond]
+  * THEN INSERT *` × N in order — collapsed to one OR-of-conditions insert
+  * leg, since every clause inserts the identical row — and `WHEN NOT
+  * MATCHED BY SOURCE [AND cond] THEN UPDATE/DELETE` × N in order) runs
+  * [[SnapshotTable.mergeIntoActions]]: first-match clause semantics,
+  * copy-on-write of only the in-scope dirs. Per-clause decorrelated
+  * subqueries: `matchedSubs`/`bySourceSubs` align by index with
   * `matched`/`bySource` when non-empty; `insertClausesSub` replaces
   * `insertCond` when non-empty (per-clause conditions re-collapse to
   * the OR at run time so each clause's EXISTS bit stays inside its own

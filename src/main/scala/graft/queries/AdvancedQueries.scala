@@ -3000,14 +3000,15 @@ object AdvancedQueries {
         .orderBy("o_orderpriority")
     },
 
-    // MERGE INTO the snapshot table (SnapshotTable.mergeInto — the upsert
-    // that completes the row-level op set): a source batch of updated
-    // low-date rows (an md5 slice repriorized to '9-MERGED') plus
-    // brand-new rows (shifted keys, '9-NEW') merges in ONE commit. The
+    // MERGE INTO the snapshot table (SnapshotTable.mergeIntoActions as
+    // the whole-row upsert: every non-key column from `s.<col>` plus
+    // INSERT *): a source batch of updated low-date rows (an md5 slice
+    // repriorized to '9-MERGED') plus brand-new rows (shifted keys,
+    // '9-NEW') merges in ONE commit. The
     // probe finds the matched keys confined to the lo dir, so exactly
-    // that dir rewrites (matched rows dropped, all source rows landing in
-    // the fresh dir) and the hi dir carries over by REFERENCE — O(affected
-    // dirs + source), the Delta/Iceberg merge shape at manifest
+    // that dir rewrites (matched rows updated, new source rows landing in
+    // the same fresh dir) and the hi dir carries over by REFERENCE —
+    // O(affected dirs + source), the Delta/Iceberg merge shape at manifest
     // granularity. Pins: the report (1 rewritten / 1 kept), the v2
     // manifest shape, and v1 time travel free of both marker priorities.
     // The oracle rebuilds the merged table from the base (CASE for the
@@ -3042,7 +3043,11 @@ object AdvancedQueries {
             col("o_orderdate") >= lit(cut))
           .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
           .withColumn("o_orderpriority", lit("9-NEW"))
-        val rep = ST.mergeInto(s, base, "o_orderkey", upd.unionByName(fresh))
+        val src = upd.unionByName(fresh)
+        val rep = ST.mergeIntoActions(s, base, "o_orderkey", src,
+          Seq(None -> ST.MatchedUpdate(src.columns.toSeq
+            .filterNot(_ == "o_orderkey").map(c => c -> col(s"s.`$c`")))),
+          insertUnmatched = true)
         require(rep == ST.RewriteReport(2, 1, 1),
           s"merge must rewrite exactly the hit dir, got $rep")
       }
@@ -4163,7 +4168,7 @@ object AdvancedQueries {
     // INSERT INTO → DELETE FROM (DSv2 SupportsDelete: merge-on-read key
     // file, O(matches)) → UPDATE (analyzer-rule rewrite to the
     // copy-on-write updateWhere) → MERGE INTO (upsert shape →
-    // mergeInto), then reads the final state back through SQL — which
+    // mergeIntoActions), then reads the final state back through SQL — which
     // exercises the masked-read rewrite too (the head carries delete
     // files, so the relation replans as scan minus broadcast anti join).
     // The oracle replays the whole chain from the base table, so a lost
@@ -4197,8 +4202,8 @@ object AdvancedQueries {
            |) AS src ON tgt.k = src.k
            |WHEN MATCHED THEN UPDATE SET *
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      // PARTIAL-COLUMN matched merge (SnapshotTable.mergeIntoWith via the
-      // same rule): matched rows COMPUTE the assigned column from both
+      // PARTIAL-COLUMN matched merge (SnapshotTable.mergeIntoActions via
+      // the same rule): matched rows COMPUTE the assigned column from both
       // sides (the CDC counter-upsert shape) while untouched columns keep
       // their stored values; unmatched source rows insert whole
       step(5,

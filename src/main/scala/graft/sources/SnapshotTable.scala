@@ -809,6 +809,40 @@ object SnapshotTable {
       .toSeq.sortBy(_._1)
   }
 
+  /** Every kind of rewrite staging dir, as [[stagingDir]] names it. */
+  private val stagingKinds =
+    Seq("delete", "compact", "update", "merge", "optimize", "zorder",
+      "copyin")
+
+  /** Staging kinds older writers used; [[sweepStagingOrphans]] still
+    * collects their orphans. */
+  private val retiredStagingKinds = Seq("mergew", "mergea")
+
+  /** A WRITER-UNIQUE staging dir `_<kind>_v<v>-<8 hex>` for a rewrite
+    * targeting version `v` — never a clobberable fixed path: the version
+    * claim is a point-in-time check, so a loser of the claim must not be
+    * able to delete (or overwrite) the winner's committed dir. A crashed
+    * attempt's orphan is what [[sweepStagingOrphans]] collects. */
+  private def stagingDir(base: String, kind: String,
+      v: Int): String = {
+    require(stagingKinds.contains(kind), s"unknown staging kind $kind")
+    s"$base/_${kind}_v$v-" + java.util.UUID.randomUUID().toString.take(8)
+  }
+
+  /** The optimistic version claim a rewrite makes before moving data:
+    * returns head+1, refusing when a concurrent committer already holds
+    * it. Point-in-time only — [[commit]]'s put-if-absent publish settles
+    * the race for good. */
+  private def claimNext(spark: SparkSession, base: String,
+      head: Int): Int = {
+    val v = head + 1
+    val mp = manifestPath(base, v)
+    require(!fsFor(spark, mp).exists(mp),
+      s"version $v is already committed under $base — a concurrent " +
+        "committer won the version claim; re-read the head and retry")
+    v
+  }
+
   /** Best-effort collection of CRASHED rewrite attempts' staging
     * orphans: writer-unique staging dirs (`_update_v7-ab12cd34` etc.)
     * whose target version is SETTLED (≤ head — the claim race is over,
@@ -834,8 +868,9 @@ object SnapshotTable {
       val m = manifest(spark, base, v)
       (m.dataDirs ++ m.deleteDirs).map(canon)
     }.toSet
-    val stagingRe =
-      """^_(delete|compact|update|merge|mergew|mergea|zorder|copyin)_v(\d+)(-[0-9a-f]{8})?$""".r
+    // the fixed `_optimize_v<v>[-p<i>]` names of older writers match too
+    val stagingRe = ("^_(" + (stagingKinds ++ retiredStagingKinds)
+      .mkString("|") + """)_v(\d+)(-[0-9a-f]{8}|-p\d+)?$""").r
     val b = new Path(base)
     val fs = fsFor(spark, b)
     val now = System.currentTimeMillis()
@@ -1563,16 +1598,8 @@ object SnapshotTable {
     val head = headVersion(spark, base)
     require(head >= 1, s"no committed snapshot under $base to delete from")
     val snap = manifest(spark, base, head)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
-    // writer-unique staging (never a clobberable fixed path): a loser
-    // of the version claim must not delete the winner's committed dir;
-    // crashed attempts leave vacuum-collectable orphans
-    val delDir = s"$base/_delete_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val v = claimNext(spark, base, head)
+    val delDir = stagingDir(base, "delete", v)
     matching(readVersion(spark, base, head, keyCol))
       .select(col(keyCol)).distinct()
       .write.parquet(delDir)
@@ -1616,11 +1643,7 @@ object SnapshotTable {
     val snap = manifest(spark, base, head)
     if (snap.deleteDirs.isEmpty)
       return CompactReport(head, 0, snap.dataDirs.size, 0)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
+    val v = claimNext(spark, base, head)
     val dels = spark.read.parquet(snap.deleteDirs: _*)
       .select(col(keyCol)).distinct()
     // one probe job over every dir's key column: which dirs hold >= 1
@@ -1628,29 +1651,12 @@ object SnapshotTable {
     val hit = probeHitDirs(spark, snap, head,
       _.join(broadcast(dels), Seq(keyCol), "left_semi"))
     val keep = snap.dataDirs.filterNot(hit)
-    // writer-unique staging — see deleteWhere's rationale
-    val compDir = s"$base/_compact_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val newData =
-      if (hit.isEmpty) snap.dataDirs // deletes matched nothing anywhere
-      else {
-        toPhysical(snap, readData(spark, snap, hit.toSeq.sorted)
-          .join(broadcast(dels), Seq(keyCol), "left_anti"))
-          .write.parquet(compDir)
-        keep :+ compDir
-      }
-    // kept dirs' rows are untouched, so their bounds stay exact; the
-    // compacted dir gets FRESH bounds over its (delete-masked) content
-    val kept = snap.bounds.filter(b => keep.contains(b.dir))
-    val rebound =
-      if (hit.isEmpty) Nil else reboundDir(spark, snap.bounds, compDir)
-    val (freshCs, freshRows) =
-      if (hit.isEmpty) (Nil, Map.empty[String, Long])
-      else recountDir(spark, snap, compDir)
-    commit(spark, base, v,
-      snap.copy(dataDirs = newData, deleteDirs = Nil,
-        bounds = kept ++ rebound, colStats = snap.colStats ++ freshCs,
-        rowCounts = snap.rowCounts ++ freshRows))
+    val folded = snap.copy(deleteDirs = Nil)
+    if (hit.isEmpty) commit(spark, base, v, folded) // deletes matched nothing
+    else commitRewrite(spark, base, v, folded, keep,
+      Seq(stagingDir(base, "compact", v) ->
+        readData(spark, snap, hit.toSeq.sorted)
+          .join(broadcast(dels), Seq(keyCol), "left_anti")))
     CompactReport(v, hit.size, keep.size, snap.deleteDirs.size)
   }
 
@@ -1683,27 +1689,6 @@ object SnapshotTable {
   final case class RewriteReport(version: Int, dirsRewritten: Int,
       dirsKept: Int)
 
-  /** Fresh bounds for a REWRITTEN dir, one entry per stats column the
-    * incoming manifest tracked: the rewrite already paid a full scan +
-    * write of this dir, so a min/max over each tracked column is a
-    * marginal column-pruned read of the ONE new dir — without this,
-    * every compact/update/merge would permanently degrade its hit dirs
-    * to always-scanned and manifest pruning would decay as the table
-    * ages. A column the rewrite made un-encodable (dropped, or an
-    * unsupported type after a SET) contributes NO entry for this dir —
-    * always scanned, the safe direction and the pre-rebound behavior. */
-  /** Fresh-dir COLUMN STATS + ROW COUNT for a rewrite commit — the
-    * [[reboundDir]] idea for the colstats/rows lists: recompute
-    * (exact ndv, nulls) for every column the PRIOR manifest fully
-    * covered, and the row count when the prior manifest was fully
-    * counted, so stats-driven planning (CBO sizing, metadata COUNT,
-    * manifest-answered aggregates) SURVIVES routine DML instead of
-    * silently decaying until the next ANALYZE. Stats-less tables pay
-    * NOTHING (no tracked columns, no full count → no extra scan); a
-    * stats-bearing table pays one dir-local aggregate per rewrite —
-    * write-batch-sized, the same bill reboundDir already pays. Columns
-    * physically absent from the fresh dir (evolution edges) drop out,
-    * which only un-covers them — the safe direction. */
   /** ONE combined aggregate over `dir`: row count plus, per wanted
     * column physically present, (exact ndv, null count, and — for
     * int/long/string columns — a mergeable HLL sketch, lgK=12). The
@@ -1743,6 +1728,18 @@ object SnapshotTable {
     (rows, cs)
   }
 
+  /** Fresh-dir COLUMN STATS + ROW COUNT for a rewrite commit — the
+    * [[reboundDir]] idea for the colstats/rows lists: recompute
+    * (exact ndv, nulls) for every column the PRIOR manifest fully
+    * covered, and the row count when the prior manifest was fully
+    * counted, so stats-driven planning (CBO sizing, metadata COUNT,
+    * manifest-answered aggregates) SURVIVES routine DML instead of
+    * silently decaying until the next ANALYZE. Stats-less tables pay
+    * NOTHING (no tracked columns, no full count → no extra scan); a
+    * stats-bearing table pays one dir-local aggregate per rewrite —
+    * write-batch-sized, the same bill reboundDir already pays. Columns
+    * physically absent from the fresh dir (evolution edges) drop out,
+    * which only un-covers them — the safe direction. */
   private def recountDir(spark: SparkSession, prior: Snapshot,
       dir: String): (Seq[ColStats], Map[String, Long]) = {
     val tracked = manifestColumnStats(prior).keys.toSeq.sorted
@@ -1753,6 +1750,15 @@ object SnapshotTable {
     (cs, if (doRows) Map(dir -> rows) else Map.empty)
   }
 
+  /** Fresh bounds for a REWRITTEN dir, one entry per stats column the
+    * incoming manifest tracked: the rewrite already paid a full scan +
+    * write of this dir, so a min/max over each tracked column is a
+    * marginal column-pruned read of the ONE new dir — without this,
+    * every compact/update/merge would permanently degrade its hit dirs
+    * to always-scanned and manifest pruning would decay as the table
+    * ages. A column the rewrite made un-encodable (dropped, or an
+    * unsupported type after a SET) contributes NO entry for this dir —
+    * always scanned, the safe direction and the pre-rebound behavior. */
   private def reboundDir(spark: SparkSession, prior: Seq[DirBounds],
       dir: String): Seq[DirBounds] = {
     val cols = prior.map(_.col).distinct
@@ -1764,6 +1770,28 @@ object SnapshotTable {
         try computeBounds(spark, Seq(dir), c)
         catch { case _: IllegalArgumentException => Nil }
     }
+  }
+
+  /** The copy-on-write epilogue every dir-granular rewrite shares: each
+    * `fresh` frame lands in its own fresh dir at the table's physical
+    * names, and `v` commits `snap` with those dirs appended to `keep`
+    * (the dirs carried by reference). Kept dirs keep their bounds —
+    * their rows are untouched; fresh dirs get FRESH bounds, column stats
+    * and row counts ([[reboundDir]]/[[recountDir]]: their content is
+    * new, so recompute, never carry). */
+  private def commitRewrite(spark: SparkSession, base: String, v: Int,
+      snap: Snapshot, keep: Seq[String],
+      fresh: Seq[(String, DataFrame)]): Unit = {
+    val stats = fresh.map { case (dir, rows) =>
+      toPhysical(snap, rows).write.parquet(dir)
+      recountDir(spark, snap, dir)
+    }
+    val dirs = fresh.map(_._1)
+    commit(spark, base, v, snap.copy(dataDirs = keep ++ dirs,
+      bounds = snap.bounds.filter(b => keep.contains(b.dir)) ++
+        dirs.flatMap(reboundDir(spark, snap.bounds, _)),
+      colStats = snap.colStats ++ stats.flatMap(_._1),
+      rowCounts = snap.rowCounts ++ stats.flatMap(_._2)))
   }
 
   /** Row-level `UPDATE WHERE` — COPY-ON-WRITE of only the dirs holding a
@@ -1801,11 +1829,7 @@ object SnapshotTable {
     val head = headVersion(spark, base)
     require(head >= 1, s"no committed snapshot under $base to update")
     val snap = manifest(spark, base, head)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
+    val v = claimNext(spark, base, head)
     val fieldNames = tableSchema(spark, snap).fieldNames
     val cols = fieldNames.toSet
     val missing = sets.map(_._1).filterNot(cols)
@@ -1842,12 +1866,9 @@ object SnapshotTable {
       df => marked(df).where(predicate))
     if (hit.isEmpty) return RewriteReport(head, 0, snap.dataDirs.size)
     val keep = snap.dataDirs.filterNot(hit)
-    // writer-unique staging — see deleteWhere's rationale
-    val updDir = s"$base/_update_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
     // SQL UPDATE semantics: EVERY assignment and the predicate evaluate
     // against the OLD row — one simultaneous select over the original
-    // frame (the mergeIntoWith discipline), never a sequential
+    // frame (the MERGE discipline too), never a sequential
     // withColumn fold where `SET a = b, b = a` fails to swap and a later
     // SET sees an earlier SET's result through the re-evaluated WHERE
     val setMap = sets.toMap
@@ -1857,170 +1878,10 @@ object SnapshotTable {
         .map(e => when(predicate, e).otherwise(col(c)))
         .getOrElse(col(c)).as(c)
     }: _*)
-    val updChecked = enforceChecks(spark, snap, updated, "UPDATE")
-    toPhysical(snap, updChecked).write.parquet(updDir)
-    // kept dirs keep their bounds; the rewritten dir gets FRESH bounds
-    // (a SET may have moved the stats column — recompute, don't carry)
-    val (updCs, updRows) = recountDir(spark, snap, updDir)
-    commit(spark, base, v, snap.copy(dataDirs = keep :+ updDir,
-      bounds = snap.bounds.filter(b => keep.contains(b.dir))
-        ++ reboundDir(spark, snap.bounds, updDir),
-      colStats = snap.colStats ++ updCs,
-      rowCounts = snap.rowCounts ++ updRows))
-    RewriteReport(v, hit.size, keep.size)
-  }
-
-  /** MERGE INTO (upsert): source rows REPLACE same-key stored rows and
-    * append as new rows otherwise — the Delta/Iceberg merge shape at this
-    * table's dir-level granularity, COPY-ON-WRITE like [[updateWhere]]:
-    * the probe finds the dirs holding a matched key, their rows rewrite
-    * with the matched ones dropped, and ALL source rows land in the same
-    * fresh dir; unhit dirs carry over by reference and the delete set is
-    * UNCHANGED. Cost is O(affected dirs + source) — a merge whose keys
-    * cluster in one ingest day rewrites that day's dirs only; a merge
-    * matching nothing is a pure append (no rewrite at all).
-    *
-    * Semantics under the table's key-granular deletes: a source row whose
-    * key an EXISTING delete file masks stays masked (the erase-cascade
-    * contract — a merged-in row cannot resurrect an erased key; fold the
-    * deletes with [[compact]] first if re-insertion is intended).
-    * Duplicate keys WITHIN the source are refused — which copy wins would
-    * be arbitrary. The source must carry exactly the stored schema
-    * (merge never widens it), and is evaluated more than once (probe +
-    * rewrite) — localCheckpoint nondeterministic sources first. */
-  def mergeInto(spark: SparkSession, base: String, keyCol: String,
-      source: DataFrame): RewriteReport = {
-    val head = headVersion(spark, base)
-    require(head >= 1, s"no committed snapshot under $base to merge into")
-    val snap = manifest(spark, base, head)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
-    val stored = tableSchema(spark, snap).fieldNames
-    require(source.columns.sorted.toSeq == stored.sorted.toSeq,
-      s"merge source schema ${source.columns.toSeq.sorted} must equal " +
-        s"the stored schema ${stored.sorted.toSeq}")
-    val srcKeys = source.select(col(keyCol)).distinct()
-    val dup = source.groupBy(col(keyCol))
-      .count().where(col("count") > 1).limit(1).count()
-    require(dup == 0,
-      s"merge source holds duplicate $keyCol values — which copy wins " +
-        "would be arbitrary; dedupe the source first")
-    val hit = probeHitDirs(spark, snap, head,
-      _.join(broadcast(srcKeys), Seq(keyCol), "left_semi"))
-    val keep = snap.dataDirs.filterNot(hit)
-    // writer-unique staging — see deleteWhere's rationale
-    val mergeDir = s"$base/_merge_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    // align NAMES and TYPES to the stored schema: an int-typed source
-    // against a bigint column would otherwise land a mixed-schema dir
-    val aligned = source.select(tableSchema(spark, snap).fields
-      .toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    val merged =
-      if (hit.isEmpty) aligned
-      else readData(spark, snap, hit.toSeq.sorted)
-        .join(broadcast(srcKeys), Seq(keyCol), "left_anti")
-        .unionByName(aligned)
-    val mrgChecked = enforceChecks(spark, snap, merged, "MERGE")
-    toPhysical(snap, mrgChecked).write.parquet(mergeDir)
-    // kept dirs keep their bounds; the merge dir gets FRESH bounds
-    // (source rows' range is arbitrary — recompute, don't carry)
-    val (mrgCs, mrgRows) = recountDir(spark, snap, mergeDir)
-    commit(spark, base, v, snap.copy(dataDirs = keep :+ mergeDir,
-      bounds = snap.bounds.filter(b => keep.contains(b.dir))
-        ++ reboundDir(spark, snap.bounds, mergeDir),
-      colStats = snap.colStats ++ mrgCs,
-      rowCounts = snap.rowCounts ++ mrgRows))
-    RewriteReport(v, hit.size, keep.size)
-  }
-
-  /** MERGE INTO with PER-COLUMN matched-row assignments — the
-    * CDC-counter upsert shape ([[mergeInto]] replaces whole rows; this
-    * form computes each assigned column from BOTH sides): matched stored
-    * rows rewrite with every `sets` entry applied (expressions reference
-    * the stored row as `t.<col>` and the source row as `s.<col>` —
-    * qualified against the internal join aliases), unmatched source rows
-    * append whole (INSERT *), and everything else is [[mergeInto]]'s
-    * contract verbatim: copy-on-write of only the hit dirs, source
-    * schema must equal the stored schema, duplicate source keys refuse,
-    * delete-masked keys stay masked (their rows may rewrite but remain
-    * invisible — the erase cascade), and the source evaluates more than
-    * once. Assigning the key column is refused — it would silently
-    * re-key rows past the probe. */
-  def mergeIntoWith(spark: SparkSession, base: String, keyCol: String,
-      source: DataFrame,
-      sets: Seq[(String, org.apache.spark.sql.Column)]): RewriteReport = {
-    val head = headVersion(spark, base)
-    require(head >= 1, s"no committed snapshot under $base to merge into")
-    val snap = manifest(spark, base, head)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
-    val stored = tableSchema(spark, snap).fieldNames
-    require(source.columns.sorted.toSeq == stored.sorted.toSeq,
-      s"merge source schema ${source.columns.toSeq.sorted} must equal " +
-        s"the stored schema ${stored.sorted.toSeq}")
-    require(sets.nonEmpty, "mergeIntoWith needs at least one assignment " +
-      "— whole-row replacement is mergeInto")
-    val setMap = sets.toMap
-    require(!setMap.contains(keyCol),
-      s"assigning the key column $keyCol in a merge is refused — it " +
-        "would silently re-key rows past the match probe")
-    val unknown = sets.map(_._1).filterNot(stored.contains)
-    require(unknown.isEmpty,
-      s"merge SET names columns absent from the data: $unknown")
-    val srcKeys = source.select(col(keyCol)).distinct()
-    val dup = source.groupBy(col(keyCol))
-      .count().where(col("count") > 1).limit(1).count()
-    require(dup == 0,
-      s"merge source holds duplicate $keyCol values — which copy wins " +
-        "would be arbitrary; dedupe the source first")
-    val hit = probeHitDirs(spark, snap, head,
-      _.join(broadcast(srcKeys), Seq(keyCol), "left_semi"))
-    val keep = snap.dataDirs.filterNot(hit)
-    // writer-unique staging — see deleteWhere's rationale
-    val mergeDir = s"$base/_mergew_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    // align NAMES and TYPES to the stored schema (see mergeInto)
-    val aligned = source.select(tableSchema(spark, snap).fields
-      .toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    val merged =
-      if (hit.isEmpty) aligned // nothing matched anywhere: pure append
-      else {
-        // inserts: source keys absent from the RAW stored rows. The HIT
-        // dirs' keys suffice — the probe marked every dir holding a
-        // source key, so no source key lives in a kept dir — keeping
-        // the cost at O(affected dirs), never a table key scan. (A
-        // masked key's source row is matched — and stays masked.)
-        val inserts = aligned.join(
-          readData(spark, snap, hit.toSeq.sorted)
-            .select(col(keyCol)).distinct(),
-          Seq(keyCol), "left_anti")
-        val matchedFlag = col(s"s.$keyCol").isNotNull
-        val updated = readData(spark, snap, hit.toSeq.sorted).alias("t")
-          .join(broadcast(aligned.alias("s")),
-            col(s"t.$keyCol") === col(s"s.$keyCol"), "left")
-          .select(stored.toIndexedSeq.map { c =>
-            setMap.get(c) match {
-              case Some(e) =>
-                when(matchedFlag, e).otherwise(col(s"t.$c")).as(c)
-              case None => col(s"t.$c").as(c)
-            }
-          }: _*)
-        updated.unionByName(inserts)
-      }
-    val mrgChecked = enforceChecks(spark, snap, merged, "MERGE")
-    toPhysical(snap, mrgChecked).write.parquet(mergeDir)
-    val (mrgCs, mrgRows) = recountDir(spark, snap, mergeDir)
-    commit(spark, base, v, snap.copy(dataDirs = keep :+ mergeDir,
-      bounds = snap.bounds.filter(b => keep.contains(b.dir))
-        ++ reboundDir(spark, snap.bounds, mergeDir),
-      colStats = snap.colStats ++ mrgCs,
-      rowCounts = snap.rowCounts ++ mrgRows))
+    // a SET may have moved the stats column: the fresh dir's bounds
+    // recompute inside commitRewrite
+    commitRewrite(spark, base, v, snap, keep, Seq(stagingDir(base,
+      "update", v) -> enforceChecks(spark, snap, updated, "UPDATE")))
     RewriteReport(v, hit.size, keep.size)
   }
 
@@ -2041,16 +1902,20 @@ object SnapshotTable {
   final case class MergeSemiMarker(marker: String, targetSide: Boolean,
       attr: String, values: DataFrame)
 
-  /** GENERALIZED MERGE — the full Delta/Iceberg CDC clause surface over
-    * this table's dir-level copy-on-write mechanics:
+  /** MERGE INTO — the full Delta/Iceberg CDC clause surface over this
+    * table's dir-level copy-on-write mechanics, and the table's only
+    * MERGE implementation. The whole-row upsert is one matched UPDATE
+    * assigning every non-key column from `s.<col>`, plus
+    * `insertUnmatched`: source rows replace same-key stored rows and
+    * append otherwise.
     *
     *   - `matched`: ordered `WHEN MATCHED [AND cond] THEN UPDATE/DELETE`
     *     clauses. SQL first-match semantics: per matched row the FIRST
     *     clause whose condition holds (a NULL condition does not hold)
     *     applies; no clause applying keeps the row unchanged. Conditions
     *     and update expressions see the stored row as `t.<col>` and the
-    *     source row as `s.<col>` (the [[mergeIntoWith]] alias contract),
-    *     all evaluated against the OLD row simultaneously.
+    *     source row as `s.<col>` (the internal join aliases), all
+    *     evaluated against the OLD row simultaneously.
     *   - `insertUnmatched`: `WHEN NOT MATCHED THEN INSERT *` — source
     *     rows whose key is absent from the stored rows append whole.
     *     `insertCond` narrows it (`WHEN NOT MATCHED AND cond THEN
@@ -2072,13 +1937,20 @@ object SnapshotTable {
     *     rewrites the whole table — that is what the clause MEANS (use
     *     it at 100 TB only with a narrowing condition).
     *
-    * Everything else is [[mergeInto]]'s contract: copy-on-write of only
-    * the in-scope dirs, duplicate source keys refuse, delete-masked keys
-    * stay masked (the erase cascade — a matched-DELETE of a masked key
-    * is a no-op on visibility, and the delete FILES are untouched), the
-    * source evaluates more than once, assigning the key column refuses.
-    * With `insertUnmatched` the source must carry exactly the stored
-    * schema; matched/by-source-only merges need only the key column. */
+    * Copy-on-write of only the in-scope dirs: the probe finds the dirs
+    * holding a matched key, those rewrite into one fresh dir together
+    * with the inserted rows, unhit dirs carry over by reference and the
+    * delete set is UNCHANGED — O(affected dirs + source); a merge
+    * matching nothing is a pure append. Duplicate source keys refuse
+    * (which copy wins would be arbitrary). Delete-masked keys stay masked
+    * (the erase cascade — a merged-in row cannot resurrect an erased
+    * key, and a matched-DELETE of a masked key is a no-op on visibility;
+    * fold the deletes with [[compact]] first if re-insertion is
+    * intended). The source evaluates more than once (probe + rewrite) —
+    * localCheckpoint nondeterministic sources first. Assigning the key
+    * column refuses. With `insertUnmatched` the source must carry
+    * exactly the stored schema (merge never widens it); matched/by-source-
+    * only merges need only the key column. */
   def mergeIntoActions(spark: SparkSession, base: String, keyCol: String,
       source: DataFrame,
       matched: Seq[(Option[org.apache.spark.sql.Column], MatchedAction)],
@@ -2091,11 +1963,7 @@ object SnapshotTable {
     val head = headVersion(spark, base)
     require(head >= 1, s"no committed snapshot under $base to merge into")
     val snap = manifest(spark, base, head)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
+    val v = claimNext(spark, base, head)
     require(matched.nonEmpty || insertUnmatched || bySource.nonEmpty,
       "mergeIntoActions needs at least one clause")
     val target = tableSchema(spark, snap)
@@ -2119,6 +1987,8 @@ object SnapshotTable {
         s"merge SET names columns absent from the data: $unknown")
     }
     val keyType = target(target.fieldIndex(keyCol)).dataType
+    // align NAMES and TYPES to the stored schema: an int-typed source
+    // against a bigint column would otherwise land a mixed-schema dir
     val aligned =
       if (insertUnmatched)
         source.select(target.fields.toIndexedSeq
@@ -2183,13 +2053,6 @@ object SnapshotTable {
     val keep = snap.dataDirs.filterNot(rewrite)
     if (rewrite.isEmpty && !insertUnmatched)
       return RewriteReport(head, 0, snap.dataDirs.size)
-    // WRITER-UNIQUE staging (the repo rule: never a clobberable fixed
-    // path): the version-claim require above is a point-in-time check —
-    // a concurrent merger that loses the claim AFTER this writer commits
-    // must not be able to delete the committed dir out from under
-    // readers. A crashed attempt's orphan dir is vacuum-collectable.
-    val mergeDir = s"$base/_mergea_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
     val rewritten: Option[DataFrame] =
       if (rewrite.isEmpty) None
       else {
@@ -2252,6 +2115,11 @@ object SnapshotTable {
           }.as(c)
         }: _*))
       }
+    // inserts: source keys absent from the RAW stored rows. The matched
+    // probe's hit dirs' keys suffice — it marked every dir holding a
+    // source key, so no source key lives in another dir — keeping the
+    // cost at O(affected dirs), never a table key scan (a masked key's
+    // source row is matched, and stays masked).
     // conditional insert: filter the SOURCE side before the anti-join
     // (cheaper — the probe against stored keys sees fewer rows, and the
     // condition references source columns only, so order is free)
@@ -2272,14 +2140,8 @@ object SnapshotTable {
       case (None, Some(i)) => i
       case (None, None) => throw new IllegalStateException("unreachable")
     }
-    val mrgChecked = enforceChecks(spark, snap, merged, "MERGE")
-    toPhysical(snap, mrgChecked).write.parquet(mergeDir)
-    val (mrgCs, mrgRows) = recountDir(spark, snap, mergeDir)
-    commit(spark, base, v, snap.copy(dataDirs = keep :+ mergeDir,
-      bounds = snap.bounds.filter(b => keep.contains(b.dir))
-        ++ reboundDir(spark, snap.bounds, mergeDir),
-      colStats = snap.colStats ++ mrgCs,
-      rowCounts = snap.rowCounts ++ mrgRows))
+    commitRewrite(spark, base, v, snap, keep, Seq(stagingDir(base,
+      "merge", v) -> enforceChecks(spark, snap, merged, "MERGE")))
     RewriteReport(v, rewrite.size, keep.size)
   }
 
@@ -2519,8 +2381,7 @@ object SnapshotTable {
       if (stagedKey !=
           ((fresh, snap.renames, (snap.writeOrder, snap.writeOrderSlices)))) {
         dropStaged()
-        stagedDir = s"$base/_copyin_v${head + 1}-" +
-          java.util.UUID.randomUUID().toString.take(8)
+        stagedDir = stagingDir(base, "copyin", head + 1)
         val target = tableSchema(spark, snap)
         // align by NAME with casts: a landing file missing a table
         // column fails the analysis loudly (COPY INTO never guesses)
@@ -2734,46 +2595,28 @@ object SnapshotTable {
         .filter(_._2.size >= 2)
         .sortBy(_._2.head)
     if (groups.isEmpty) return OptimizeReport(head, 0, snap.dataDirs.size)
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
+    val v = claimNext(spark, base, head)
     val packedAway = groups.flatMap(_._2)
     val keep = snap.dataDirs.filterNot(packedAway.contains)
-    val packs = groups.zipWithIndex.map { case (((tuple, specId), dirs), i) =>
-      val packDir =
-        if (groups.size == 1 && tuple.isEmpty) s"$base/_optimize_v$v"
-        else s"$base/_optimize_v$v-p$i"
-      val pp = new Path(packDir)
-      val pfs = fsFor(spark, pp)
-      // leavings of a crashed prior attempt at THIS version: safe to
-      // clear, since the guard above proved no manifest references it
-      if (pfs.exists(pp)) pfs.delete(pp, true)
+    val packs = groups.map { case ((tuple, specId), dirs) =>
       // coalesce toward the target: N small dirs should yield
       // ~ceil(bytes / target) output files, not N again
       val groupBytes = dirs.map(d => fsFor(spark, new Path(d))
         .getContentSummary(new Path(d)).getLength).sum
       val outFiles =
         math.max(1L, (groupBytes + targetBytes - 1) / targetBytes)
-      toPhysical(snap, readData(spark, snap, dirs))
-        .coalesce(math.min(outFiles, Int.MaxValue.toLong).toInt)
-        .write.parquet(packDir)
-      val (packCs, packRows) = recountDir(spark, snap, packDir)
-      (packDir, tuple, specId, packCs, packRows)
+      (stagingDir(base, "optimize", v), tuple, specId,
+        readData(spark, snap, dirs)
+          .coalesce(math.min(outFiles, Int.MaxValue.toLong).toInt))
     }
-    commit(spark, base, v, snap.copy(
-      dataDirs = keep ++ packs.map(_._1),
-      bounds = snap.bounds.filter(b => keep.contains(b.dir))
-        ++ packs.flatMap(p => reboundDir(spark, snap.bounds, p._1)),
-      colStats = snap.colStats ++ packs.flatMap(_._4),
-      rowCounts = snap.rowCounts ++ packs.flatMap(_._5),
+    commitRewrite(spark, base, v, snap.copy(
       // packed dirs INHERIT their group's tuple AND its spec pin —
       // maintenance must never cost the table its structural pruning
       partVals = snap.partVals ++ packs.collect {
-        case (d, Some(t), _, _, _) => d -> t },
+        case (d, Some(t), _, _) => d -> t },
       dirSpecIds = snap.dirSpecIds ++ packs.collect {
-        case (d, Some(_), id, _, _) if id != snap.partSpecId => d -> id }))
+        case (d, Some(_), id, _) if id != snap.partSpecId => d -> id }),
+      keep, packs.map(p => p._1 -> p._4))
     OptimizeReport(v, packedAway.size, keep.size)
   }
 
@@ -2823,17 +2666,12 @@ object SnapshotTable {
       require(!cur.fieldNames.contains(c),
         s"schema already carries the staging column $c — refuse rather " +
           "than silently clobber it")
-    val v = head + 1
-    val mp = manifestPath(base, v)
-    require(!fsFor(spark, mp).exists(mp),
-      s"version $v is already committed under $base — a concurrent " +
-        "committer won the version claim; re-read the head and retry")
+    val v = claimNext(spark, base, head)
     // WRITER-UNIQUE staging: a concurrent optimizer (or a racing replay)
     // must never clobber this writer's in-progress slices — the version
     // claim in commit() arbitrates the winner; a loser's (or a crash's)
     // staging dir is unreferenced garbage, never a live manifest's data
-    val outParent = s"$base/_zorder_v$v-" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val outParent = stagingDir(base, "zorder", v)
     val op = new Path(outParent)
     val ofs = fsFor(spark, op)
     val data = applyDeletes(spark, snap,
@@ -2923,7 +2761,7 @@ object SnapshotTable {
     * table rewrite (the only viable evolution story at 100 TB). Dirs
     * written before the evolution read as typed NULLs for the new
     * columns; dirs appended after it may carry them; rewrites
-    * ([[compact]]/[[updateWhere]]/[[mergeInto]]) normalize their
+    * ([[compact]]/[[updateWhere]]/[[mergeIntoActions]]) normalize their
     * rewritten dir to the current schema, so evolution debt folds away
     * incrementally with ordinary maintenance. Time travel is
     * SCHEMA-VERSIONED: [[readVersion]] of a pre-evolution version sees

@@ -300,6 +300,19 @@ class SnapshotCatalogSpec extends SparkTestBase {
         "WHEN NOT MATCHED THEN INSERT *")
     }
     assert(e.getMessage.contains("key"), e.getMessage)
+    // an upsert whose only assignment is an identity: matched rows stay
+    // unchanged, unmatched source rows insert, the masked key stays
+    // masked
+    spark.sql("CREATE TABLE snapmw1.src2 AS SELECT * FROM VALUES " +
+      "(1,'X',1), (3,'Y',3), (5,'new',500) AS s(k, v, n)")
+    spark.sql("MERGE INTO snapmw1.t AS t USING snapmw1.src2 AS s " +
+      "ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET n = t.n " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    val rows2 = spark.sql("SELECT k, v, n FROM snapmw1.t ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(rows2.toSeq == Seq((1L, "a", 110L), (2L, "b", 20L),
+      (5L, "new", 500L), (9L, "z", 900L)), rows2.toSeq.toString)
   }
 
   test("generalized MERGE: conditional matched UPDATE/DELETE in clause " +

@@ -13,6 +13,16 @@ import graft.sources.SnapshotTable.Snapshot
   * the previous version as the readable head. */
 class SnapshotTableSpec extends SparkTestBase {
 
+  /** The whole-row upsert through the one MERGE path: every non-key
+    * source column replaces the stored one on a matched key, and
+    * unmatched source rows insert whole. */
+  private def upsert(base: String,
+      src: org.apache.spark.sql.DataFrame): SnapshotTable.RewriteReport =
+    SnapshotTable.mergeIntoActions(spark, base, "k", src,
+      Seq(None -> SnapshotTable.MatchedUpdate(src.columns.toSeq
+        .filterNot(_ == "k").map(c => c -> col(s"s.$c")))),
+      insertUnmatched = true)
+
   private def freshBase(): String =
     Files.createTempDirectory("snaptab").toString
 
@@ -296,7 +306,7 @@ class SnapshotTableSpec extends SparkTestBase {
       .map(f => f.getName -> f.lastModified()).toMap
     // keys 1,3 exist (in d1); 40,41 are new
     val src = Seq((1, 101), (3, 103), (40, 140), (41, 141)).toDF("k", "v")
-    val rep = SnapshotTable.mergeInto(spark, base, "k", src)
+    val rep = upsert(base, src)
     assert(rep == SnapshotTable.RewriteReport(2, 1, 1), rep.toString)
     val snap = SnapshotTable.manifest(spark, base, 2)
     assert(snap.dataDirs.toSet
@@ -323,7 +333,7 @@ class SnapshotTableSpec extends SparkTestBase {
     writeKv(s"$base/d1", 0, 10)
     SnapshotTable.commit(spark, base, 1, Snapshot(Seq(s"$base/d1"), Nil))
     // pure append: no rewrite, and the window stays CDF-expressible
-    val rep = SnapshotTable.mergeInto(spark, base, "k",
+    val rep = upsert(base,
       Seq((30, 130), (31, 131)).toDF("k", "v"))
     assert(rep == SnapshotTable.RewriteReport(2, 0, 1), rep.toString)
     assert(SnapshotTable.readChanges(spark, base, 1, 2, "k")
@@ -333,19 +343,19 @@ class SnapshotTableSpec extends SparkTestBase {
       "a pure-append merge must be readable as a change window")
     // duplicate keys within the source: refused
     val e = intercept[IllegalArgumentException] {
-      SnapshotTable.mergeInto(spark, base, "k",
+      upsert(base,
         Seq((7, 1), (7, 2)).toDF("k", "v"))
     }
     assert(e.getMessage.contains("duplicate"), e.getMessage)
     // schema drift: refused
     val e2 = intercept[IllegalArgumentException] {
-      SnapshotTable.mergeInto(spark, base, "k",
+      upsert(base,
         Seq((7, 1, "x")).toDF("k", "v", "extra"))
     }
     assert(e2.getMessage.contains("schema"), e2.getMessage)
     // an erased key stays erased: merge cannot resurrect it
     assert(SnapshotTable.deleteWhere(spark, base, "k", col("k") === 4) == 3)
-    val rep2 = SnapshotTable.mergeInto(spark, base, "k",
+    val rep2 = upsert(base,
       Seq((4, 999)).toDF("k", "v"))
     assert(rep2.version == 4 && rep2.dirsRewritten == 1)
     val head = SnapshotTable.readVersion(spark, base, 4, "k")
@@ -700,7 +710,7 @@ class SnapshotTableSpec extends SparkTestBase {
       "k", "k", "0", "5")
     assert(rep == SnapshotTable.PruneReport(1, 2), rep.toString)
     // merge matching d2: the merge dir's fresh bounds span stored ∪ source
-    SnapshotTable.mergeInto(spark, base, "k", Seq((12, 112)).toDF("k", "v"))
+    upsert(base, Seq((12, 112)).toDF("k", "v"))
     val b4 = SnapshotTable.manifest(spark, base, 4).bounds
     val mrg4 = b4.filter(_.dir.contains("_merge_"))
     assert(b4.size == 2 &&
@@ -780,7 +790,7 @@ class SnapshotTableSpec extends SparkTestBase {
       SnapshotTable.evolveAddColumns(spark, base, "")
     }
     intercept[IllegalArgumentException] {
-      SnapshotTable.mergeInto(spark, base, "k",
+      upsert(base,
         Seq((1, 1)).toDF("k", "v"))
     }
   }
@@ -839,6 +849,12 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(SnapshotTable.sweepStagingOrphans(spark, base, 0L) == 1)
     assert(!new java.io.File(s"$base/_update_v2-deadbeef").exists,
       "the settled orphan must be swept")
+    // an OPTIMIZE loser's orphan is a staging dir like any other
+    (0 until 3).map(i => (i, i)).toDF("k", "v")
+      .write.parquet(s"$base/_optimize_v2-0badf00d")
+    assert(SnapshotTable.sweepStagingOrphans(spark, base, 0L) == 1)
+    assert(!new java.io.File(s"$base/_optimize_v2-0badf00d").exists,
+      "an unreferenced, idle optimize staging dir must be swept")
     assert(new java.io.File(s"$base/_compact_v3-cafe0123").exists,
       "an in-flight (head+1) staging dir must survive")
     assert(new java.io.File(live).exists,
@@ -966,7 +982,8 @@ class SnapshotTableSpec extends SparkTestBase {
     val rep = SnapshotTable.optimizeSmallDirs(spark, base, bigLen)
     assert(rep == SnapshotTable.OptimizeReport(3, 3, 1), rep.toString)
     val s3m = SnapshotTable.manifest(spark, base, 3)
-    assert(s3m.dataDirs.toSet ==
+    assert(s3m.dataDirs.toSet
+      .map((d: String) => d.replaceAll("-[0-9a-f]{8}$", "")) ==
       Set(s"$base/big", s"$base/_optimize_v3"), s3m.dataDirs.toString)
     assert(s3m.deleteDirs.nonEmpty,
       "packing must carry the delete set — masked keys stay masked")
@@ -976,7 +993,8 @@ class SnapshotTableSpec extends SparkTestBase {
       head.where(col("k") === 5005).isEmpty)
     // the packed dir got FRESH bounds spanning the small dirs' range,
     // so pruning still engages on the optimized table
-    val packed = s3m.bounds.filter(_.dir == s"$base/_optimize_v3")
+    val packed = s3m.bounds.filter(
+      _.dir.replaceAll("-[0-9a-f]{8}$", "") == s"$base/_optimize_v3")
     assert(packed.map(b => (b.min, b.max)) == Seq(("5000", "5029")),
       s3m.bounds.toString)
     assert(SnapshotTable.readVersionPruned(spark, base, 3,
